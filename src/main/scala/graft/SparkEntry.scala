@@ -216,31 +216,31 @@ object SparkEntry {
     // Snapshot/manifest surface gate (commit, O(delta) append, stats
     // pruning, file-level merge, partitioned chain — built in a temp
     // dir, reduced to constants the oracle states literally).
-    "q40_snapshot_append" -> (graft.sources.Versioned.snapshotGate _),
+    "q40_snapshot_append" -> (graft.gates.VersionedGates.snapshotGate _),
     // SQL time travel: per-version views (VERSION AS OF analog), one
     // multi-version spark.sql with a cross-version join + NOT IN.
     "q41_sql_time_travel" ->
-      (graft.sources.Versioned.sqlTimeTravelGate _),
+      (graft.gates.VersionedGates.sqlTimeTravelGate _),
     // SQL row-level DML: DELETE/UPDATE/MERGE lowered onto the snapshot
     // engine (RowLevelDmlRule), scripted and reduced to constants.
-    "q42_sql_dml" -> (graft.sources.Versioned.sqlDmlGate _),
+    "q42_sql_dml" -> (graft.gates.VersionedGates.sqlDmlGate _),
     // SQL schema evolution: metadata-only ALTER TABLE ADD/DROP/RENAME
     // COLUMN through the catalog, constants-reduced.
     "q43_schema_evolution" ->
-      (graft.sources.Versioned.schemaEvolutionGate _),
+      (graft.gates.VersionedGates.schemaEvolutionGate _),
     // Incremental changelog (readChanges): its own gate since r10 so
     // per-gate bench wall time stays attributable (was q40's chg_*).
-    "q44_changelog" -> (graft.sources.Versioned.changelogGate _),
+    "q44_changelog" -> (graft.gates.VersionedGates.changelogGate _),
     // DDL-declared partitioning (CREATE TABLE ... PARTITIONED BY, the
     // reference's csv_to_ice.py:54 shape), default-spec inheritance
     // on INSERT, set_spec evolution, .partitions metadata table.
     "q45_ddl_partitioning" ->
-      (graft.sources.Versioned.ddlPartitionGate _),
+      (graft.gates.VersionedGates.ddlPartitionGate _),
     // The SQL-extension DDL surface (partition-field/props/refs/VACUUM
     // spellings), split from q45 so each gate's bench wall time stays
     // attributable to one protocol surface (the q40/q44 precedent).
     "q46_sql_ddl" ->
-      (graft.sources.Versioned.sqlDdlGate _),
+      (graft.gates.VersionedGates.sqlDdlGate _),
     // —— multimodal plumbing (north-star; decode is a marked stub) ——
     "m01_media_meta"   -> (Multimodal.mediaMeta _),
     // Feature vector projected to scalar f_* columns: driver-checkable
@@ -273,19 +273,19 @@ object SparkEntry {
     // exportSnapshot's list), not the fixture tables — the
     // reference's two-engines-one-table thesis (README.md:52-53
     // DuckDB vs :78 Presto over the same Iceberg table).
-    "q47_export_snapshot" -> (graft.sources.Versioned.exportGate _),
+    "q47_export_snapshot" -> (graft.gates.VersionedGates.exportGate _),
     // Cross-engine ingest: importFiles (the add_files analog) makes
     // the PYARROW-written fixture parquet table data without a
     // rewrite; the oracle aggregates the same bytes straight from the
     // fixture table.
-    "q48_add_files" -> (graft.sources.Versioned.importGate _),
-    "q49_clone_table" -> (graft.sources.Versioned.cloneGate _),
+    "q48_add_files" -> (graft.gates.VersionedGates.importGate _),
+    "q49_clone_table" -> (graft.gates.VersionedGates.cloneGate _),
     // Metadata-only aggregates: SELECT min/max/count FROM graft.t
     // answers from the stats sidecars (zero parquet scan) when the
     // manifest provably carries it; tombstones flip the same SQL to
     // the scan plan, compaction flips it back. The oracle RECOMPUTES
     // every aggregate value from the nation fixture.
-    "q53_metadata_agg" -> (graft.sources.Versioned.metadataAggGate _),
+    "q53_metadata_agg" -> (graft.gates.VersionedGates.metadataAggGate _),
     // Cross-engine INDEX read: the oracle recomputes BM25 in DuckDB
     // from the persisted inverted index's OWN exported bytes
     // (read_parquet over the postings buckets + the pinned stats
@@ -309,18 +309,18 @@ object SparkEntry {
     // changelog and pinning the processed source version in the
     // destination's own commit note.
     "q52_derived_refresh" ->
-      (graft.sources.DerivedTable.derivedRefreshGate _),
+      (graft.gates.MvGates.derivedRefreshGate _),
     // Incremental AGGREGATE view (q54): GROUP BY rollup maintained by
     // algebraic deltas — touched rows diffed between the two pinned
     // snapshots via point-set pruned reads, groups patched in place,
     // group migration / nulled values / group death all in one batch.
     "q54_agg_refresh" ->
-      (graft.sources.DerivedTable.aggRefreshGate _),
+      (graft.gates.MvGates.aggRefreshGate _),
     // SQL materialized-view lifecycle (q55): CREATE MATERIALIZED VIEW
     // persists the spec in the view's properties; refresh_mv advances
     // both kinds argument-free; DROP MATERIALIZED VIEW removes it.
     "q55_mv_lifecycle" ->
-      (graft.sources.DerivedTable.mvLifecycleGate _),
+      (graft.gates.MvGates.mvLifecycleGate _),
     // Cross-engine INT8-IVF index export (q56): DuckDB re-runs the
     // pruned-cell cosine probe from the exported (cells, centroids)
     // pair alone — q51's probe-from-bytes proof on the s09 layout.
@@ -330,17 +330,17 @@ object SparkEntry {
     // multi-column group tuple, and the mv.max-staleness-versions
     // read refusal — all pure SQL, states equal full recomputes.
     "q57_mv_shapes" ->
-      (graft.sources.DerivedTable.mvShapesGate _),
+      (graft.gates.MvGates.mvShapesGate _),
     // JOIN MV + chaining (q58): a fact⋈dim enrichment view maintained
     // from BOTH changelogs, a dim relabel + dim-key delete propagating
     // through a chained GOLD aggregate view (bronze→silver→gold).
     "q58_join_mv" ->
-      (graft.sources.DerivedTable.joinMvGate _),
+      (graft.gates.MvGates.joinMvGate _),
     // Aggregate-over-join MV (q59): one name, one refresh, ONE
     // commit — invertible shapes maintain the gold DIRECTLY (r18,
     // no hidden silver); extrema/distinct shapes auto-chain one.
     "q59_aggjoin_mv" ->
-      (graft.sources.DerivedTable.aggJoinMvGate _),
+      (graft.gates.MvGates.aggJoinMvGate _),
     // Distinct-count MV measures (q60), both spellings:
     // approx_count_distinct(c) AS adc_<c> stores a mergeable HLL
     // sketch — inserts merge in the delta pass, a group that lost
@@ -350,14 +350,14 @@ object SparkEntry {
     // cardinalities, so DuckDB restates every estimate AND every
     // exact count as count(DISTINCT) over the replayed edits.
     "q60_distinct_mv" ->
-      (graft.sources.DerivedTable.distinctMvGate _),
+      (graft.gates.MvGates.distinctMvGate _),
     // KLL quantile-sketch MV measures (q61): graft_kll(c) AS kll_<c>
     // stores mergeable percentile state — inserts merge, loss
     // recomputes; exact at the fixture's sub-k cardinalities, so
     // DuckDB restates the per-group p100 (= max) sums over the
     // replayed edits.
     "q61_kll_mv" ->
-      (graft.sources.DerivedTable.kllMvGate _),
+      (graft.gates.MvGates.kllMvGate _),
     // Expression-valued MV measures (q62): the TPC-H Q1 pricing
     // summary as ONE delta-maintained MV — sum/count/avg over
     // floor(price * (1 - disc) * 100)-style expressions, each
@@ -365,7 +365,7 @@ object SparkEntry {
     // read; exact integer cents, so DuckDB restates every per-state
     // figure over the replayed edits.
     "q62_expr_mv" ->
-      (graft.sources.DerivedTable.exprMvGate _),
+      (graft.gates.MvGates.exprMvGate _),
     // Mixed star/chain join-TREE MVs (q63): a star leg beside a
     // snowflaked leg under ONE aggregate view name — CREATE peels
     // the fact⋈d hop into the hidden .snow silver, both remaining
@@ -373,14 +373,14 @@ object SparkEntry {
     // maintains directly. One refresh propagates a fact append, a
     // star-leg relabel, and a chain-leg relabel.
     "q63_tree_mv" ->
-      (graft.sources.DerivedTable.treeMvGate _),
+      (graft.gates.MvGates.treeMvGate _),
     // Automatic query rewrite (q64): a registered aggregate MV
     // answers matching GROUP BY queries over its SOURCE whenever
     // the view's pin equals the scanned snapshot — plan-asserted
     // substitution, exact fallback on staleness, identical figures
     // either way (the rewrite changes cost, never results).
     "q64_mv_rewrite" ->
-      (graft.sources.DerivedTable.rewriteMvGate _),
+      (graft.gates.MvGates.rewriteMvGate _),
   )
 
   /** Shared oracle for the three text near-dup paths: they share one
@@ -2180,7 +2180,7 @@ object SparkEntry {
     * dump omits the key → rows-only check). Integer sums cast to
     * BIGINT: DuckDB widens sum(INTEGER) to HUGEINT, Spark to long. */
   private def exportOracle: Map[String, String] =
-    graft.sources.Versioned.lastExport.map { files =>
+    graft.gates.VersionedGates.lastExport.map { files =>
       val list = files.map(f => s"'$f'").mkString("[", ", ", "]")
       "q47_export_snapshot" ->
         s"""SELECT n_regionkey, count(*) AS cnt,

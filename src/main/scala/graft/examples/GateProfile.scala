@@ -105,15 +105,15 @@ object GateProfile {
       docs.unpersist()
       org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
     }
-    time("q52#1")(dt.derivedRefreshGate(spark, d).collect())
-    time("q52#2")(dt.derivedRefreshGate(spark, d).collect())
-    time("q54#1")(dt.aggRefreshGate(spark, d).collect())
-    time("q54#2")(dt.aggRefreshGate(spark, d).collect())
-    time("q55#1")(dt.mvLifecycleGate(spark, d).collect())
-    time("q57#1")(dt.mvShapesGate(spark, d).collect())
-    time("q58#1")(dt.joinMvGate(spark, d).collect())
-    time("q59#1")(dt.aggJoinMvGate(spark, d).collect())
-    time("q60#1")(dt.distinctMvGate(spark, d).collect())
+    time("q52#1")(graft.gates.MvGates.derivedRefreshGate(spark, d).collect())
+    time("q52#2")(graft.gates.MvGates.derivedRefreshGate(spark, d).collect())
+    time("q54#1")(graft.gates.MvGates.aggRefreshGate(spark, d).collect())
+    time("q54#2")(graft.gates.MvGates.aggRefreshGate(spark, d).collect())
+    time("q55#1")(graft.gates.MvGates.mvLifecycleGate(spark, d).collect())
+    time("q57#1")(graft.gates.MvGates.mvShapesGate(spark, d).collect())
+    time("q58#1")(graft.gates.MvGates.joinMvGate(spark, d).collect())
+    time("q59#1")(graft.gates.MvGates.aggJoinMvGate(spark, d).collect())
+    time("q60#1")(graft.gates.MvGates.distinctMvGate(spark, d).collect())
     spark.stop()
   }
 }

@@ -1868,7 +1868,7 @@ object TextAnalysis {
 
   /** File lists resolved by the LAST [[textIndexExportGate]] run in
     * this JVM — SparkEntry.oracleSql embeds them literally into the
-    * q50 DuckDB oracle (same discipline as Versioned.lastExport/q47:
+    * q50 DuckDB oracle (same discipline as VersionedGates.lastExport/q47:
     * Verify dumps oracle SQL after running every query, so a driver
     * pass always sees them populated; a standalone dump omits the
     * entry → rows-only check). */

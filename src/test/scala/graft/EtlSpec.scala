@@ -167,6 +167,31 @@ class EtlSpec extends SparkSpec {
       Seq(50, 750))
   }
 
+  test("readWhereIn with 1,000 values runs on a 1 MB thread stack") {
+    import spark.implicits._
+    import graft.sources.Versioned
+    val t = s"$work/versioned_wherein_wide"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    Versioned.commit((1 to 2000).map(i => (i, i * 10)).toDF("id", "x")
+      .repartitionByRange(8, col("id")), t, statsCols = Seq("id"))
+    // 1,000 values, a third of them beyond every file's bounds: the
+    // pruning test's depth must not grow with the set size
+    val values = (1 to 1000).map(_ * 3)
+    var got: Either[Throwable, Seq[Int]] = Left(new IllegalStateException)
+    val th = new Thread(null, () => got =
+      try Right(Versioned.readWhereIn(spark, t, "id", values)
+        .select("id").collect().map(_.getInt(0)).sorted.toSeq)
+      catch { case e: Throwable => Left(e) },
+      "wherein-1mb", 1L << 20)
+    th.start(); th.join()
+    val expect = Versioned.read(spark, t).filter(col("id").isin(values: _*))
+      .select("id").collect().map(_.getInt(0)).sorted.toSeq
+    got match {
+      case Left(e) => fail(s"readWhereIn failed: $e")
+      case Right(ids) => assert(ids == expect)
+    }
+  }
+
   test("versioned table: merge rewrites only touched files, links the rest") {
     import spark.implicits._
     import graft.sources.Versioned
@@ -689,6 +714,27 @@ class EtlSpec extends SparkSpec {
         upserts = Seq((5, 0)).toDF("id", "x"),
         deleteKeys = Seq(5).toDF("id"), key = "id")
     }
+  }
+
+  test("dataFileCount skips a tombstone writer's in-flight attempt files") {
+    import spark.implicits._
+    import graft.sources.Versioned
+    val t = s"$work/versioned_tomb_attempt"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+    Versioned.commit((1 to 100).map(i => (i, i * 10)).toDF("id", "x")
+      .repartitionByRange(2, col("id")), t)
+    // one commit with its own data dir AND a tombstone dir
+    val v = Versioned.applyChanges(spark, t,
+      upserts = Seq((42, -1)).toDF("id", "x"),
+      deleteKeys = Seq(70).toDF("id"), key = "id")
+    val deletes = new java.io.File(s"$t/v=$v/_deletes")
+    assert(deletes.isDirectory)
+    val before = Versioned.dataFileCount(spark, t)
+    // what Spark's file committer leaves while a tombstone job runs
+    val attempt = new java.io.File(deletes, "_temporary/0/part-0.parquet")
+    attempt.getParentFile.mkdirs()
+    java.nio.file.Files.write(attempt.toPath, Array[Byte](1, 2, 3))
+    assert(Versioned.dataFileCount(spark, t) == before)
   }
 
   test("versioned table: readAsOf resolves snapshots by publish time") {

@@ -1,0 +1,40 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level layering guard: verification gates (whole lifecycles
+  * over fixture copies, one oracle row each) live in `graft.gates`,
+  * and the engine never depends on them. */
+class LayeringSpec extends AnyFunSuite {
+  private val main = Paths.get("src/main/scala/graft")
+
+  private def text(p: Path): String =
+    new String(Files.readAllBytes(p), "UTF-8")
+
+  test("Versioned and DerivedTable hold no gate and no fixture loader") {
+    for (name <- Seq("Versioned.scala", "DerivedTable.scala")) {
+      val src = text(main.resolve("sources").resolve(name))
+      assert("""def \w*Gate""".r.findFirstIn(src).isEmpty,
+        s"$name defines a gate")
+      assert("""\bTables\.""".r.findFirstIn(src).isEmpty,
+        s"$name references Tables")
+      assert(!src.contains("FixturePool"), s"$name references FixturePool")
+    }
+  }
+
+  test("engine packages never import graft.gates") {
+    val engine = Seq("sources", "operators", "plans", "streaming",
+      "functions").map(main.resolve)
+    val offenders = engine.flatMap { dir =>
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => text(p).contains("graft.gates")).toList
+      finally s.close()
+    }
+    assert(offenders.isEmpty, s"engine files import graft.gates: $offenders")
+  }
+}
