@@ -200,8 +200,8 @@ object MvGates {
       val noop = refreshAgg(s, src, dst, "doc_id", Seq("source"), "n_chars")
       val noopOk = noop == ((rTo, rTo)) &&
         Versioned.currentVersion(s, dst) == vBefore
-      // tombstones keyed off the row key must refuse (the snapshot diff
-      // would miss those rows), and an unpinned destination refuses
+      // tombstones keyed off the row key must refuse (the refresh
+      // contract), and an unpinned destination refuses
       import s.implicits._
       Versioned.deleteRows(s, src, Seq("migrated").toDF("source"))
       val refusedKey = scala.util.Try(

@@ -3,15 +3,21 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incrementally maintained DERIVED tables — changelog-driven
-  * materialized-view refresh, the composition the lakehouse protocol
-  * exists to enable (the "medallion" bronze→silver step, Iceberg's
-  * incremental-scan consumer, Delta's `MERGE`-from-CDF recipe): a
-  * destination table holds `transform(source)` and each refresh
-  * advances it by reading ONLY the source commits since the last
-  * refresh ([[Versioned.readChanges]] — O(changed files + tombstone
-  * keys), never a source rescan), reducing them to final per-key
-  * states, and landing ONE atomic [[Versioned.applyChanges]] commit.
+/** Incrementally maintained DERIVED tables — materialized-view
+  * refresh driven by snapshot diffs, the composition the lakehouse
+  * protocol exists to enable (the "medallion" bronze→silver step,
+  * Iceberg's `create_changelog_view(net_changes => true)` consumer,
+  * Delta's `MERGE`-from-CDF recipe): a destination table holds
+  * `transform(source)` and each refresh advances it by reading ONLY
+  * what changed since the last refresh — ONE net diff of the pinned
+  * and head source snapshots ([[Versioned.netChanges]], planned from
+  * their two manifests, never a per-commit walk: it scans the changed
+  * files and the files a window tombstone may touch, and aggregates
+  * only the changed files' rows and the rows those tombstones match)
+  * — and landing ONE atomic [[Versioned.applyChanges]] commit. Which
+  * files an equality tombstone may touch is decided by the source's
+  * stats on the tombstone key; without them every older file is
+  * scanned once.
   *
   * The processed source version is pinned in the destination's own
   * commit note (`src=vN` — the same pin discipline as the persisted
@@ -19,26 +25,27 @@ import org.apache.spark.sql.functions._
   * or session resumes from the note, a crashed refresh never
   * half-advances (note and data land in one commit), and time travel
   * over the destination shows which source version each state
-  * reflects.
+  * reflects. A window whose diff is empty (metadata-only commits,
+  * churn that cancels) still advances the pin with a note-only
+  * commit.
   *
-  * Contract on [[Refresh.transform]]: ROW-PURE with respect to `key`
+  * Contract on [[refresh]]'s `transform`: ROW-PURE with respect to `key`
   * — each output row derives from the single input row with the same
   * key value, keys pass through unchanged, and dropping a row
   * (filtering) is allowed. That is exactly the class where row-level
-  * deltas propagate without recomputation: an insert event maps to
-  * an upsert of its transformed row (or a delete, when the transform
-  * filters it out — a row can cross the filter boundary in either
-  * direction on update), a delete event maps to a key delete.
-  * Aggregating transforms need their own algebra (the persisted text
-  * index's stats merge is one hand-built example) and are refused by
-  * nothing here — they are simply the caller's responsibility to NOT
-  * hand in.
+  * deltas propagate without recomputation: a key's row on the diff's
+  * +1 side is its new state and maps to an upsert of its transformed
+  * row (or a delete, when the transform filters it out — a row can
+  * cross the filter boundary in either direction on update), and a
+  * key with only −1 rows maps to a key delete. Aggregating transforms
+  * need their own algebra ([[refreshAgg]] feeds the signed rows
+  * through one), and joins re-derive their touched keys
+  * ([[refreshJoinStar]]).
   *
-  * Scale shape per refresh: one changelog read over the delta, one
-  * per-key last-event reduction (a map-side-combinable max_by keyed
-  * on `key`), one CoW/MoR commit touching only files holding changed
-  * keys. Nothing scales with the source's total size or history
-  * length; a full rebuild happens exactly once, at bootstrap. */
+  * Scale shape per refresh: one net diff, one CoW/MoR commit touching
+  * only files holding changed keys. On a source with stats on its
+  * delete keys nothing scales with its total size or history length;
+  * a full rebuild happens exactly once, at bootstrap. */
 object DerivedTable {
 
   // —— materialized-view spec persistence ——
@@ -803,45 +810,36 @@ object DerivedTable {
       s"head v$to — the source was rolled back or replaced; rebuild " +
       "into a fresh destination")
     if (from == to) return (to, to)
-    val events = Versioned.readChanges(s, srcDir, from, to)
-    // reduce the range to each key's FINAL state. Within one commit a
-    // copy-on-write update surfaces as delete(old)+insert(new) at the
-    // SAME version, so the tie-break must let the insert win; across
-    // commits the version decides.
-    val isIns = col(Versioned.ChangeTypeCol) === lit("insert")
-    // persisted around the fan-out: applyChanges runs ~6 independent
-    // actions (preflight count/range, emptiness probes, the overlap
-    // check, the rewrite) and each would otherwise re-execute the
-    // changelog read + this shuffle + the transform from scratch
-    val last = events.groupBy(col(key))
-      .agg(max_by(struct(events.columns.map(col): _*),
-        struct(col(Versioned.CommitVersionCol),
-          when(isIns, 1).otherwise(0))).as("e"))
-      .select(col("e.*"))
+    // persisted around the fan-out: the emptiness probe and
+    // applyChanges' actions (preflight, emptiness probes, the overlap
+    // check, the rewrite) would each re-run the diff from scratch
+    val diff = Versioned.netChanges(s, srcDir, from, to)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val lastIns = last.filter(isIns)
-        .drop(Versioned.ChangeTypeCol, Versioned.CommitVersionCol)
-      val transformed = transform(lastIns)
-      require(transformed.columns.contains(key),
-        s"transform must preserve the key column '$key'")
-      // a changed row the transform now FILTERS OUT must leave the
-      // destination — it may have passed under its previous values
-      val filteredOut = lastIns.select(col(key))
-        .join(transformed.select(col(key)), Seq(key), "left_anti")
-      val dels = last.filter(!isIns).select(col(key))
-        .unionByName(filteredOut).distinct()
-      // the pin advances exactly when a commit lands (note and data
-      // are one publish). A range of METADATA-ONLY source commits
-      // (renames, tags) yields no events and no commit, so the pin
-      // holds at `from` — the next refresh re-walks the same range,
-      // which is safe (upsert-by-key and delete-by-key are
-      // idempotent) and O(that range's deltas), not a recompute.
-      Versioned.applyChanges(s, dstDir, upserts = transformed,
-        deleteKeys = dels, key = key,
-        transform = layoutOf(partitionCol),
-        statsCols = Seq(key), note = Some(s"src=v$to"))
-    } finally last.unpersist(blocking = false)
+      val note = s"src=v$to"
+      // the pin advances with every refresh: an empty diff
+      // (metadata-only commits, churn that cancels) lands a note-only
+      // commit, so the next refresh starts past this window
+      if (diff.isEmpty) Versioned.commitNote(s, dstDir, note)
+      else {
+        // each touched key's new state is its row on the +1 side; a
+        // key with only −1 rows was deleted
+        val current = diff.filter(col(Versioned.ChangeWeightCol) > 0L)
+          .drop(Versioned.ChangeWeightCol)
+        val transformed = transform(current)
+        require(transformed.columns.contains(key),
+          s"transform must preserve the key column '$key'")
+        // a deleted key, or a changed row the transform now FILTERS
+        // OUT (it may have passed under its previous values), leaves
+        // the destination
+        val dels = diff.select(col(key)).distinct()
+          .join(transformed.select(col(key)), Seq(key), "left_anti")
+        Versioned.applyChanges(s, dstDir, upserts = transformed,
+          deleteKeys = dels, key = key,
+          transform = layoutOf(partitionCol),
+          statsCols = Seq(key), note = Some(note))
+      }
+    } finally diff.unpersist(blocking = false)
     (from, to)
   }
 
@@ -849,11 +847,11 @@ object DerivedTable {
     * [[refresh]]: `dstDir` holds `transform(fact, dim)` for an
     * N:1 equi-join `fact.fkCol = dim.dimKey` (INNER or LEFT OUTER —
     * the join type lives inside the transform's plan), keyed by the
-    * FACT row identity `key`, advanced per refresh from the
-    * changelogs of BOTH sides:
+    * FACT row identity `key`, advanced per refresh from the net
+    * snapshot diffs ([[Versioned.netChanges]]) of BOTH sides:
     *
-    *  - fact events name touched fact keys directly;
-    *  - dim events name touched dim keys, and the fact rows they
+    *  - the fact diff names touched fact keys directly;
+    *  - the dim diff names touched dim keys, and the fact rows they
     *    affect are exactly the pinned fact snapshot's rows whose
     *    `fkCol` is in that set — read via the same tiered point-read
     *    as every other leg (O(files containing the values), never a
@@ -878,7 +876,7 @@ object DerivedTable {
     * that slips between audits still cannot commit (the CDC apply
     * refuses duplicate upsert keys).
     *
-    * Scale shape per refresh: two changelog reads over the deltas,
+    * Scale shape per refresh: two net diffs over the windows,
     * one point-read of dim-affected fact rows keyed on `fkCol`, one
     * point-read of re-derived fact rows keyed on `key`, one
     * slice-vs-dim join (Catalyst broadcasts the dim when it is small
@@ -900,7 +898,7 @@ object DerivedTable {
   /** Composite-key [[refreshJoin]]: the join identity is the column
     * TUPLE `fact.(fkCols…) = dim.(dimKeys…)` (aligned by position —
     * `ON f.a = d.x AND f.b = d.y`). Same algebra end to end: dim
-    * events name touched dim-key tuples, the affected-fact point read
+    * diffs name touched dim-key tuples, the affected-fact point read
     * semi-joins the full tuple (manifest range pruning on the FIRST
     * fk column, like every tuple-keyed path here), uniqueness is a
     * tuple invariant. */
@@ -926,18 +924,23 @@ object DerivedTable {
 
   /** N-dimension [[refreshJoinKeys]] — the star-schema enrichment
     * view `fact ⋈ d1 ⋈ d2 ⋈ …` (each join N:1, INNER or LEFT inside
-    * the transform's plan), maintained from ALL changelogs: each dim
-    * leg's events locate their affected fact rows through that leg's
-    * fk point read, the union of affected + fact-event keys
-    * re-derives ONCE against every pinned dim, and the commit note
+    * the transform's plan), maintained from one net snapshot diff
+    * per source ([[Versioned.netChanges]] over each pin → head
+    * window): each changed dim leg's diff names its touched dim keys,
+    * which locate their affected fact rows through that leg's fk
+    * point read; the union of those and the fact diff's keys
+    * re-derives ONCE — the touched fact rows at the fact head joined
+    * to every dim at its head — and the result upserts by `key`
+    * (a re-derived key with no output row deletes); the commit note
     * carries one pin fragment per source (`src=vN;dim=vA;dim2=vB;…`
     * — the [[legDirsOf]] key convention) so a crashed refresh never
     * half-advances any cursor. Per-leg contracts are
     * [[refreshJoinKeys]]'s: touched-tuple uniqueness audits, null
-    * dim-key refusals, the touched-key bound. Scale shape: one
-    * changelog read per source, one affected-fact point read per
+    * dim-key refusals, the touched-key bound. Scale shape: one net
+    * diff per changed source, one affected-fact point read per
     * CHANGED dim leg (an idle leg costs two metadata probes), one
-    * slice-vs-dims join, one CoW/MoR commit. */
+    * slice-vs-dims join (persisted across the commit's actions), one
+    * CoW/MoR commit. */
   def refreshJoinStar(s: SparkSession, factDir: String,
       dims: Seq[JoinDim], dstDir: String, key: String,
       transform: (DataFrame, Seq[DataFrame]) => DataFrame,
@@ -970,15 +973,21 @@ object DerivedTable {
       } else {
         val factSlice = pointRead(s, factDir, Seq(key), nK,
           kProbe.map(_.get(0)).toSeq, Some(to1), kDf)
+        // persisted around the commit: applyChanges' preflight, the
+        // merge's match and rewrite, and the tombstone write of `dels`
+        // would each re-derive the slice-vs-dims join from scratch
         val newRows = transform(factSlice, dims.indices.map(dimAt))
-        require(newRows.columns.contains(key),
-          s"the join-view query must preserve the key column '$key'")
-        val dels = kDf.join(newRows.select(col(key)), Seq(key),
-          "left_anti")
-        Versioned.applyChanges(s, dstDir, upserts = newRows,
-          deleteKeys = dels, key = key,
-          transform = layoutOf(partitionCol),
-          statsCols = Seq(key), note = Some(note))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          require(newRows.columns.contains(key),
+            s"the join-view query must preserve the key column '$key'")
+          val dels = kDf.join(newRows.select(col(key)), Seq(key),
+            "left_anti")
+          Versioned.applyChanges(s, dstDir, upserts = newRows,
+            deleteKeys = dels, key = key,
+            transform = layoutOf(partitionCol),
+            statsCols = Seq(key), note = Some(note))
+        } finally newRows.unpersist(blocking = false)
       }
     }
     ((from1, to1), froms.zip(tos))
@@ -1042,7 +1051,7 @@ object DerivedTable {
     * second copy of the fact stream, ONE commit per refresh):
     *
     *  - the affected fact keys come from the same per-leg algebra as
-    *    [[refreshJoinStar]] (fact changelog keys ∪ each changed dim
+    *    [[refreshJoinStar]] (fact diff keys ∪ each changed dim
     *    leg's fk point read — [[affectedFactKeys]]);
     *  - the OLD side re-derives those keys' join output at the
     *    PINNED versions (fact `from` ⋈ dims at their `from` pins),
@@ -1113,12 +1122,12 @@ object DerivedTable {
         // heads — the signed union nets rows that entered/left the
         // join (dim deletes under INNER, fk moves, fact edits) the
         // same way the single-table path nets filter crossings
-        def sideAt(factV: Int, dimVs: Seq[Int]): DataFrame =
+        def sideAt(factV: Int, dimVs: Seq[Int], w: Long): DataFrame =
           slice(pointRead(s, factDir, Seq(rowKey), nK,
             kProbe.map(_.get(0)).toSeq, Some(factV), kDf),
-            dimsAt(dimVs)).drop(rowKey)
+            dimsAt(dimVs)).drop(rowKey).withColumn("__w", lit(w))
         aggDeltaApply(s, dstDir, groupCols, values, Nil, avgs, Nil,
-          sideAt(from1, froms), sideAt(to1, tos),
+          sideAt(from1, froms, -1L).unionByName(sideAt(to1, tos, 1L)),
           (_, _, _) => throw new IllegalStateException(
             "unreachable: no extrema or distinct measures in the " +
               "direct aggregate-over-join path"),
@@ -1139,17 +1148,23 @@ object DerivedTable {
   /** The union of fact keys whose JOIN OUTPUT may change over a
     * refresh window — the star-refresh leg algebra shared by the
     * materialized join view ([[refreshJoinStar]]) and the direct
-    * aggregate-over-join view ([[refreshAggJoin]]): fact changelog
+    * aggregate-over-join view ([[refreshAggJoin]]): fact diff
     * keys plus, per CHANGED dim leg, the pinned fact snapshot's rows
     * whose fk tuple is in that leg's touched dim keys (tiered point
-    * read — an idle leg contributes nothing and costs nothing). Each
-    * changed leg's touched dim keys are uniqueness-audited eagerly.
-    * The limit-probe fold serves count, null check, and IN-tier
-    * values in one job (the refreshAgg discipline); dim events with
-    * a null dim key refuse — an equality tombstone keyed on another
-    * column can't locate its affected fact rows. `use` runs with the
-    * persisted distinct key frame, its count, and the ≤ limit+1
-    * probe rows; every persist is released after. */
+    * read — an idle leg contributes nothing and costs nothing). Both
+    * come from net diffs ([[Versioned.netChanges]]). Each changed
+    * leg's touched dim keys are uniqueness-audited eagerly. The
+    * limit-probe fold serves count, null check, and IN-tier values in
+    * one job (the refreshAgg discipline). A window whose equality
+    * tombstones key on other columns than the dim key (or, on the
+    * fact, than `key`) refuses, decided from the tombstones' schemas
+    * ([[Versioned.equalityDeleteKeys]]) before any Spark job; a null
+    * key value in a diff refuses with the same message. (The
+    * tombstone refusal is a contract kept from the per-version
+    * changelog's key-only delete events; the net diff carries full
+    * rows and would not miss those deletions.) `use` runs
+    * with the persisted distinct key frame, its count, and the
+    * ≤ limit+1 probe rows; every persist is released after. */
   private def affectedFactKeys[T](s: SparkSession, factDir: String,
       dims: Seq[JoinDim], key: String, from1: Int, to1: Int,
       froms: Seq[Int], tos: Seq[Int], maxTouchedKeys: Int)
@@ -1162,9 +1177,17 @@ object DerivedTable {
         val dm = dims(i)
         if (tos(i) > froms(i)) {
           val dimKeyStr = dm.dimKeys.mkString(", ")
+          val nullDimKey = s"a dim change event carries a null " +
+            s"'$dimKeyStr' — the dim's equality tombstones key on a " +
+            "different column, so the affected fact rows can't be " +
+            s"located; key dim deletes on '$dimKeyStr' (or refresh by " +
+            "rebuild)"
+          require(Versioned.equalityDeleteKeys(s, dm.dir, froms(i),
+            tos(i)).forall(ks => dm.dimKeys.forall(ks.contains)),
+            nullDimKey)
           val asFk = dm.dimKeys.zip(dm.fkCols).map { case (d, f) =>
             col(d).as(f) }
-          val tdDf = Versioned.readChanges(s, dm.dir, froms(i), tos(i))
+          val tdDf = Versioned.netChanges(s, dm.dir, froms(i), tos(i))
             .select(asFk: _*).distinct()
             .persist(org.apache.spark.storage.StorageLevel
               .MEMORY_AND_DISK)
@@ -1182,11 +1205,7 @@ object DerivedTable {
                   .reduce(_ && _), lit(1))).as("nn")).head()
               (t.getLong(0), t.getLong(1))
             }
-          require(nTd == nTdNonNull,
-            s"a dim change event carries a null '$dimKeyStr' — the " +
-              "dim's equality tombstones key on a different column, " +
-              "so the affected fact rows can't be located; key dim " +
-              s"deletes on '$dimKeyStr' (or refresh by rebuild)")
+          require(nTd == nTdNonNull, nullDimKey)
           require(nTd <= maxTouchedKeys,
             s"refresh range touches $nTd dim keys " +
               s"(> $maxTouchedKeys) — rebuild into a fresh " +
@@ -1206,11 +1225,17 @@ object DerivedTable {
           }
         }
       }
-      // —— fact-event keys ∪ dim-affected keys ——
+      // —— fact-diff keys ∪ dim-affected keys ——
+      val nullFactKey = s"a null '$key' fact key reached the refresh " +
+        "— either a fact change event keyed on a different column or " +
+        s"a dim-affected fact row with a null '$key'; key fact " +
+        s"deletes on '$key' and filter null keys at ingest"
       val factTouched =
-        if (to1 > from1)
-          Versioned.readChanges(s, factDir, from1, to1).select(col(key))
-        else Versioned.read(s, factDir, Some(to1)).select(col(key))
+        if (to1 > from1) {
+          require(Versioned.equalityDeleteKeys(s, factDir, from1, to1)
+            .forall(_.contains(key)), nullFactKey)
+          Versioned.netChanges(s, factDir, from1, to1).select(col(key))
+        } else Versioned.read(s, factDir, Some(to1)).select(col(key))
           .limit(0)
       val kDf = affected.foldLeft(factTouched)(_ unionByName _)
         .distinct()
@@ -1226,11 +1251,7 @@ object DerivedTable {
               count(col(key)).as("nn")).head()
             (t.getLong(0), t.getLong(1))
           }
-        require(nK == nKNonNull,
-          s"a null '$key' fact key reached the refresh — either a " +
-            "fact change event keyed on a different column or a " +
-            s"dim-affected fact row with a null '$key'; key fact " +
-            s"deletes on '$key' and filter null keys at ingest")
+        require(nK == nKNonNull, nullFactKey)
         require(nK <= maxTouchedKeys,
           s"refresh range touches $nK fact keys (> $maxTouchedKeys) " +
             "— rebuild into a fresh destination instead, or raise " +
@@ -1240,71 +1261,6 @@ object DerivedTable {
     } finally persisted.foreach(_.unpersist(blocking = false))
   }
 
-  /** Incrementally maintained AGGREGATE view — the GROUP BY rollup
-    * twin of [[refresh]]: `dstDir` holds
-    * `SELECT groupCols…, sum(valueCol), count(valueCol), count(*)
-    * FROM source [WHERE …] GROUP BY groupCols…`, advanced per
-    * refresh by ALGEBRAIC delta maintenance instead of
-    * recomputation. Multi-column groups and a WHERE predicate are
-    * both first-class: the group key is the column TUPLE end to end
-    * (delta, point reads, destination upserts), and the predicate
-    * applies to every snapshot-side read so the algebra runs on the
-    * filtered stream — a filtered GROUP BY is the single most common
-    * materialized view in practice.
-    *
-    * The changelog cannot carry the algebra alone: an equality-delete
-    * event has KEY columns only (the Iceberg equality-delete
-    * contract), so the old value to subtract isn't in the event. Each
-    * refresh therefore diffs the TOUCHED rows between the two pinned
-    * snapshots: the row keys named by the range's events are read
-    * back at `from` and at `to` — both via [[Versioned.readWhereIn]]
-    * point-set pruning, O(files containing touched keys), never a
-    * source rescan — and each group's delta is
-    * `agg(new touched) - agg(old touched)`. Rows inserted AND deleted
-    * inside the range net to zero by construction (they exist in
-    * neither snapshot). Destination groups are then patched through
-    * the same pruned point-read, a group whose row count reaches zero
-    * is deleted, and everything lands in one atomic commit whose note
-    * pins `src=vN`.
-    *
-    * Stored schema: (groupCol, sum_<valueCol>, cnt_<valueCol>,
-    * n_rows[, avg_<c>…][, adc_<c>…][, cd_<c> per `exactDistinctCols`
-    * column][, min_<c>, max_<c> per `extrema` column][, hll/kll
-    * sketch state last]). The value
-    * count makes the all-null group exact: a group whose surviving
-    * values are all null stores a NULL sum (`cnt` = 0), matching the
-    * recompute — an unconditional 0 would not. avg is `sum / cnt`,
-    * derivable at read.
-    *
-    * `extrema` columns get MIN/MAX maintenance by AFFECTED-GROUP
-    * recompute — min/max are not delta-invertible (a deleted maximum
-    * says nothing about the runner-up), so each refresh re-aggregates
-    * exactly the touched groups' rows from the pinned `to` snapshot
-    * (same two read tiers, keyed on the group column) and leaves
-    * untouched groups' stored values standing. Cost is O(rows of
-    * touched groups) per refresh — the standard fallback every
-    * incremental-view system uses for non-invertible aggregates. The
-    * recompute doubles as a consistency audit: each surviving group's
-    * recomputed row count must equal the algebraic one, or the
-    * refresh refuses (corrupt pin). `exactDistinctCols` (cd_<c> =
-    * exact count(DISTINCT c)) ride the same recompute — and FORCE it
-    * on the insert path too, because an inserted value may already
-    * exist in its group (no merge can tell); approx_count_distinct
-    * (`distinctCols`) is the merge-on-insert alternative whose
-    * append refresh pays no recompute read.
-    *
-    * Contracts refused loudly: a delete event whose `rowKey` is null
-    * (the source's tombstones key on a different column — the diff
-    * would silently miss those rows), and a patched group whose row
-    * count would go negative (a corrupt pin/history). Exactness note:
-    * integer/decimal sums are exact; float sums accumulate the usual
-    * reassociation drift relative to a full recompute.
-    *
-    * `maxTouchedKeys` bounds the driver-side key set handed to the
-    * point-set pruned reads (the two-pass bounded-driver discipline);
-    * a larger batch refuses with the advice to rebuild — a delta that
-    * touches a large fraction of the source approaches a rebuild's
-    * cost anyway. */
   /** The stored avg columns — the EXACT quotient of the stored
     * (sum, cnt) pair, NULL for the all-null group. ONE definition
     * serves the bootstrap aggregation and every incremental patch,
@@ -1349,6 +1305,69 @@ object DerivedTable {
       coalesce(hll_sketch_estimate(col(s"hll_$c")), lit(0L))
         .as(s"adc_$c"))
 
+  /** Incrementally maintained AGGREGATE view — the GROUP BY rollup
+    * twin of [[refresh]]: `dstDir` holds
+    * `SELECT groupCols…, sum(valueCol), count(valueCol), count(*)
+    * FROM source [WHERE …] GROUP BY groupCols…`, advanced per
+    * refresh by ALGEBRAIC delta maintenance instead of
+    * recomputation. Multi-column groups and a WHERE predicate are
+    * both first-class: the group key is the column TUPLE end to end
+    * (delta, point reads, destination upserts), and the predicate
+    * applies to every snapshot-side read so the algebra runs on the
+    * filtered stream — a filtered GROUP BY is the single most common
+    * materialized view in practice.
+    *
+    * Each refresh reads ONE net diff of the pinned and head source
+    * snapshots ([[Versioned.netChanges]]): full rows, −n for rows
+    * that left the source and +n for rows that entered it, so an
+    * updated row arrives as its old (−1) and new (+1) versions and a
+    * row inserted AND deleted inside the window is absent. The signed
+    * rows pass through the same derived columns and WHERE as every
+    * snapshot-side read, and each group's delta is their weighted
+    * aggregate — `agg(rows entered) − agg(rows left)`, ONE shuffle.
+    * Destination groups are then patched through the manifest-pruned
+    * point read, a group whose row count reaches zero is deleted, and
+    * everything lands in one atomic commit whose note pins `src=vN`;
+    * an empty diff lands a note-only commit.
+    *
+    * Stored schema: (groupCol, sum_<valueCol>, cnt_<valueCol>,
+    * n_rows[, avg_<c>…][, adc_<c>…][, cd_<c> per `exactDistinctCols`
+    * column][, min_<c>, max_<c> per `extrema` column][, hll/kll
+    * sketch state last]). The value
+    * count makes the all-null group exact: a group whose surviving
+    * values are all null stores a NULL sum (`cnt` = 0), matching the
+    * recompute — an unconditional 0 would not. avg is `sum / cnt`,
+    * derivable at read.
+    *
+    * `extrema` columns get MIN/MAX maintenance by AFFECTED-GROUP
+    * recompute — min/max are not delta-invertible (a deleted maximum
+    * says nothing about the runner-up), so each refresh re-aggregates
+    * exactly the touched groups' rows from the pinned `to` snapshot
+    * (tiered point read keyed on the group columns) and leaves
+    * untouched groups' stored values standing. Cost is O(rows of
+    * touched groups) per refresh — the standard fallback every
+    * incremental-view system uses for non-invertible aggregates. The
+    * recompute doubles as a consistency audit: each surviving group's
+    * recomputed row count must equal the algebraic one, or the
+    * refresh refuses (corrupt pin). `exactDistinctCols` (cd_<c> =
+    * exact count(DISTINCT c)) ride the same recompute — and FORCE it
+    * on the insert path too, because an inserted value may already
+    * exist in its group (no merge can tell); approx_count_distinct
+    * (`distinctCols`) is the merge-on-insert alternative whose
+    * append refresh pays no recompute read.
+    *
+    * Contracts refused loudly: a window holding an equality tombstone
+    * keyed off `rowKey` (decided from the tombstones' schemas,
+    * [[Versioned.equalityDeleteKeys]], before any Spark job) or a
+    * diff row whose `rowKey` is null, and a patched group whose row
+    * count would go negative (a corrupt pin/history). Exactness note:
+    * integer/decimal sums are exact; float sums accumulate the usual
+    * reassociation drift relative to a full recompute.
+    *
+    * `maxTouchedKeys` bounds the refresh by the diff's DISTINCT row
+    * keys; a larger window refuses with the advice to rebuild — a
+    * delta that touches a large fraction of the source approaches a
+    * rebuild's cost anyway. */
   def refreshAgg(s: SparkSession, srcDir: String, dstDir: String,
       rowKey: String, groupCols: Seq[String], valueCol: String,
       maxTouchedKeys: Int = 100000,
@@ -1404,7 +1423,7 @@ object DerivedTable {
     // MULTI-MEASURE views: every value column gets its own exact
     // (sum_c, cnt_c) pair in the one signed-union delta pass — a
     // rollup usually carries several measures, and splitting them
-    // across views would pay the changelog walk per measure. `avgs`
+    // across views would pay the diff read per measure. `avgs`
     // (any subset of the values, in value order) each store the
     // exact quotient of their pair.
     // an EMPTY valueCol ("") declares the COUNT-ONLY rollup: no
@@ -1512,7 +1531,7 @@ object DerivedTable {
         s"(${groupCols.mkString(", ")}) — the view stores one row " +
         "per group"))
     // the WHERE predicate applies to every snapshot-side read — the
-    // bootstrap scan, both pinned touched-row reads, and the extrema
+    // bootstrap scan, the signed diff rows, and the extrema
     // recompute — so the delta algebra runs on the FILTERED stream
     // unchanged: a row crossing the predicate boundary on update is
     // simply an insert/delete of that stream, which the signed union
@@ -1535,8 +1554,8 @@ object DerivedTable {
     var whereChecked = false
     // every snapshot-side read goes through `prepared`: derived
     // bucket AND measure columns first (they may only reference
-    // source columns), then the WHERE filter — so bootstrap, both
-    // pinned touched-row reads, and the extrema recompute all see
+    // source columns), then the WHERE filter — so bootstrap, the
+    // signed diff rows, and the extrema recompute all see
     // the same derived, filtered stream
     def prepared(df: DataFrame): DataFrame = {
       val bucketed = (groupExprs ++ valueExprs).foldLeft(df) {
@@ -1612,107 +1631,76 @@ object DerivedTable {
       s"head v$to — the source was rolled back or replaced; rebuild " +
       "into a fresh destination")
     if (from == to) return (to, to)
-    val events = Versioned.readChanges(s, srcDir, from, to)
-    // the touched-key set stays DISTRIBUTED: the driver holds only
-    // its COUNT (the bound check) — values are collected solely when
-    // the set is small enough for the IN-list pruning tier. Events
-    // are NOT where-filtered (equality-delete events carry key
-    // columns only): rows that never pass the predicate read back
-    // empty from both snapshots and contribute nothing.
-    val touchedDf = events.select(col(rowKey)).distinct()
+    // the refusal and its message are kept from the per-version
+    // changelog, whose key-only equality-delete events could not
+    // locate such rows; the net diff carries full deleted rows, so it
+    // stays only as the refresh's contract
+    val nullRowKey = s"a change event carries a null '$rowKey' — the " +
+      "source's equality tombstones key on a different column, so " +
+      "the snapshot diff would miss those deletions; key deletes on " +
+      s"'$rowKey' (or refresh by rebuild)"
+    require(Versioned.equalityDeleteKeys(s, srcDir, from, to)
+      .forall(_.contains(rowKey)), nullRowKey)
+    // persisted: the touched-key count and the delta aggregation both
+    // read it
+    val diff = Versioned.netChanges(s, srcDir, from, to)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try refreshAggOver(s, srcDir, dstDir, rowKey, groupCols, values,
-      maxTouchedKeys, extrema, prepared, from, to, touchedDf,
-      partitionCol, derivedNames, avgs, distinctCols,
-      exactDistinctCols, kllCols)
-    finally touchedDf.unpersist(blocking = false)
-  }
-
-  private def refreshAggOver(s: SparkSession, srcDir: String,
-      dstDir: String, rowKey: String, groupCols: Seq[String],
-      values: Seq[String], maxTouchedKeys: Int, extrema: Seq[String],
-      prepared: DataFrame => DataFrame,
-      from: Int, to: Int, touchedDf: DataFrame,
-      partitionCol: Option[String] = None,
-      derivedNames: Set[String] = Set.empty,
-      avgs: Seq[String] = Nil,
-      distincts: Seq[String] = Nil,
-      exacts: Seq[String] = Nil,
-      klls: Seq[String] = Nil): (Int, Int) = {
-    // ONE limit-probe serves the common case's every driver fact:
-    // when the touched set fits the IN tier (≤ PruneKeyLimit — the
-    // typical refresh), its ≤ limit+1 collected rows ARE the count,
-    // the null check, and the point-read values — one job instead of
-    // a count pass plus a collect pass. Only an over-limit set pays
-    // the count-only aggregate, and the driver still never holds
-    // more than limit+1 values for it (the r15 bounded-driver
-    // discipline unchanged).
-    val tProbe = touchedDf.limit(PruneKeyLimit + 1).collect()
-    val tSmall = tProbe.length <= PruneKeyLimit
-    val (nTouched, nTouchedNonNull) =
-      if (tSmall) (tProbe.length.toLong,
-        tProbe.count(!_.isNullAt(0)).toLong)
-      else {
-        val t = touchedDf.agg(count(lit(1)).as("n"),
-          count(col(rowKey)).as("nn")).head()
-        (t.getLong(0), t.getLong(1))
+    try {
+      // the touched-key bound counts DISTINCT row keys of the diff;
+      // the driver holds two longs, never the keys
+      val t = diff.agg(count_distinct(col(rowKey)),
+        count(when(col(rowKey).isNull, 1))).head()
+      val nTouched = t.getLong(0)
+      require(t.getLong(1) == 0, nullRowKey)
+      require(nTouched <= maxTouchedKeys,
+        s"refresh range touches $nTouched row keys " +
+          s"(> $maxTouchedKeys) — rebuild into a fresh destination " +
+          "instead, or raise maxTouchedKeys")
+      if (nTouched == 0) {
+        // an empty diff (metadata-only source commits, churn that
+        // cancels): advance the pin with a note-only commit — a stuck
+        // pin makes every later refresh re-cover this dead range
+        Versioned.commitNote(s, dstDir, s"src=v$to")
+        return (from, to)
       }
-    require(nTouched == nTouchedNonNull,
-      s"a change event carries a null '$rowKey' — the source's " +
-        "equality tombstones key on a different column, so the " +
-        "snapshot diff would miss those deletions; key deletes on " +
-        s"'$rowKey' (or refresh by rebuild)")
-    require(nTouched <= maxTouchedKeys,
-      s"refresh range touches $nTouched row keys " +
-        s"(> $maxTouchedKeys) — rebuild into a fresh destination " +
-        "instead, or raise maxTouchedKeys")
-    if (nTouched == 0) {
-      // zero events (metadata-only source commits): advance the pin
-      // with a note-only commit — a stuck pin makes every later
-      // refresh re-cover this dead range and eventually trips the
-      // touched-key bound on a perfectly healthy view
-      Versioned.commitNote(s, dstDir, s"src=v$to")
-      return (from, to)
-    }
-    // group deltas from the two pinned snapshots' touched rows, via
-    // the tiered point read ([[pointRead]]); the IN-tier values are
-    // exactly the probe's rows (complete by tSmall)
-    def touchedAt(ver: Int): DataFrame =
-      prepared(pointRead(s, srcDir, Seq(rowKey), nTouched,
-        tProbe.map(_.get(0)).toSeq, Some(ver), touchedDf))
-    // the affected-group recompute read (extrema/sketches): touched
-    // groups' rows at the pinned `to` snapshot — a DERIVED group key
-    // can't drive the manifest-pruned point read (the source has no
-    // such column), so it falls back to the pinned snapshot scan
-    // semi-joined on the bucketed tuple, the same plan the >limit
-    // tier uses
-    def recomputeAt(gdf: DataFrame, n: Long, vals: Seq[Any]) =
-      if (derivedNames.isEmpty)
-        prepared(pointRead(s, srcDir, groupCols, n, vals, Some(to),
-          gdf))
-      else prepared(Versioned.read(s, srcDir, Some(to)))
-        .join(broadcast(gdf), groupCols, "left_semi")
-    aggDeltaApply(s, dstDir, groupCols, values, extrema, avgs,
-      distincts, touchedAt(from), touchedAt(to), recomputeAt,
-      s"src=v$to", s"src=v$from", s"src=v$to", partitionCol, exacts,
-      klls)
+      // the affected-group recompute read (extrema/sketches): touched
+      // groups' rows at the pinned `to` snapshot — a DERIVED group key
+      // can't drive the manifest-pruned point read (the source has no
+      // such column), so it falls back to the pinned snapshot scan
+      // semi-joined on the bucketed tuple, the same plan the >limit
+      // tier uses
+      def recomputeAt(gdf: DataFrame, n: Long, vals: Seq[Any]) =
+        if (derivedNames.isEmpty)
+          prepared(pointRead(s, srcDir, groupCols, n, vals, Some(to),
+            gdf))
+        else prepared(Versioned.read(s, srcDir, Some(to)))
+          .join(broadcast(gdf), groupCols, "left_semi")
+      // the diff's rows ARE the signed stream: −n rows left the
+      // filtered view, +n rows entered it
+      aggDeltaApply(s, dstDir, groupCols, values, extrema, avgs,
+        distinctCols,
+        prepared(diff).withColumnRenamed(Versioned.ChangeWeightCol, "__w"),
+        recomputeAt, s"src=v$to", s"src=v$from", s"src=v$to",
+        partitionCol, exactDistinctCols, kllCols)
+    } finally diff.unpersist(blocking = false)
     (from, to)
   }
 
   /** The aggregate-view PATCH core, shared by the single-table path
-    * ([[refreshAggOver]]) and the direct aggregate-over-join path
-    * ([[refreshAggJoin]]): SIGNED-union the old/new touched rows
-    * (old −1, new +1 — ONE shuffle computes every group's
-    * per-measure deltas), patch the touched destination groups via
-    * the tiered point read, audit, and land one atomic commit whose
-    * note carries `note`. `recomputeAt` reads the touched groups'
-    * rows at the NEW pinned state for the non-invertible columns
-    * (extrema, HLL sketches) — callers with neither pass a
-    * never-called stub. */
+    * ([[refreshAgg]]) and the direct aggregate-over-join path
+    * ([[refreshAggJoin]]): aggregate the SIGNED rows — `signed`
+    * carries a long weight `__w`, negative for rows that left the
+    * view's input, positive for rows that entered it — in ONE shuffle
+    * into every group's per-measure deltas, patch the touched
+    * destination groups via the tiered point read, audit, and land
+    * one atomic commit whose note carries `note`. `recomputeAt` reads
+    * the touched groups' rows at the NEW pinned state for the
+    * non-invertible columns (extrema, HLL sketches) — callers with
+    * neither pass a never-called stub. */
   private def aggDeltaApply(s: SparkSession, dstDir: String,
       groupCols: Seq[String], values: Seq[String],
       extrema: Seq[String], avgs: Seq[String], distincts: Seq[String],
-      oldRows: DataFrame, newRows: DataFrame,
+      signed0: DataFrame,
       recomputeAt: (DataFrame, Long, Seq[Any]) => DataFrame,
       note: String, fromLabel: String, toLabel: String,
       partitionCol: Option[String],
@@ -1722,8 +1710,12 @@ object DerivedTable {
     val extCols = extrema.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     val extNames = extrema.flatMap(c => Seq(s"min_$c", s"max_$c"))
-    val signed = oldRows.withColumn("__w", lit(-1L))
-      .unionByName(newRows.withColumn("__w", lit(1L)))
+    // a KLL sketch counts every value it sees, so a row of weight
+    // ±n enters the pass n times; every other measure is weighted
+    val signed =
+      if (klls.isEmpty) signed0
+      else signed0.withColumn("__w", explode(array_repeat(
+        signum(col("__w")).cast("long"), abs(col("__w")).cast("int"))))
     // distinct measures ride the same pass: d_hll_<c> sketches the
     // NEW-side values only (old-side rows null out and HLL skips
     // nulls), and d_old counts old-side rows — any means the group
@@ -1736,12 +1728,12 @@ object DerivedTable {
       sum(when(col(c).isNotNull, col("__w")).otherwise(0L))
         .as(s"d_cnt_$c"))) :+ sum(col("__w")).as("d_n")) ++
       (if (!sketched) Nil
-       else Seq(sum(when(col("__w") === -1L, 1L).otherwise(0L))
+       else Seq(sum(when(col("__w") < 0L, -col("__w")).otherwise(0L))
          .as("d_old")) ++ distincts.map(c =>
-         hll_sketch_agg(when(col("__w") === 1L, col(c)))
+         hll_sketch_agg(when(col("__w") > 0L, col(c)))
            .as(s"d_hll_$c")) ++ klls.map(c =>
          call_function("graft_kll",
-           when(col("__w") === 1L, col(c))).as(s"d_kll_$c")))
+           when(col("__w") > 0L, col(c))).as(s"d_kll_$c")))
     val delta = signed.groupBy(gCols: _*)
       .agg(deltaAggs.head, deltaAggs.tail: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

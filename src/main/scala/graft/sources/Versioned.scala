@@ -225,16 +225,22 @@ object Versioned {
       tableDir: String, v: Int): Seq[Tomb] = {
     val chain = renameChain(f, tableDir, v)
     manifestLines(f, tableDir, v).filter(isDeleteLine)
-      .map(_.stripPrefix(DeletePrefix)).map { e =>
-        val frame = scanUnit(spark, ScanUnit(
-          deleteEntryFiles(f, tableDir, e).map(_.toString), None,
-          ownerEpoch(f, tableDir, e.split("/").head)))
-        if (e.endsWith("/" + PosDeletesDir)) PosTomb(entryVer(e), frame)
-        // an equality key set carries its delete-time column names —
-        // rename it forward like any entry so the anti-join still
-        // matches rows renamed since
-        else EqTomb(entryVer(e), applyRenames(frame, chain, entryVer(e)))
-      }
+      .map(tombOf(spark, f, tableDir, chain, _))
+  }
+
+  /** The tombstone set of one manifest delete line, its equality key
+    * columns renamed forward through `chain`. */
+  private def tombOf(spark: SparkSession, f: FileSystem, tableDir: String,
+      chain: Seq[SchemaStep], line: String): Tomb = {
+    val e = line.stripPrefix(DeletePrefix)
+    val frame = scanUnit(spark, ScanUnit(
+      deleteEntryFiles(f, tableDir, e).map(_.toString), None,
+      ownerEpoch(f, tableDir, e.split("/").head)))
+    if (e.endsWith("/" + PosDeletesDir)) PosTomb(entryVer(e), frame)
+    // an equality key set carries its delete-time column names —
+    // rename it forward like any entry so the anti-join still
+    // matches rows renamed since
+    else EqTomb(entryVer(e), applyRenames(frame, chain, entryVer(e)))
   }
 
   // —— column renames / adds / drops (field-id schema evolution
@@ -389,26 +395,42 @@ object Versioned {
     // the UNION of all applicable positional sets (coordinates are
     // globally unique, so sets union safely); the sets are key-scale
     // and AQE broadcasts them.
+    // a frame that already carries the coordinates (see
+    // [[withCoords]]) keeps them for its caller
     val posSets = tombs.collect { case PosTomb(_, d) => d }
     val withPos =
       if (posSets.isEmpty) df
-      else {
-        val keys = posSets.reduce(_.unionByName(_))
-          .select(col("file").as("__dfile"), col("pos").as("__dpos"))
-        df.withColumn("__dfile", col("_metadata.file_path"))
-          .withColumn("__dpos", col("_metadata.row_index"))
-          .join(keys, Seq("__dfile", "__dpos"), "left_anti")
-          .drop("__dfile", "__dpos")
-      }
+      else if (df.columns.contains("__dfile"))
+        posJoin(df, posSets.reduce(_.unionByName(_)), "left_anti")
+      else posJoin(withCoords(df), posSets.reduce(_.unionByName(_)),
+        "left_anti").drop("__dfile", "__dpos")
     tombs.collect { case EqTomb(_, t) => t }
-      .foldLeft(withPos) { case (d, t) =>
-        val cols = t.columns.toSeq
-        val missing = cols.filterNot(d.columns.contains)
-        val padded = missing.foldLeft(d)((acc, c) =>
-          acc.withColumn(c, lit(null).cast(t.schema(c).dataType)))
-        val cond = cols.map(c => padded(c) <=> t(c)).reduce(_ && _)
-        padded.join(t, cond, "left_anti").drop(missing: _*)
-      }
+      .foldLeft(withPos)(eqJoin(_, _, "left_anti"))
+  }
+
+  /** A file-source scan with its rows' positional-tombstone
+    * coordinates, `__dfile` and `__dpos`, taken from the reader's
+    * hidden `_metadata` columns while they still resolve. */
+  private def withCoords(scan: DataFrame): DataFrame =
+    scan.withColumn("__dfile", col("_metadata.file_path"))
+      .withColumn("__dpos", col("_metadata.row_index"))
+
+  /** `df` (carrying [[withCoords]]' columns) `how`-joined against a
+    * positional tombstone's (file, pos) coordinates. */
+  private def posJoin(df: DataFrame, pos: DataFrame,
+      how: String): DataFrame =
+    df.join(pos.select(col("file").as("__dfile"), col("pos").as("__dpos")),
+      Seq("__dfile", "__dpos"), how)
+
+  /** `df` `how`-joined against an equality key set by null-safe
+    * equality on its key columns; a key column `df` lacks is null. */
+  private def eqJoin(df: DataFrame, t: DataFrame, how: String): DataFrame = {
+    val cols = t.columns.toSeq
+    val missing = cols.filterNot(df.columns.contains)
+    val padded = missing.foldLeft(df)((acc, c) =>
+      acc.withColumn(c, lit(null).cast(t.schema(c).dataType)))
+    val cond = cols.map(c => padded(c) <=> t(c)).reduce(_ && _)
+    padded.join(t, cond, how).drop(missing: _*)
   }
 
   /** Whether `dir` holds hive partition directories (`col=value/`).
@@ -819,75 +841,6 @@ object Versioned {
         }))
         pool.shutdown()
       }
-    if (populate.isDefined) {
-      // an IMPORT commit: the caller stages pre-existing parquet files
-      // itself (hardlink/copy — no Spark write, no rewrite); counts
-      // come from the foreign files' own footers, the one place the
-      // footer pool is the right tool on the commit path
-      f.mkdirs(stage)
-      populate.get(stage)
-      require(containsParquet(f, stage),
-        s"import staged no parquet files at $stage")
-      if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
-      else writeCountStats(spark, f, stage)
-    } else if (writeData) {
-      // Parquet bloom filters and the declared write order are TABLE
-      // PROPERTIES consumed AT WRITE TIME (Iceberg's
-      // write.parquet.bloom-filter-enabled.column.<col> /
-      // write.sort-order spellings): every data file written while
-      // they are set carries footer blooms for the named columns —
-      // evaluated EXECUTOR-side by parquet's row-group filtering on
-      // =/IN probes, the point-lookup complement to min/max pruning
-      // for high-cardinality keys whose ranges overlap every file —
-      // and is internally sorted by the declared order. An explicit
-      // `props` (CREATE … TBLPROPERTIES) wins; otherwise the table's
-      // current map applies. `declaredOrder = false` lets an explicit
-      // clustering strategy (z-order) opt out of the sort.
-      val effWrite = props.orElse {
-        if (head >= 1) Some(properties(spark, tableDir)) else None
-      }.getOrElse(Map.empty)
-      val distributed = applyDistribution(effWrite, data, partBy)
-      val ordered =
-        if (declaredOrder)
-          applyWriteOrderFrom(effWrite, distributed, partBy)
-        else distributed
-      val w = ordered.write.mode("overwrite")
-        .options(bloomWriteOptions(effWrite) ++
-          compressionOptions(effWrite))
-      val taskRows = harvestWriteCounts(spark) {
-        partBy.fold(w)(c => w.partitionBy(c)).parquet(stage.toString)
-      }
-      // A partitionBy write of an EMPTY frame emits ZERO parquet files
-      // — a schema-less scan root that would brick every later read.
-      // Fall back to a schema-bearing unpartitioned empty write (the
-      // plain CREATE TABLE shape); the _tspec sidecar below still
-      // records the declared spec, which is vacuously true of zero
-      // files and is what later commits INHERIT — this is exactly how
-      // `CREATE TABLE … PARTITIONED BY` publishes its default spec
-      // before any data exists.
-      val allTaskRows =
-        if (partBy.nonEmpty && !containsParquet(f, stage)) {
-          f.delete(stage, true)
-          harvestWriteCounts(spark) {
-            df.limit(0).write.mode("overwrite").parquet(stage.toString)
-          }
-        } else taskRows
-      // the tombstone writes overlap the driver-side stats/sidecar
-      // work below (guide §2.6) — started strictly AFTER the
-      // empty-partitionBy fallback above (which deletes and recreates
-      // the whole stage), awaited before the manifest references them
-      startTombstoneWrites()
-      if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
-      else writeCountStats(spark, f, stage, allTaskRows)
-      // emptiness decides manifest membership below only when the
-      // caller opted in; a zero task-metrics sum is re-verified
-      // against the staged footers (driver-side, rare path) so a
-      // listener hiccup can never drop a data-bearing dir
-      if (dropOwnDirIfEmpty && allTaskRows.valuesIterator.sum == 0L)
-        wroteRows = stagedDataFiles(f, stage).exists(p =>
-          FsFast.footerRowCount(f,
-            spark.sessionState.newHadoopConf(), new Path(p)) > 0L)
-    } else f.mkdirs(stage) // metadata-only commit (rollback, tombstone)
     // The manifest this commit will publish (sans own dir) — assembled
     // HERE so property carry-forward below can reason about
     // reachability; linking chains the base's RAW lines: its
@@ -895,61 +848,9 @@ object Versioned {
     val linked = linkEntries
       .orElse(linkBase.map(b => manifestLines(f, tableDir, b)))
       .getOrElse(Nil)
-    // Table properties ride the manifest walk ([[properties]] consults
-    // LINKED roots), so any commit whose new manifest no longer
-    // references a _props-bearing root must CARRY the current map
-    // forward or it would silently erase the table's properties
-    // (Iceberg properties survive rewrite_data_files). That is decided
-    // by REACHABILITY, not commit shape: a full commit links nothing; a
-    // compact/merge links only SURVIVING entries, which may exclude (or
-    // be empty of) the root that carried _props — e.g. a binpack that
-    // rewrites every base file of a table whose properties configured
-    // that very binpack. An explicit `props` (SET/UNSET, CREATE OR
-    // REPLACE's declared set — possibly empty, which RESETS) always
-    // wins.
-    val effProps = props.orElse {
-      // linkBase appends chain the head's FULL manifest — reachability
-      // is preserved by construction, skip the probe on the hot path.
-      // But ONLY when no linkEntries override it: a binpack passes
-      // linkBase (its race base) AND linkEntries (the surviving
-      // subset), and the SUBSET is what the manifest references — it
-      // must take the reachability probe, or a pack that rewrites
-      // every props-bearing root erases the table's properties
-      // (regression-tested in ProcedureSpec).
-      if (linkBase.isDefined && linkEntries.isEmpty) None
-      else {
-        val propsReachable = linked.filterNot(isDeleteLine)
-          .map(_.split("/").head).distinct.exists(vr =>
-            f.exists(new Path(new Path(tableDir, vr), PropsFile)))
-        if (propsReachable) None
-        else Some(properties(spark, tableDir)).filter(_.nonEmpty)
-      }
-    }
-    effProps.foreach { m =>
-      // full-map snapshot (last-writer-wins): the newest linked root
-      // carrying a _props sidecar IS the table's property state
-      def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
-      FsFast.put(f, new Path(stage, PropsFile),
-        m.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${enc(k)}\t${enc(v)}" }
-          .mkString("\n").getBytes("UTF-8"), overwrite = false)
-    }
-    if (clearSpec) {
-      // [[setSpec]]'s explicit clear: the sentinel stops
-      // currentTransform's inheritance walk at this version
-      FsFast.put(f, new Path(stage, TspecFile),
-        TspecNone.getBytes("UTF-8"), overwrite = false)
-    } else if (!(dropOwnDirIfEmpty && !wroteRows))
-      // an all-deleted rewrite records no spec decision — exactly the
-      // old mergeFiles behavior (it passed transform = None then)
-      transform.foreach(t => writeTspec(f, stage, t,
-        df.schema(t.source).dataType.catalogString,
-        spark.sessionState.conf.sessionLocalTimeZone))
-    // branch + parent + generation sidecar, riding the atomic claim:
-    // head lookups and fast-forward ancestry walks read it
-    // ([[refInfo]]); the generation ties the commit to the CURRENT
-    // incarnation of its branch so a later drop-and-recreate of the
-    // name cannot adopt it ([[branchHeadIn]]'s fence)
+    // the generation ties the commit to the CURRENT incarnation of its
+    // branch so a later drop-and-recreate of the name cannot adopt it
+    // ([[branchHeadIn]]'s fence)
     val targetGen =
       if (!branched) 0L
       else refEntriesFrom(rootSt, BranchPrefix)
@@ -957,33 +858,171 @@ object Versioned {
           case Nil => 0L
           case pins => resolveRef(pins)._4
         }
-    // commit TIMESTAMP, 4th ref field: monotone PER TABLE by
-    // construction (max of the parent commit's stamp and now — a
-    // clock step backwards can't reorder history), so wall-clock
-    // staleness (`graft.mv.staleness_seconds`, time-spelled bounds)
-    // has a sound unit. Filesystem mtimes would not be: copies and
-    // restores rewrite them silently; this stamp rides the immutable
-    // ref sidecar instead. Older 3-field refs parse fine everywhere
-    // (readers ignore extra fields / missing stamps degrade).
-    val commitTs = math.max(System.currentTimeMillis(),
-      if (head >= 1) commitTimestampIn(f, tableDir, head)
-        .getOrElse(0L) else 0L)
-    FsFast.put(f, new Path(stage, RefFile),
-      s"$targetBranch\t$head\t$targetGen\t$commitTs"
-        .getBytes("UTF-8"),
-      overwrite = false)
-    // schema-step sidecar ([[renameColumn]]/[[addColumn]]/
-    // [[dropColumn]]): the chain step readers compose
-    schemaStep.foreach { step =>
-      val (file, payload) = step match {
-        case RenameStep(_, from, to) => (RenameFile, s"$from\t$to")
-        case AddStep(_, n, dt) => (AddColFile, s"$n\t${dt.catalogString}")
-        case DropStep(_, n) => (DropColFile, n)
-        case RetypeStep(_, n, dt) =>
-          (RetypeFile, s"$n\t${dt.catalogString}")
+    // a step between starting the overlapped tombstone write and
+    // awaiting it may throw: cancel the write's job group (and any job
+    // it has yet to submit) and wait for it before the failure
+    // propagates, so no job of a failed commit outlives it
+    def abandonTombstones(): Unit = tombWrite.foreach { fut =>
+      spark.sparkContext.cancelJobGroupAndFutureJobs(
+        s"graft-tombstones-$uuid",
+        "the commit failed before its tombstones landed")
+      Try(fut.get())
+    }
+    try {
+      if (populate.isDefined) {
+        // an IMPORT commit: the caller stages pre-existing parquet files
+        // itself (hardlink/copy — no Spark write, no rewrite); counts
+        // come from the foreign files' own footers, the one place the
+        // footer pool is the right tool on the commit path
+        f.mkdirs(stage)
+        populate.get(stage)
+        require(containsParquet(f, stage),
+          s"import staged no parquet files at $stage")
+        if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
+        else writeCountStats(spark, f, stage)
+      } else if (writeData) {
+        // Parquet bloom filters and the declared write order are TABLE
+        // PROPERTIES consumed AT WRITE TIME (Iceberg's
+        // write.parquet.bloom-filter-enabled.column.<col> /
+        // write.sort-order spellings): every data file written while
+        // they are set carries footer blooms for the named columns —
+        // evaluated EXECUTOR-side by parquet's row-group filtering on
+        // =/IN probes, the point-lookup complement to min/max pruning
+        // for high-cardinality keys whose ranges overlap every file —
+        // and is internally sorted by the declared order. An explicit
+        // `props` (CREATE … TBLPROPERTIES) wins; otherwise the table's
+        // current map applies. `declaredOrder = false` lets an explicit
+        // clustering strategy (z-order) opt out of the sort.
+        val effWrite = props.orElse {
+          if (head >= 1) Some(properties(spark, tableDir)) else None
+        }.getOrElse(Map.empty)
+        val distributed = applyDistribution(effWrite, data, partBy)
+        val ordered =
+          if (declaredOrder)
+            applyWriteOrderFrom(effWrite, distributed, partBy)
+          else distributed
+        val w = ordered.write.mode("overwrite")
+          .options(bloomWriteOptions(effWrite) ++
+            compressionOptions(effWrite))
+        val taskRows = harvestWriteCounts(spark) {
+          partBy.fold(w)(c => w.partitionBy(c)).parquet(stage.toString)
+        }
+        // A partitionBy write of an EMPTY frame emits ZERO parquet files
+        // — a schema-less scan root that would brick every later read.
+        // Fall back to a schema-bearing unpartitioned empty write (the
+        // plain CREATE TABLE shape); the _tspec sidecar below still
+        // records the declared spec, which is vacuously true of zero
+        // files and is what later commits INHERIT — this is exactly how
+        // `CREATE TABLE … PARTITIONED BY` publishes its default spec
+        // before any data exists.
+        val allTaskRows =
+          if (partBy.nonEmpty && !containsParquet(f, stage)) {
+            f.delete(stage, true)
+            harvestWriteCounts(spark) {
+              df.limit(0).write.mode("overwrite").parquet(stage.toString)
+            }
+          } else taskRows
+        // the tombstone writes overlap the driver-side stats/sidecar
+        // work below (guide §2.6) — started strictly AFTER the
+        // empty-partitionBy fallback above (which deletes and recreates
+        // the whole stage), awaited before the manifest references them
+        startTombstoneWrites()
+        if (statsCols.nonEmpty) writeStats(spark, f, stage, statsCols)
+        else writeCountStats(spark, f, stage, allTaskRows)
+        // emptiness decides manifest membership below only when the
+        // caller opted in; a zero task-metrics sum is re-verified
+        // against the staged footers (driver-side, rare path) so a
+        // listener hiccup can never drop a data-bearing dir
+        if (dropOwnDirIfEmpty && allTaskRows.valuesIterator.sum == 0L)
+          wroteRows = stagedDataFiles(f, stage).exists(p =>
+            FsFast.footerRowCount(f,
+              spark.sessionState.newHadoopConf(), new Path(p)) > 0L)
+      } else f.mkdirs(stage) // metadata-only commit (rollback, tombstone)
+      // Table properties ride the manifest walk ([[properties]] consults
+      // LINKED roots), so any commit whose new manifest no longer
+      // references a _props-bearing root must CARRY the current map
+      // forward or it would silently erase the table's properties
+      // (Iceberg properties survive rewrite_data_files). That is decided
+      // by REACHABILITY, not commit shape: a full commit links nothing; a
+      // compact/merge links only SURVIVING entries, which may exclude (or
+      // be empty of) the root that carried _props — e.g. a binpack that
+      // rewrites every base file of a table whose properties configured
+      // that very binpack. An explicit `props` (SET/UNSET, CREATE OR
+      // REPLACE's declared set — possibly empty, which RESETS) always
+      // wins.
+      val effProps = props.orElse {
+        // linkBase appends chain the head's FULL manifest — reachability
+        // is preserved by construction, skip the probe on the hot path.
+        // But ONLY when no linkEntries override it: a binpack passes
+        // linkBase (its race base) AND linkEntries (the surviving
+        // subset), and the SUBSET is what the manifest references — it
+        // must take the reachability probe, or a pack that rewrites
+        // every props-bearing root erases the table's properties
+        // (regression-tested in ProcedureSpec).
+        if (linkBase.isDefined && linkEntries.isEmpty) None
+        else {
+          val propsReachable = linked.filterNot(isDeleteLine)
+            .map(_.split("/").head).distinct.exists(vr =>
+              f.exists(new Path(new Path(tableDir, vr), PropsFile)))
+          if (propsReachable) None
+          else Some(properties(spark, tableDir)).filter(_.nonEmpty)
+        }
       }
-      FsFast.put(f, new Path(stage, file),
-        payload.getBytes("UTF-8"), overwrite = false)
+      effProps.foreach { m =>
+        // full-map snapshot (last-writer-wins): the newest linked root
+        // carrying a _props sidecar IS the table's property state
+        def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
+        FsFast.put(f, new Path(stage, PropsFile),
+          m.toSeq.sortBy(_._1)
+            .map { case (k, v) => s"${enc(k)}\t${enc(v)}" }
+            .mkString("\n").getBytes("UTF-8"), overwrite = false)
+      }
+      if (clearSpec) {
+        // [[setSpec]]'s explicit clear: the sentinel stops
+        // currentTransform's inheritance walk at this version
+        FsFast.put(f, new Path(stage, TspecFile),
+          TspecNone.getBytes("UTF-8"), overwrite = false)
+      } else if (!(dropOwnDirIfEmpty && !wroteRows))
+        // an all-deleted rewrite records no spec decision — exactly the
+        // old mergeFiles behavior (it passed transform = None then)
+        transform.foreach(t => writeTspec(f, stage, t,
+          df.schema(t.source).dataType.catalogString,
+          spark.sessionState.conf.sessionLocalTimeZone))
+      // branch + parent + generation sidecar, riding the atomic claim:
+      // head lookups and fast-forward ancestry walks read it
+      // ([[refInfo]])
+      // commit TIMESTAMP, 4th ref field: monotone PER TABLE by
+      // construction (max of the parent commit's stamp and now — a
+      // clock step backwards can't reorder history), so wall-clock
+      // staleness (`graft.mv.staleness_seconds`, time-spelled bounds)
+      // has a sound unit. Filesystem mtimes would not be: copies and
+      // restores rewrite them silently; this stamp rides the immutable
+      // ref sidecar instead. Older 3-field refs parse fine everywhere
+      // (readers ignore extra fields / missing stamps degrade).
+      val commitTs = math.max(System.currentTimeMillis(),
+        if (head >= 1) commitTimestampIn(f, tableDir, head)
+          .getOrElse(0L) else 0L)
+      FsFast.put(f, new Path(stage, RefFile),
+        s"$targetBranch\t$head\t$targetGen\t$commitTs"
+          .getBytes("UTF-8"),
+        overwrite = false)
+      // schema-step sidecar ([[renameColumn]]/[[addColumn]]/
+      // [[dropColumn]]): the chain step readers compose
+      schemaStep.foreach { step =>
+        val (file, payload) = step match {
+          case RenameStep(_, from, to) => (RenameFile, s"$from\t$to")
+          case AddStep(_, n, dt) => (AddColFile, s"$n\t${dt.catalogString}")
+          case DropStep(_, n) => (DropColFile, n)
+          case RetypeStep(_, n, dt) =>
+            (RetypeFile, s"$n\t${dt.catalogString}")
+        }
+        FsFast.put(f, new Path(stage, file),
+          payload.getBytes("UTF-8"), overwrite = false)
+      }
+    } catch {
+      case e: Throwable =>
+        abandonTombstones()
+        throw e
     }
     // tombstone sets land before the manifest references them: await
     // the overlapped write (rethrowing its failure), or write
@@ -1497,68 +1536,24 @@ object Versioned {
   def readChanges(spark: SparkSession, tableDir: String,
       fromVersion: Int, toVersion: Int): DataFrame = {
     val f = fs(spark, tableDir)
-    val cur = currentVersion(spark, tableDir)
-    require(fromVersion >= 0 && fromVersion < toVersion,
-      s"need 0 <= fromVersion < toVersion, got ($fromVersion, $toVersion)")
-    require(toVersion <= cur,
-      s"toVersion $toVersion exceeds current version $cur at $tableDir")
-    val retained = committedVersions(spark, tableDir).toSet
-    // parent-lineage walk (newest first); linear tables chain v-1
-    val lineage = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var w = toVersion
-    while (w > fromVersion && w > 0) { lineage += w
-      w = refInfo(f, tableDir, w)._2 }
-    require(w == fromVersion, s"v=$fromVersion is not an ancestor of " +
-      s"v=$toVersion at $tableDir (lineage reached v=$w)")
-    val gone = (lineage.toSeq ++
-      (if (fromVersion > 0) Seq(fromVersion) else Nil))
-      .filterNot(retained.contains)
-    require(gone.isEmpty, s"cannot read changes at $tableDir: " +
-      s"version(s) ${gone.sorted.mkString(", ")} were expired by vacuum")
+    val lineage = changeLineage(spark, f, tableDir, fromVersion, toVersion)
     val chain = renameChain(f, tableDir, toVersion)
     val root = qualifiedRoot(f, tableDir)
-
-    // live rows of a set of table-relative files as of a snapshot whose
-    // tombstones are `tombs` — grouped per version dir (schema/epoch/
-    // basePath cohesion), renamed forward to toVersion's columns
-    def liveRows(rels: Seq[String], tombs: Seq[Tomb]): Option[DataFrame] =
-      if (rels.isEmpty) None
-      else Some(hideDerived(rels.groupBy(_.split("/").head).toSeq
-        .sortBy(_._1).map { case (vdir, fls) =>
-          val ver = vdir.stripPrefix("v=").toInt
-          applyDeletes(
-            applySchemaSteps(scanUnit(spark, ScanUnit(
-              fls.map(r => new Path(tableDir, r).toString),
-              Some(new Path(tableDir, vdir).toString),
-              ownerEpoch(f, tableDir, vdir))), chain, ver),
-            tombs.filter(_.ver > ver))
-        }.reduce(_.unionByName(_, allowMissingColumns = true))))
-
-    // a snapshot's tombstones with the (v, toVersion] rename suffix
-    // applied, so their anti-join columns line up with liveRows frames
-    def tombsAt(v: Int): Seq[Tomb] =
-      if (v == 0) Nil
-      else manifestDeletes(spark, f, tableDir, v).map {
-        case EqTomb(ver, d) => EqTomb(ver, applyRenames(d, chain, v))
-        case t => t
-      }
-
     val events = lineage.reverse.flatMap { v =>
       val p = refInfo(f, tableDir, v)._2
       val prevLines =
         if (p == 0) Nil else manifestLines(f, tableDir, p)
       val curLines = manifestLines(f, tableDir, v)
-      def fileSet(lines: Seq[String]): Set[String] =
-        lines.filterNot(isDeleteLine)
-          .flatMap(e => entryFiles(f, tableDir, e)).toSet
       if (prevLines == curLines) Nil // metadata-only commit
       else {
-        val prevFiles = fileSet(prevLines)
-        val curFiles = fileSet(curLines)
-        val remLive =
-          liveRows((prevFiles -- curFiles).toSeq.sorted, tombsAt(p))
-        val addLive =
-          liveRows((curFiles -- prevFiles).toSeq.sorted, tombsAt(v))
+        val prevFiles = dataFilesOf(f, tableDir, prevLines)
+        val curFiles = dataFilesOf(f, tableDir, curLines)
+        val remLive = liveRows(spark, f, tableDir, chain,
+          (prevFiles -- curFiles).toSeq.sorted,
+          tombsAt(spark, f, tableDir, chain, prevLines).map(_._2))
+        val addLive = liveRows(spark, f, tableDir, chain,
+          (curFiles -- prevFiles).toSeq.sorted,
+          tombsAt(spark, f, tableDir, chain, curLines).map(_._2))
         // net the carried rows a rewrite re-homes — only when the two
         // sides share columns (a full replace that changed the schema
         // has nothing to net: every row genuinely changed)
@@ -1571,33 +1566,19 @@ object Versioned {
         }
         val tombEvents = curLines.filter(isDeleteLine)
           .filterNot(prevLines.contains).map { line =>
-            val e = line.stripPrefix(DeletePrefix)
-            val frame = scanUnit(spark, ScanUnit(
-              deleteEntryFiles(f, tableDir, e).map(_.toString), None,
-              ownerEpoch(f, tableDir, e.split("/").head)))
-            if (e.endsWith("/" + PosDeletesDir)) {
-              // coordinates name exact prior-live rows; scan ONLY the
-              // referenced files (the collect is tombstone-scale)
-              val touched = frame.select("file").distinct().collect()
-                .map(r => decodePath(r.getString(0))
-                  .stripPrefix(root + "/")).toSeq
-              val scans = touched.groupBy(_.split("/").head).toSeq
-                .sortBy(_._1).map { case (vdir, fls) =>
-                  val ver = vdir.stripPrefix("v=").toInt
-                  applySchemaSteps(scanUnit(spark, ScanUnit(
-                    fls.map(r => new Path(tableDir, r).toString),
-                    Some(new Path(tableDir, vdir).toString),
-                    ownerEpoch(f, tableDir, vdir)))
-                    .withColumn("__dfile", col("_metadata.file_path"))
-                    .withColumn("__dpos", col("_metadata.row_index")),
-                    chain, ver)
-                }.reduce(_.unionByName(_, allowMissingColumns = true))
-              hideDerived(scans.join(frame
-                  .select(col("file").as("__dfile"),
-                    col("pos").as("__dpos")),
-                  Seq("__dfile", "__dpos"), "left_semi")
-                .drop("__dfile", "__dpos"))
-            } else applyRenames(frame, chain, v)
+            tombOf(spark, f, tableDir, chain, line) match {
+              case PosTomb(_, frame) =>
+                // coordinates name exact prior-live rows; scan ONLY the
+                // referenced files (the collect is tombstone-scale)
+                val touched = frame.select("file").distinct().collect()
+                  .map(r => decodePath(r.getString(0))
+                    .stripPrefix(root + "/")).toSeq
+                perVersionDir(spark, f, tableDir, chain, touched) {
+                  (scan, _) => posJoin(withCoords(scan), frame, "left_semi")
+                    .drop("__dfile", "__dpos")
+                }.get
+              case t => t.df
+            }
           }
         def tagged(d: DataFrame, tp: String) = d
           .withColumn(ChangeTypeCol, lit(tp))
@@ -1619,6 +1600,260 @@ object Versioned {
     else shell.unionByName(
       events.reduce(_.unionByName(_, allowMissingColumns = true)),
       allowMissingColumns = true)
+  }
+
+  /** The parent lineage of a change window, newest first: the versions
+    * in `(fromVersion, toVersion]` on `toVersion`'s parent chain.
+    * Refuses a window whose `fromVersion` is not an ancestor of
+    * `toVersion`, or any version of which [[vacuum]] expired. */
+  private def changeLineage(spark: SparkSession, f: FileSystem,
+      tableDir: String, fromVersion: Int, toVersion: Int): Seq[Int] = {
+    val cur = currentVersion(spark, tableDir)
+    require(fromVersion >= 0 && fromVersion < toVersion,
+      s"need 0 <= fromVersion < toVersion, got ($fromVersion, $toVersion)")
+    require(toVersion <= cur,
+      s"toVersion $toVersion exceeds current version $cur at $tableDir")
+    val retained = committedVersions(spark, tableDir).toSet
+    // parent-lineage walk (newest first); linear tables chain v-1
+    val lineage = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var w = toVersion
+    while (w > fromVersion && w > 0) { lineage += w
+      w = refInfo(f, tableDir, w)._2 }
+    require(w == fromVersion, s"v=$fromVersion is not an ancestor of " +
+      s"v=$toVersion at $tableDir (lineage reached v=$w)")
+    val gone = (lineage.toSeq ++
+      (if (fromVersion > 0) Seq(fromVersion) else Nil))
+      .filterNot(retained.contains)
+    require(gone.isEmpty, s"cannot read changes at $tableDir: " +
+      s"version(s) ${gone.sorted.mkString(", ")} were expired by vacuum")
+    lineage.toSeq
+  }
+
+  /** Table-relative data files of a snapshot's manifest lines. */
+  private def dataFilesOf(f: FileSystem, tableDir: String,
+      lines: Seq[String]): Set[String] =
+    lines.filterNot(isDeleteLine)
+      .flatMap(e => entryFiles(f, tableDir, e)).toSet
+
+  /** Live rows of a set of table-relative files as of a snapshot whose
+    * tombstones are `tombs` — grouped per version dir (schema/epoch/
+    * basePath cohesion), evolved forward through `chain`. */
+  private def liveRows(spark: SparkSession, f: FileSystem,
+      tableDir: String, chain: Seq[SchemaStep], rels: Seq[String],
+      tombs: Seq[Tomb]): Option[DataFrame] =
+    perVersionDir(spark, f, tableDir, chain, rels) { (scan, ver) =>
+      applyDeletes(scan, tombs.filter(_.ver > ver))
+    }
+
+  /** The rows of a set of table-relative files that tombstone `t`
+    * matches and `kept` (the other tombstones in force) leave live —
+    * what `t` alone adds to or takes from a snapshot holding those
+    * files. Only the matched rows leave the scan. */
+  private def tombMatches(spark: SparkSession, f: FileSystem,
+      tableDir: String, chain: Seq[SchemaStep], rels: Seq[String],
+      kept: Seq[Tomb], t: Tomb): Option[DataFrame] =
+    perVersionDir(spark, f, tableDir, chain, rels) { (scan, ver) =>
+      val live = applyDeletes(withCoords(scan), kept.filter(_.ver > ver))
+      (t match {
+        case PosTomb(_, d) => posJoin(live, d, "left_semi")
+        case EqTomb(_, d) => eqJoin(live, d, "left_semi")
+      }).drop("__dfile", "__dpos")
+    }
+
+  /** `rows` over the scans of a set of table-relative files, one scan
+    * per version dir (schema/epoch/basePath cohesion) evolved forward
+    * through `chain`, unioned; None for no files. */
+  private def perVersionDir(spark: SparkSession, f: FileSystem,
+      tableDir: String, chain: Seq[SchemaStep], rels: Seq[String])(
+      rows: (DataFrame, Int) => DataFrame): Option[DataFrame] =
+    if (rels.isEmpty) None
+    else Some(hideDerived(rels.groupBy(_.split("/").head).toSeq
+      .sortBy(_._1).map { case (vdir, fls) =>
+        val ver = vdir.stripPrefix("v=").toInt
+        rows(applySchemaSteps(scanUnit(spark, ScanUnit(
+          fls.map(r => new Path(tableDir, r).toString),
+          Some(new Path(tableDir, vdir).toString),
+          ownerEpoch(f, tableDir, vdir))), chain, ver), ver)
+      }.reduce(_.unionByName(_, allowMissingColumns = true))))
+
+  /** A snapshot's tombstones (from its manifest `lines`) keyed by
+    * their line, renamed through `chain` so their anti-join columns
+    * line up with [[liveRows]] frames. */
+  private def tombsAt(spark: SparkSession, f: FileSystem,
+      tableDir: String, chain: Seq[SchemaStep],
+      lines: Seq[String]): Seq[(String, Tomb)] =
+    lines.filter(isDeleteLine)
+      .map(l => l -> tombOf(spark, f, tableDir, chain, l))
+
+  /** Name of [[netChanges]]' signed multiplicity column. */
+  val ChangeWeightCol = "_change_weight"
+
+  /** NET snapshot diff — the `create_changelog_view(net_changes =>
+    * true)` analog: the signed bag difference `read(toVersion) −
+    * read(fromVersion)` of two snapshots on one lineage, planned from
+    * their two manifests instead of walking every commit between them.
+    * Output: `toVersion`'s columns plus [[ChangeWeightCol]] (a long,
+    * never 0): +n for a row `toVersion` holds n more times than
+    * `fromVersion`, −n for one it holds n fewer times. A row rewritten
+    * unchanged (compaction, copy-on-write carry-over) and a row
+    * inserted and deleted inside the window net to nothing, so a
+    * metadata-only window is empty.
+    *
+    * The rows come from three places, netted by ONE aggregation over
+    * all columns:
+    *   - files only in `toVersion`, live there (+1);
+    *   - files only in `fromVersion`, live there (−1);
+    *   - in files both snapshots share, only the rows a tombstone
+    *     present in exactly one of the two snapshots matches, live
+    *     under the tombstones both hold: −1 for a tombstone only
+    *     `toVersion` holds, +1 for one only `fromVersion` holds (a
+    *     row several tombstones of one side match counts once). A
+    *     positional tombstone names its files, and an equality
+    *     tombstone prunes through the files' stats sidecars the way
+    *     [[readWhereIn]] does, so a shared file no such tombstone can
+    *     touch is never scanned; one without stats on the key is
+    *     scanned, but only its matched rows reach the aggregation.
+    * Deleted rows carry every column — unlike [[readChanges]]'
+    * key-only equality-delete events. Older frames evolve forward
+    * through the schema-step chain, so every row carries
+    * `toVersion`'s names. Same lineage and vacuum refusals as
+    * [[readChanges]]. */
+  def netChanges(spark: SparkSession, tableDir: String,
+      fromVersion: Int, toVersion: Int): DataFrame = {
+    val f = fs(spark, tableDir)
+    changeLineage(spark, f, tableDir, fromVersion, toVersion)
+    val chain = renameChain(f, tableDir, toVersion)
+    def linesAt(v: Int) = if (v == 0) Nil else manifestLines(f, tableDir, v)
+    val (fromManifest, toManifest) =
+      (linesAt(fromVersion), linesAt(toVersion))
+    val fromFiles = dataFilesOf(f, tableDir, fromManifest)
+    val toFiles = dataFilesOf(f, tableDir, toManifest)
+    val fromTombs = tombsAt(spark, f, tableDir, chain, fromManifest)
+    val toTombs = tombsAt(spark, f, tableDir, chain, toManifest)
+    val common = toTombs.filter(t => fromManifest.contains(t._1)).map(_._2)
+    val oneSided =
+      fromTombs.filterNot(t => toManifest.contains(t._1)).map(_._2 -> 1L) ++
+      toTombs.filterNot(t => fromManifest.contains(t._1)).map(_._2 -> -1L)
+    val touched = tombTouchedFiles(spark, f, tableDir, chain,
+      fromFiles.intersect(toFiles), oneSided.map(_._1))
+    def side(files: Set[String], tombs: Seq[(String, Tomb)],
+        w: Long): Option[DataFrame] =
+      liveRows(spark, f, tableDir, chain, files.toSeq.sorted,
+        tombs.map(_._2)).map(_.withColumn(ChangeWeightCol, lit(w)))
+    // each one-sided tombstone's leg skips the rows an earlier
+    // tombstone of its side already matched
+    val flips = oneSided.zip(touched).zipWithIndex.flatMap {
+      case (((t, w), rels), i) =>
+        val earlier = oneSided.take(i).collect { case (e, `w`) => e }
+        tombMatches(spark, f, tableDir, chain, rels.toSeq.sorted,
+          common ++ earlier, t).map(_.withColumn(ChangeWeightCol, lit(w)))
+    }
+    val shell = read(spark, tableDir, Some(toVersion)).limit(0)
+    val cols = shell.columns.toSeq
+    val signed = side(toFiles -- fromFiles, toTombs, 1L).toSeq ++
+      side(fromFiles -- toFiles, fromTombs, -1L) ++ flips
+    val anchored = shell.withColumn(ChangeWeightCol, lit(0L))
+    if (signed.isEmpty) anchored
+    else anchored.unionByName(
+        signed.reduce(_.unionByName(_, allowMissingColumns = true)),
+        allowMissingColumns = true)
+      .groupBy(cols.map(col): _*)
+      .agg(sum(col(ChangeWeightCol)).as(ChangeWeightCol))
+      .filter(col(ChangeWeightCol) =!= 0L)
+  }
+
+  /** Per tombstone of `tombs`, the files of `shared` it may touch. A
+    * positional tombstone names its files; an equality tombstone
+    * touches a file older than itself unless the file's stats sidecar
+    * proves no key row lies inside its (min, max) on some key column —
+    * the [[readWhereIn]] rule (a null key or bound, a failed cast, or
+    * a column a schema step renamed since the file was written keeps
+    * the file: degrade, never lie). One Spark job over the key-scale
+    * tombstone frames decides every file the stats cannot settle
+    * alone. */
+  private def tombTouchedFiles(spark: SparkSession, f: FileSystem,
+      tableDir: String, chain: Seq[SchemaStep], shared: Set[String],
+      tombs: Seq[Tomb]): Seq[Set[String]] = {
+    if (shared.isEmpty) return tombs.map(_ => Set.empty[String])
+    val root = qualifiedRoot(f, tableDir)
+    def verOf(rel: String) = rel.split("/").head.stripPrefix("v=").toInt
+    lazy val statsByRoot = shared.map(_.split("/").head).toSeq.distinct
+      .map(vr => vr -> readStatsFile(spark, f, tableDir, vr)
+        .groupBy(_.file)).toMap
+    // per equality tombstone, each older shared file with the stats
+    // rows of its key columns: a file without any is kept outright,
+    // the rest are evaluated grouped by their (column, dtype) bounds so
+    // each group is one typed frame
+    val (unbounded, probes) = tombs.zipWithIndex
+      .collect { case (t: EqTomb, i) => (t, i) }
+      .flatMap { case (t, i) =>
+        val keyCols = t.df.columns.toSeq
+        shared.toSeq.sorted.filter(verOf(_) < t.ver).map { rel =>
+          val vr = rel.split("/").head
+          val stale = chain.filter(_.ver > verOf(rel)).flatMap {
+            case RenameStep(_, from, to) => Seq(from, to)
+            case AddStep(_, n, _) => Seq(n)
+            case DropStep(_, n) => Seq(n)
+            case RetypeStep(_, n, _) => Seq(n)
+          }.toSet
+          ((t, i), rel, statsByRoot(vr)
+            .getOrElse(rel.stripPrefix(vr + "/"), Nil)
+            .filter(sr => keyCols.contains(sr.col) && !stale(sr.col))
+            .sortBy(_.col))
+        }
+      }.partition(_._3.isEmpty)
+    import scala.jdk.CollectionConverters._
+    val legs: Seq[DataFrame] = probes
+      .groupBy { case (ti, _, b) => (ti, b.map(sr => (sr.col, sr.dtype))) }
+      .toSeq.map { case (((t, i), shape), rows) =>
+        val local = rows.map { case (_, rel, b) =>
+          rel +: b.flatMap(sr => Seq(sr.minV, sr.maxV)) }
+        val names = "__rel" +: shape.indices.flatMap(i =>
+          Seq(s"__min$i", s"__max$i"))
+        val frame = spark.createDataFrame(
+          local.map(org.apache.spark.sql.Row.fromSeq(_)).asJava,
+          StructType(names.map(StructField(_, StringType))))
+        val hit = shape.zipWithIndex.map { case ((c, dt), i) =>
+          val lo = statBoundCol(dt)(col(s"__min$i"))
+          val hi = statBoundCol(dt)(col(s"__max$i"))
+          t.df(c).isNull || lo.isNull || hi.isNull ||
+            (t.df(c) >= lo && t.df(c) <= hi)
+        }.reduce(_ && _)
+        frame.join(t.df, hit, "left_semi")
+          .select(lit(i).as("__t"), col("__rel"))
+      } ++ tombs.zipWithIndex.collect { case (PosTomb(_, d), i) =>
+        d.select(lit(i).as("__t"), col("file").as("__rel")) }
+    val named =
+      if (legs.isEmpty) Seq.empty[(Int, String)]
+      else legs.reduce(_ union _).distinct().collect().toSeq
+        .map(r => r.getInt(0) -> r.getString(1)).map { case (i, p) =>
+          i -> (if (p.startsWith("v=")) p
+            else decodePath(p).stripPrefix(root + "/"))
+        }
+    val byTomb = (unbounded.map { case ((_, i), rel, _) => i -> rel } ++
+      named.filter(n => shared(n._2))).groupBy(_._1)
+    tombs.indices.map(i => byTomb.getOrElse(i, Nil).map(_._2).toSet)
+  }
+
+  /** Key columns of every EQUALITY tombstone a commit in `(fromVersion,
+    * toVersion]` added, at `toVersion`'s names — the schema of its
+    * one-file key set comes from the footer, no Spark job. A refresh
+    * that locates changed rows by a key column refuses a window whose
+    * tombstones key on other columns. */
+  private[sources] def equalityDeleteKeys(spark: SparkSession,
+      tableDir: String, fromVersion: Int,
+      toVersion: Int): Seq[Seq[String]] = {
+    val f = fs(spark, tableDir)
+    val chain = renameChain(f, tableDir, toVersion)
+    changeLineage(spark, f, tableDir, fromVersion, toVersion).flatMap { v =>
+      val p = refInfo(f, tableDir, v)._2
+      val prev = if (p == 0) Set.empty[String]
+        else manifestLines(f, tableDir, p).toSet
+      manifestLines(f, tableDir, v)
+        .filter(l => isDeleteLine(l) && !prev(l) &&
+          !l.endsWith("/" + PosDeletesDir))
+    }.distinct
+      .map(tombOf(spark, f, tableDir, chain, _).df.columns.toSeq)
   }
 
   /** APPEND as a new snapshot: the published version holds the previous

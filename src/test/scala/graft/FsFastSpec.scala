@@ -174,4 +174,71 @@ class FsFastSpec extends SparkSpec {
       .head().getLong(0) == 3L)
     assert(Versioned.footerOpenCount.get() == before)
   }
+
+  test("a commit failing while its tombstone write runs cancels and " +
+      "awaits that write before the failure reaches the caller") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf}
+    import graft.sources.Versioned
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.mock.impl", classOf[MockRemoteFs].getName)
+    val local = new java.io.File(s"$work/remote_tomb").getAbsoluteFile
+    org.apache.commons.io.FileUtils.deleteQuietly(local)
+    val t = "mock:" + local.getPath
+    Versioned.commit(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"), t)
+    val TombGroup = "graft-tombstones-"
+    // the delete-key frame sleeps only inside the tombstone write's
+    // job group, so the commit's other actions run at full speed
+    val slowInTombstones = udf { (k: Int) =>
+      val g = org.apache.spark.TaskContext.get()
+        .getLocalProperty("spark.jobGroup.id")
+      if (g != null && g.startsWith(TombGroup)) Thread.sleep(20000)
+      k
+    }.asNondeterministic()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(TombGroup)).foreach(groups.add)
+    }
+    def waitFor(what: String, ms: Long)(cond: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + ms
+      while (!cond && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(cond, what)
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the commit's _ref put fails once its tombstone job is running
+      MockRemoteFs.failNextCreate("_ref", () =>
+        waitFor("the tombstone write started", 30000)(!groups.isEmpty))
+      val e = intercept[java.io.IOException](
+        Versioned.applyChanges(spark, t,
+          upserts = Seq((4, "d")).toDF("id", "v"),
+          // a range, not a local relation: the optimizer would fold
+          // the UDF over literal rows on the driver
+          deleteKeys = spark.range(2, 3)
+            .select(slowInTombstones(col("id").cast("int")).as("id")),
+          key = "id"))
+      assert(e.getMessage.contains("injected create failure"))
+      // the job-end event reaches the status store over the listener
+      // bus right after the scheduler fails the job; a write left
+      // running would sleep on for ~20 s
+      val group = groups.peek()
+      def running = sc.statusTracker.getJobIdsForGroup(group).toSeq
+        .flatMap(sc.statusTracker.getJobInfo(_))
+        .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+      waitFor("the tombstone job was cancelled", 2000)(
+        sc.statusTracker.getJobIdsForGroup(group).nonEmpty &&
+          running.isEmpty)
+      // the failed commit published nothing
+      assert(Versioned.currentVersion(spark, t) == 1)
+      assert(Versioned.read(spark, t).count() == 3)
+    } finally {
+      MockRemoteFs.clearFaults()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level layering guard: verification gates (whole lifecycles
   * over fixture copies, one oracle row each) live in `graft.gates`,
-  * and the engine never depends on them. */
+  * the engine never depends on them, and every view refresh reads
+  * the one net-diff path ([[graft.sources.Versioned.netChanges]]). */
 class LayeringSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -24,6 +25,13 @@ class LayeringSpec extends AnyFunSuite {
         s"$name references Tables")
       assert(!src.contains("FixturePool"), s"$name references FixturePool")
     }
+  }
+
+  test("DerivedTable refreshes from one net diff, never the " +
+      "per-version changelog") {
+    val src = text(main.resolve("sources").resolve("DerivedTable.scala"))
+    assert(!src.contains("readChanges"),
+      "DerivedTable.scala references readChanges")
   }
 
   test("engine packages never import graft.gates") {

@@ -33,8 +33,38 @@ class MockRawFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
   override def getFileStatus(p: Path): FileStatus =
     fixed(super.getFileStatus(p))
+
+  // every create (FsFast.put, Spark's writers) reaches the raw fs here
+  override def create(p: Path, perm: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    MockRemoteFs.injectCreateFault(p)
+    super.create(p, perm, overwrite, bufferSize, replication, blockSize,
+      progress)
+  }
 }
 
 object MockRemoteFs {
   val uri: java.net.URI = java.net.URI.create("mock:///")
+
+  private val createFault =
+    new java.util.concurrent.atomic.AtomicReference[(String, () => Unit)]()
+
+  /** Fault hook: the next create of a file named `name` under a mock
+    * path runs `before`, then fails once with an IOException. */
+  def failNextCreate(name: String, before: () => Unit = () => ()): Unit =
+    createFault.set((name, before))
+
+  /** Drop a fault that never fired. */
+  def clearFaults(): Unit = createFault.set(null)
+
+  private[graft] def injectCreateFault(p: org.apache.hadoop.fs.Path): Unit = {
+    val fault = createFault.get()
+    if (fault != null && fault._1 == p.getName &&
+        createFault.compareAndSet(fault, null)) {
+      fault._2()
+      throw new java.io.IOException(s"injected create failure: $p")
+    }
+  }
 }
