@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.sources.Tables
 import graft.functions.{GraftFunctions, VectorFunctions}
 
@@ -705,9 +706,9 @@ object Dedup {
   private def dedupTombsDir(indexDir: String): String = s"$indexDir.tombs"
 
   /** Live tombstoned doc_ids of the dedup index (empty frame when
-    * none) at `version` — pinned by callers whose returned frames
-    * must stay stable however late they evaluate. Bounded between
-    * compactions, so the probes' anti-joins broadcast. */
+    * none) at `version` — pinned by callers that read the index
+    * state more than once in one call. Bounded between compactions,
+    * so the probes' anti-joins broadcast. */
   private def dedupTombs(s: SparkSession, indexDir: String,
       version: Option[Int] = None): DataFrame = {
     val td = dedupTombsDir(indexDir)
@@ -880,8 +881,8 @@ object Dedup {
   def ingestDedup(s: SparkSession, newDocs: DataFrame,
       indexDir: String, minJ: Double = 0.5,
       allowReingest: Boolean = false): DataFrame = {
-    // the probe pins the PRE-append snapshot, so the returned verdict
-    // frame stays stable however late a caller evaluates it — an
+    // the probe pins the PRE-append snapshot, so the refusals, the
+    // probe and a sketch recompute all read one index state — an
     // unpinned read would see the survivors this call appends and
     // match them against themselves
     val v0 = Versioned.currentVersion(s, indexDir)
@@ -889,8 +890,8 @@ object Dedup {
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
     requireOneRowPerDoc(newDocs, "ingestDedup")
     val sigsPin = dedupSigsPin(s, indexDir)
-    // tombstones pinned like every other probe input, so the verdict
-    // frame recomputes identically however late it evaluates
+    // tombstones pinned like every other probe input, so every read
+    // of this call sees one tombstone state
     val tombsV = Versioned.currentVersion(s, dedupTombsDir(indexDir))
     val tombsPinned = dedupTombs(s, indexDir,
       Some(tombsV).filter(_ > 0))
@@ -964,28 +965,31 @@ object Dedup {
           NumPerms.toDouble >= minJ)
         .groupBy(col("new_id"))
         .agg(min(col("dup_of")).as("dup_of"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val survivorSketch = sketch.join(
-          dups.select(col("new_id").as("doc_id")),
-          Seq("doc_id"), "left_anti")
-        if (!survivorSketch.isEmpty) {
-          val sv = Versioned.append(
-            survivorSketch.select(col("doc_id"), col("sig")),
-            dedupSigsDir(indexDir), statsCols = Seq("doc_id"))
-          Versioned.append(bandRowsOf(survivorSketch), indexDir,
-            partitionCol = Some("band"), note = Some(s"sigs=v$sv"),
-            statsCols = Seq("doc_id"))
-        }
-        // the verdict stays a DISTRIBUTED frame (batch-scale): every
-        // input in the probe plan is pinned (v0 / sigsPin) or
-        // deterministic, so late evaluation reproduces it exactly
-        newDocs.select(col("doc_id"))
-          .join(dups.withColumnRenamed("new_id", "doc_id"),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"), col("dup_of").isNull.as("kept"),
-            col("dup_of"))
-      } finally dups.unpersist(blocking = false)
+      // the probe runs ONCE: its drop set (at most one row per batch
+      // doc — the verdict's own scale) collects to the driver, and
+      // the append and the returned verdict are two views of it
+      val drops = broadcast(s.createDataFrame(dups.collect().toSeq.asJava,
+        dups.schema))
+      val survivorSketch = sketch.join(
+        drops.select(col("new_id").as("doc_id")), Seq("doc_id"),
+        "left_anti")
+      if (!survivorSketch.isEmpty) {
+        val sv = Versioned.append(
+          survivorSketch.select(col("doc_id"), col("sig")),
+          dedupSigsDir(indexDir), statsCols = Seq("doc_id"))
+        Versioned.append(bandRowsOf(survivorSketch), indexDir,
+          partitionCol = Some("band"), note = Some(s"sigs=v$sv"),
+          statsCols = Seq("doc_id"))
+      }
+      // the verdict is bounded by the batch: its id column joined with
+      // the materialized drop set, no cache and no index read, so a
+      // late evaluation rescans only the ids and cannot drift as the
+      // index moves on
+      newDocs.select(col("doc_id"))
+        .join(drops.withColumnRenamed("new_id", "doc_id"),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), col("dup_of").isNull.as("kept"),
+          col("dup_of"))
     } finally sketch.unpersist(blocking = false)
   }
 

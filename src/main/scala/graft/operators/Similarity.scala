@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
 import graft.sources.{Tables, Versioned}
 import graft.functions.GraftFunctions
 import graft.functions.VectorFunctions._
@@ -1405,8 +1406,9 @@ object Similarity {
     * code bytes only ADC-approximate cosines, and near-dup thresholds
     * sit above ADC noise. Returns (vec_id, kept, dup_of — null when
     * kept); survivors are appended at the pinned centroid generation
-    * before the verdict returns (the probe reads the PRE-append
-    * snapshot, so late evaluation stays stable). */
+    * before the verdict returns. The probe runs once: the verdict is
+    * the batch's ids joined with its drop set, materialized on the
+    * driver, so it holds no index read and is bounded by the batch. */
   def ingestDedupVectors(s: SparkSession, newVectors: DataFrame,
       indexDir: String, minCos: Double = 0.98): DataFrame = {
     val v0 = Versioned.currentVersion(s, indexDir)
@@ -1439,8 +1441,8 @@ object Similarity {
         "upsertIntoVectorIndex to re-embed them) before re-ingesting")
     val cents = Versioned.read(s, centroidsDir(indexDir),
       pins.get("centroids"))
-    // tombstones PINNED like every other probe input, so the returned
-    // verdict frame recomputes identically however late it evaluates
+    // tombstones PINNED like every other probe input, so every read
+    // of this call sees one tombstone state
     val tombsV = Versioned.currentVersion(s, vecTombsDir(indexDir))
     val tombsPinned = if (tombsV > 0)
       Versioned.read(s, vecTombsDir(indexDir), Some(tombsV))
@@ -1517,20 +1519,24 @@ object Similarity {
             greatest(col("x.vec_id"), col("y.vec_id")).as("new_id"))
         val dups = corpusDups.unionByName(batchDups).unionByName(sameId)
           .groupBy(col("new_id")).agg(min(col("dup_of")).as("dup_of"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val survivors = delta.join(
-            dups.select(col("new_id").as("vec_id")),
+        // the probe runs ONCE: its drop set (at most one row per batch
+        // vector) collects to the driver, and the append and the
+        // returned verdict are two views of it
+        val dropRows = dups.collect()
+        val drops = broadcast(s.createDataFrame(dropRows.toSeq.asJava,
+          dups.schema))
+        // every drop-set id is a distinct batch id, so the counts
+        // decide whether any vector survives
+        if (idPre.getLong(0) > dropRows.length)
+          appendToIvfIndex(s, delta.join(
+            drops.select(col("new_id").as("vec_id")),
             Seq("vec_id"), "left_anti")
-            .select(col("vec_id"), col("embedding"))
-          if (!survivors.isEmpty)
-            appendToIvfIndex(s, survivors, indexDir)
-          newVectors.select(col("vec_id"))
-            .join(dups.withColumnRenamed("new_id", "vec_id"),
-              Seq("vec_id"), "left")
-            .select(col("vec_id"), col("dup_of").isNull.as("kept"),
-              col("dup_of"))
-        } finally dups.unpersist(blocking = false)
+            .select(col("vec_id"), col("embedding")), indexDir)
+        newVectors.select(col("vec_id"))
+          .join(drops.withColumnRenamed("new_id", "vec_id"),
+            Seq("vec_id"), "left")
+          .select(col("vec_id"), col("dup_of").isNull.as("kept"),
+            col("dup_of"))
       } finally ranked.unpersist(blocking = false)
     } finally delta.unpersist(blocking = false)
   }

@@ -219,6 +219,37 @@ class DedupSpec extends SparkSpec {
     assert(v3.find(_._1 == 7000L).exists(_._2))
   }
 
+  test("ingestDedup verdict is built from the drop set materialized " +
+      "once: it reads no index file and stays stable while a later " +
+      "ingest, a witness takedown and compaction move the index on") {
+    import spark.implicits._
+    val idx = "target/tmp/dedup-verdict"
+    val dirs = Seq(idx, s"$idx.sigs", s"$idx.tombs")
+    clean2(dirs: _*)
+    val all = graft.sources.Tables.load(spark, sf, "documents")
+    Dedup.buildDedupIndexOf(all.filter($"doc_id" < 300), idx)
+    // a live tombstone, so every sibling the probe reads exists
+    Dedup.deleteFromDedupIndex(spark, Seq(0L).toDF("doc_id"), idx)
+    val verdict = Dedup.ingestDedup(spark,
+      all.filter($"doc_id" >= 300 && $"doc_id" < 450), idx)
+    val roots = dirs.map(d => new java.io.File(d).getAbsolutePath + "/")
+    val indexReads = verdict.inputFiles
+      .filter(f => roots.exists(f.contains(_)))
+    assert(indexReads.isEmpty,
+      s"the verdict re-reads the index: ${indexReads.mkString(", ")}")
+    def rows() = verdict.collect().map(r => (r.getLong(0),
+      r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
+      .toSeq.sorted
+    val first = rows()
+    val witnesses = first.filter(!_._2).map(_._3)
+    assert(witnesses.nonEmpty, "fixture must drop someone")
+    Dedup.ingestDedup(spark, all.filter($"doc_id" >= 450), idx).collect()
+    Dedup.deleteFromDedupIndex(spark,
+      Seq(witnesses.min).toDF("doc_id"), idx)
+    Dedup.compactDedupIndex(spark, idx)
+    assert(rows() == first)
+  }
+
   test("simhash banding reproduces the exact shingle-jaccard pairs") {
     assert(pairs(Dedup.simhashPairs(spark, sf)) == exact)
   }

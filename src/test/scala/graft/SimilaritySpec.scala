@@ -714,6 +714,48 @@ class SimilaritySpec extends SparkSpec {
     assert(e.getMessage.contains("IVF-PQ"))
   }
 
+  test("ingestDedupVectors verdict is built from the drop set " +
+      "materialized once: it reads no index file and stays stable " +
+      "while a later ingest, a witness takedown and compaction move " +
+      "the index on") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = "target/tmp/ivf-verdict"
+    val dirs = Seq(dir, s"$dir.centroids", s"$dir.tombs")
+    dirs.foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    Similarity.buildIvfIndex(spark, sf, dir, quantized = true)
+    val emb = graft.sources.Tables.load(spark, sf, "embeddings")
+    def reId(src: Long, id: Long) = emb.filter(col("vec_id") === src)
+      .select(lit(id).as("vec_id"), col("embedding"))
+    val cid = emb.filter(col("vec_id") >= Similarity.NumQueries)
+      .select("vec_id").orderBy("vec_id").limit(3).collect()
+      .map(_.getLong(0))
+    // a live tombstone, so every sibling the probe reads exists
+    Similarity.deleteFromVectorIndex(spark, Seq(cid(2)).toDF("vec_id"),
+      dir)
+    val verdict = Similarity.ingestDedupVectors(spark,
+      reId(cid(0), 7000000L).unionAll(reId(cid(1), 7000001L))
+        .unionAll(reId(0L, 7100000L)).unionAll(reId(1L, 7100001L))
+        .unionAll(reId(1L, 7100002L)), dir)
+    val roots = dirs.map(d => new java.io.File(d).getAbsolutePath + "/")
+    val indexReads = verdict.inputFiles
+      .filter(f => roots.exists(f.contains(_)))
+    assert(indexReads.isEmpty,
+      s"the verdict re-reads the index: ${indexReads.mkString(", ")}")
+    def rows() = verdict.collect().map(r => (r.getLong(0),
+      r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
+      .toSeq.sorted
+    val first = rows()
+    assert(first.count(!_._2) == 3)
+    Similarity.ingestDedupVectors(spark,
+      reId(cid(0), 7000002L).unionAll(reId(2L, 7100003L)), dir).collect()
+    Similarity.deleteFromVectorIndex(spark, Seq(cid(0)).toDF("vec_id"),
+      dir)
+    Similarity.compactIvfIndex(spark, dir)
+    assert(rows() == first)
+  }
+
   test("int8-IVF export parity: the pair exports (no codebooks), " +
       "the gate's probe is well-formed, tombstones refuse") {
     import org.apache.spark.sql.functions._
