@@ -59,9 +59,6 @@ object Versioned {
   private[graft] val PosDeletesDir = "_posdeletes"
   private val DeletePrefix = "!"
   private val StatsFile = "_stats.tsv"
-  // internal column names for positional-delete coordinates
-  private val MetaFileCol = "__pfile"
-  private val MetaPosCol = "__ppos"
 
   /** One per-(file, column) stats sidecar row; bounds are nullable.
     * `nulls`/`values` are the file's per-column null count and total
@@ -96,13 +93,6 @@ object Versioned {
   final class CommitRaceException(msg: String)
       extends IllegalStateException(msg)
 
-  /** Bounded auto-retry for REBASE-SAFE commit operations: re-runs
-    * `op` (which must re-resolve the current version itself — every
-    * caller here recomputes from `currentVersion` on entry) when it
-    * loses a commit race, with exponential backoff + jitter so two
-    * herding committers de-synchronize. After `attempts` losses the
-    * race surfaces — a pathologically contended table should fail
-    * loudly, not spin. */
   /** Public form of the bounded commit-race retry, for CALLERS that
     * own their re-derivation: a copy-on-write merge surfaces
     * [[CommitRaceException]] (its rewrite was computed against the
@@ -113,6 +103,13 @@ object Versioned {
   def retryOnRace[T](attempts: Int = 5)(op: => T): T =
     withCommitRetry(attempts)(op)
 
+  /** Bounded auto-retry for REBASE-SAFE commit operations: re-runs
+    * `op` (which must re-resolve the current version itself — every
+    * caller here recomputes from `currentVersion` on entry) when it
+    * loses a commit race, with exponential backoff + jitter so two
+    * herding committers de-synchronize. After `attempts` losses the
+    * race surfaces — a pathologically contended table should fail
+    * loudly, not spin. */
   private def withCommitRetry[T](attempts: Int = 5)(op: => T): T = {
     var backoff = 25L
     var n = 0
@@ -258,16 +255,18 @@ object Versioned {
 
   /** One schema-evolution step, read back from a version's sidecar
     * (`ver` is the publishing version; 0 while being written — the
-    * version is assigned by the commit's slot claim). */
-  private sealed trait SchemaStep { def ver: Int }
+    * version is assigned by the commit's slot claim). `cols` are the
+    * names it touches: stats and specs written before it under any of
+    * them are stale. */
+  private sealed trait SchemaStep { def ver: Int; def cols: Seq[String] }
   private final case class RenameStep(ver: Int, from: String,
-      to: String) extends SchemaStep
+      to: String) extends SchemaStep { def cols = Seq(from, to) }
   private final case class AddStep(ver: Int, name: String,
-      dtype: DataType) extends SchemaStep
+      dtype: DataType) extends SchemaStep { def cols = Seq(name) }
   private final case class DropStep(ver: Int, name: String)
-      extends SchemaStep
+      extends SchemaStep { def cols = Seq(name) }
   private final case class RetypeStep(ver: Int, name: String,
-      dtype: DataType) extends SchemaStep
+      dtype: DataType) extends SchemaStep { def cols = Seq(name) }
 
   /** The table's rename history up to version `upTo`, oldest first —
     * one `(version, from, to)` per [[renameColumn]] commit, read from
@@ -661,14 +660,16 @@ object Versioned {
     * @param linkEntries  explicit replacement for the base's entries —
     *                     the file-level merge path links only the
     *                     SURVIVING files/dirs of the base snapshot
-    * @param ownDirInManifest false when `df` is empty (a merge that
-    *                     deleted every row it rewrote): an empty
-    *                     parquet directory must not become a scan root */
+    * @param dropOwnDirIfEmpty a rewrite whose write produced no rows
+    *                     keeps its own (empty) dir out of the manifest
+    *                     while any linked DATA line survives: an empty
+    *                     parquet directory must not become a scan root,
+    *                     but a manifest of tombstones alone is
+    *                     unreadable */
   private def commitStaged(df: DataFrame, tableDir: String,
       partitionCol: Option[String], note: Option[String],
       statsCols: Seq[String], linkBase: Option[Int],
       linkEntries: Option[Seq[String]] = None,
-      ownDirInManifest: Boolean = true,
       deleteDf: Option[DataFrame] = None,
       posDeleteDf: Option[DataFrame] = None,
       transform: Option[Transform] = None,
@@ -806,9 +807,7 @@ object Versioned {
     val uuid = java.util.UUID.randomUUID().toString
     val stage = new Path(tableDir, s".stage-v$next-$uuid")
     // set false by the writeData branch when its harvested task
-    // metrics show a zero-row write — the fact [[mergeFiles]] used to
-    // pay a separate isEmpty action (plus a persist around the
-    // rewrite) to learn BEFORE committing
+    // metrics show a zero-row write (`dropOwnDirIfEmpty`)
     var wroteRows = true
     // Merge-on-read tombstone sets (key-scale, one file each). On the
     // data-write path their Spark write jobs run on a side thread,
@@ -982,9 +981,9 @@ object Versioned {
         // currentTransform's inheritance walk at this version
         FsFast.put(f, new Path(stage, TspecFile),
           TspecNone.getBytes("UTF-8"), overwrite = false)
-      } else if (!(dropOwnDirIfEmpty && !wroteRows))
-        // an all-deleted rewrite records no spec decision — exactly the
-        // old mergeFiles behavior (it passed transform = None then)
+      } else if (writeData && wroteRows)
+        // a metadata-only commit and an all-deleted rewrite record no
+        // spec decision
         transform.foreach(t => writeTspec(f, stage, t,
           df.schema(t.source).dataType.catalogString,
           spark.sessionState.conf.sessionLocalTimeZone))
@@ -1035,13 +1034,13 @@ object Versioned {
       case None => writeTombstones()
     }
     // a zero-row rewrite's own dir (an empty schema-bearing file)
-    // stays OUT of the manifest unless nothing else would be in it —
-    // the caller-side rewroteAll logic, decided from the write's own
-    // metrics instead of a pre-commit isEmpty action
-    val ownDirEff =
-      if (dropOwnDirIfEmpty && !wroteRows) linked.isEmpty
-      else ownDirInManifest
-    val withOwn = if (ownDirEff) linked :+ s"v=$next" else linked
+    // stays OUT of the manifest unless no linked data line survives —
+    // decided from the write's own metrics, not a pre-commit isEmpty
+    val ownDir =
+      if (dropOwnDirIfEmpty && !wroteRows)
+        linked.filterNot(isDeleteLine).isEmpty
+      else writeData
+    val withOwn = if (ownDir) linked :+ s"v=$next" else linked
     val dirs = withOwn ++
       deleteDf.map(_ => s"$DeletePrefix" + s"v=$next/$DeletesDir") ++
       posDeleteDf.map(_ => s"$DeletePrefix" + s"v=$next/$PosDeletesDir")
@@ -1291,13 +1290,6 @@ object Versioned {
       version: Option[Int] = None): DataFrame =
     readSnapshot(spark, tableDir, version, withDeletes = true)
 
-  /** [[read]] with merge-on-read tombstones optionally UNAPPLIED — the
-    * provenance probe in [[mergeFiles]] needs raw scans: its
-    * `input_file_name` projection must sit directly over the file scan
-    * (a tombstone anti-join above the scan would blank it), and a
-    * tombstone-free probe only OVER-approximates the touched set (the
-    * rewrite itself applies tombstones, so deleted rows never
-    * resurrect). */
   /** Assembled-plan memo for [[readSnapshot]]: a PUBLISHED (table,
     * version) resolves to the same immutable plan every time — same
     * manifest, same entries, same tombstones — yet assembling it costs
@@ -1314,6 +1306,13 @@ object Versioned {
   private val planMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Int, Boolean, Boolean, String), DataFrame]()
 
+  /** [[read]] with merge-on-read tombstones optionally UNAPPLIED — the
+    * provenance probe in [[mergeFiles]] needs raw scans: its
+    * `input_file_name` projection must sit directly over the file scan
+    * (a tombstone anti-join above the scan would blank it), and a
+    * tombstone-free probe only OVER-approximates the touched set (the
+    * rewrite itself applies tombstones, so deleted rows never
+    * resurrect). */
   private def readSnapshot(spark: SparkSession, tableDir: String,
       version: Option[Int], withDeletes: Boolean,
       withMeta: Boolean = false): DataFrame = {
@@ -1357,11 +1356,7 @@ object Versioned {
       // the provenance scan for positional deletes needs each row's
       // (file, ordinal): project the reader's hidden _metadata columns
       // right over the scan, before any join can mask them
-      val scan =
-        if (withMeta) base
-          .withColumn(MetaFileCol, col("_metadata.file_path"))
-          .withColumn(MetaPosCol, col("_metadata.row_index"))
-        else base
+      val scan = if (withMeta) withCoords(base) else base
       // schema steps BEFORE tombstones: the key frames were renamed
       // to the read version's names too, so the anti-joins line up
       // (adds/drops never touch a live tombstone's key columns — the
@@ -1790,12 +1785,7 @@ object Versioned {
         val keyCols = t.df.columns.toSeq
         shared.toSeq.sorted.filter(verOf(_) < t.ver).map { rel =>
           val vr = rel.split("/").head
-          val stale = chain.filter(_.ver > verOf(rel)).flatMap {
-            case RenameStep(_, from, to) => Seq(from, to)
-            case AddStep(_, n, _) => Seq(n)
-            case DropStep(_, n) => Seq(n)
-            case RetypeStep(_, n, _) => Seq(n)
-          }.toSet
+          val stale = chain.filter(_.ver > verOf(rel)).flatMap(_.cols).toSet
           ((t, i), rel, statsByRoot(vr)
             .getOrElse(rel.stripPrefix(vr + "/"), Nil)
             .filter(sr => keyCols.contains(sr.col) && !stale(sr.col))
@@ -1899,27 +1889,6 @@ object Versioned {
       linkBase = Some(cur), transform = tspec, branch = branch)
   }
 
-  /** IMPORT pre-existing parquet files as a snapshot commit — the
-    * Iceberg `add_files` analog, and the INGEST complement of
-    * [[exportSnapshot]]: another engine's parquet output (DuckDB
-    * `COPY TO`, a pyarrow writer — the fixtures themselves are
-    * pyarrow-written) becomes table data WITHOUT a decode-rewrite
-    * cycle. Each source file is staged into the new version root by
-    * HARDLINK when both sides are the local scheme on one volume
-    * (O(1) per file, zero data I/O) and by a filesystem copy
-    * otherwise — never referenced in place: the table owns a name
-    * under its own version root, so vacuum's reference counting stays
-    * correct and a later DELETE or rename-replace of the source path
-    * (the parquet norm) cannot touch published history. (A hardlink
-    * still shares the inode — a writer that mutates the source file
-    * IN PLACE would show through; pass `link = false` for full
-    * physical isolation.) Schema compatibility is
-    * probed up front like a linked append (an un-unionable import
-    * must fail before publishing, not poison every later read);
-    * row-count sidecars come from the foreign files' footers. The
-    * import lands as an unpartitioned entry — on a spec-declared
-    * table it joins the mixed-layout inventory `.partitions` surfaces
-    * (compact to restore a uniform layout). */
   /** Delta-CLONE-style table clone: resolve the source snapshot's
     * data-file list through [[exportSnapshot]] (inheriting its
     * refusals — live MoR tombstones, pending schema steps, and hive
@@ -1950,6 +1919,27 @@ object Versioned {
     currentVersion(spark, destDir)
   }
 
+  /** IMPORT pre-existing parquet files as a snapshot commit — the
+    * Iceberg `add_files` analog, and the INGEST complement of
+    * [[exportSnapshot]]: another engine's parquet output (DuckDB
+    * `COPY TO`, a pyarrow writer — the fixtures themselves are
+    * pyarrow-written) becomes table data WITHOUT a decode-rewrite
+    * cycle. Each source file is staged into the new version root by
+    * HARDLINK when both sides are the local scheme on one volume
+    * (O(1) per file, zero data I/O) and by a filesystem copy
+    * otherwise — never referenced in place: the table owns a name
+    * under its own version root, so vacuum's reference counting stays
+    * correct and a later DELETE or rename-replace of the source path
+    * (the parquet norm) cannot touch published history. (A hardlink
+    * still shares the inode — a writer that mutates the source file
+    * IN PLACE would show through; pass `link = false` for full
+    * physical isolation.) Schema compatibility is
+    * probed up front like a linked append (an un-unionable import
+    * must fail before publishing, not poison every later read);
+    * row-count sidecars come from the foreign files' footers. The
+    * import lands as an unpartitioned entry — on a spec-declared
+    * table it joins the mixed-layout inventory `.partitions` surfaces
+    * (compact to restore a uniform layout). */
   def importFiles(spark: SparkSession, tableDir: String,
       sources: Seq[String], note: Option[String] = None,
       link: Boolean = true): Int = withCommitRetry() {
@@ -1996,14 +1986,6 @@ object Versioned {
       populate = Some(stageIn))
   }
 
-  /** ROLLBACK to a retained snapshot — the Iceberg
-    * `rollback_to_snapshot` analog: publishes a NEW version whose
-    * manifest is `to`'s manifest, so the table's current content
-    * becomes version `to`'s again while every intermediate version
-    * stays time-travelable (history is never rewritten — undoing a bad
-    * commit is itself a commit). Metadata-only: no data file is
-    * written, copied, or read beyond a schema peek; O(1) in table
-    * size. */
   /** METADATA-ONLY commit that re-links the current snapshot's
     * entries unchanged and records `note` — the pin-advance primitive
     * for incremental consumers ([[graft.sources.DerivedTable]]) whose
@@ -2021,9 +2003,17 @@ object Versioned {
       partitionCol = None, note = Some(note), statsCols = Nil,
       linkBase = None,
       linkEntries = Some(manifestLines(f, tableDir, cur)),
-      ownDirInManifest = false, writeData = false)
+      writeData = false)
   }
 
+  /** ROLLBACK to a retained snapshot — the Iceberg
+    * `rollback_to_snapshot` analog: publishes a NEW version whose
+    * manifest is `to`'s manifest, so the table's current content
+    * becomes version `to`'s again while every intermediate version
+    * stays time-travelable (history is never rewritten — undoing a bad
+    * commit is itself a commit). Metadata-only: no data file is
+    * written, copied, or read beyond a schema peek; O(1) in table
+    * size. */
   def rollback(spark: SparkSession, tableDir: String, to: Int,
       note: Option[String] = None): Int = withCommitRetry() {
     val vs = committedVersions(spark, tableDir)
@@ -2034,7 +2024,7 @@ object Versioned {
       partitionCol = None, note = note, statsCols = Nil,
       linkBase = None,
       linkEntries = Some(manifestLines(f, tableDir, to)),
-      ownDirInManifest = false, writeData = false)
+      writeData = false)
   }
 
   /** RENAME a column — METADATA-ONLY, the Iceberg field-id rename
@@ -2073,8 +2063,8 @@ object Versioned {
     if (!f.exists(hint)) FsFast.touch(f, hint, overwrite = true)
     commitStaged(read(spark, tableDir, Some(cur)).limit(0), tableDir,
       partitionCol = None, note = note, statsCols = Nil,
-      linkBase = Some(cur), ownDirInManifest = false,
-      writeData = false, schemaStep = Some(RenameStep(0, from, to)))
+      linkBase = Some(cur), writeData = false,
+      schemaStep = Some(RenameStep(0, from, to)))
   }
 
   /** ADD a column — METADATA-ONLY, the Iceberg new-optional-field
@@ -2110,8 +2100,8 @@ object Versioned {
     if (!f.exists(hint)) FsFast.touch(f, hint, overwrite = true)
     commitStaged(read(spark, tableDir, Some(cur)).limit(0), tableDir,
       partitionCol = None, note = note, statsCols = Nil,
-      linkBase = Some(cur), ownDirInManifest = false,
-      writeData = false, schemaStep = Some(AddStep(0, name, dtype)))
+      linkBase = Some(cur), writeData = false,
+      schemaStep = Some(AddStep(0, name, dtype)))
   }
 
   /** DROP a column — METADATA-ONLY, the Iceberg field-removal analog:
@@ -2143,8 +2133,8 @@ object Versioned {
     if (!f.exists(hint)) FsFast.touch(f, hint, overwrite = true)
     commitStaged(read(spark, tableDir, Some(cur)).limit(0), tableDir,
       partitionCol = None, note = note, statsCols = Nil,
-      linkBase = Some(cur), ownDirInManifest = false,
-      writeData = false, schemaStep = Some(DropStep(0, name)))
+      linkBase = Some(cur), writeData = false,
+      schemaStep = Some(DropStep(0, name)))
   }
 
   /** Type promotions that lose NOTHING on any value — the Iceberg
@@ -2197,8 +2187,8 @@ object Versioned {
     if (!f.exists(hint)) FsFast.touch(f, hint, overwrite = true)
     commitStaged(read(spark, tableDir, Some(cur)).limit(0), tableDir,
       partitionCol = None, note = note, statsCols = Nil,
-      linkBase = Some(cur), ownDirInManifest = false,
-      writeData = false, schemaStep = Some(RetypeStep(0, name, to)))
+      linkBase = Some(cur), writeData = false,
+      schemaStep = Some(RetypeStep(0, name, to)))
   }
 
   /** Absolute, URI-decoded filesystem path of the table root — the
@@ -2247,31 +2237,50 @@ object Versioned {
   private def containsParquet(f: FileSystem, p: Path): Boolean =
     f.exists(p) && FsFast.walkFiles(f, p).exists(_.name.endsWith(".parquet"))
 
-  /** Scan a set of table-relative data files, each under its version
-    * directory's basePath so hive partition values still materialize.
-    * `deletes` (the snapshot's tombstones) are applied per version
-    * group — only those NEWER than the group's files — so a rewrite or
-    * binpack reading these files never resurrects merge-on-read-deleted
-    * rows. */
+  /** Live rows of a set of table-relative data files under the
+    * snapshot's tombstones `deletes` ([[liveRows]]: only those NEWER
+    * than each file apply), renamed forward to the CURRENT version's
+    * names — so a rewrite or binpack reading these files never
+    * resurrects merge-on-read-deleted rows. `rels` is non-empty. */
   private def readFiles(spark: SparkSession, tableDir: String,
-      rels: Seq[String],
-      deletes: Seq[Tomb] = Nil): DataFrame = {
+      rels: Seq[String], deletes: Seq[Tomb]): DataFrame = {
     val f = fs(spark, tableDir)
-    // rewrites run at the CURRENT (main) version: rename each file
-    // group forward so the rewritten output carries today's names (a
-    // concrete version — the chain's lineage walk starts from it)
-    val chain = renameChain(f, tableDir, currentVersion(spark, tableDir))
-    hideDerived(rels.groupBy(_.split("/").head).toSeq.sortBy(_._1)
-      .map { case (vdir, files) =>
-        val ver = vdir.stripPrefix("v=").toInt
-        applyDeletes(
-          applySchemaSteps(scanUnit(spark, ScanUnit(
-            files.map(r => new Path(tableDir, r).toString),
-            Some(new Path(tableDir, vdir).toString),
-            ownerEpoch(f, tableDir, vdir))), chain, ver),
-          deletes.filter(_.ver > ver))
+    liveRows(spark, f, tableDir,
+      renameChain(f, tableDir, currentVersion(spark, tableDir)),
+      rels, deletes).get
+  }
+
+  /** The copy-on-write core of [[mergeFiles]], [[compactSmall]] and
+    * [[compactDeletes]]: publish `rewritten` in place of the `touched`
+    * files of snapshot `cur` and LINK everything else through the
+    * manifest — a directory none of whose files is touched as one
+    * entry, a partly-touched one file by file, and every tombstone line
+    * whose version passes `keepTomb` (it still applies to the older
+    * files it covers; the rewrite applied it to its own input, so
+    * rewritten rows never resurrect). A rewrite that wrote no rows
+    * keeps its own dir out of the manifest unless no data line
+    * survives ([[commitStaged]]'s `dropOwnDirIfEmpty`); with nothing
+    * touched the commit is metadata-only and only drops tombstone
+    * lines. */
+  private def linkRewrite(spark: SparkSession, tableDir: String,
+      cur: Int, touched: Set[String], rewritten: DataFrame,
+      partitionCol: Option[String], statsCols: Seq[String],
+      transform: Option[Transform], note: Option[String],
+      deleteDf: Option[DataFrame] = None,
+      keepTomb: Int => Boolean = _ => true): Int = {
+    val f = fs(spark, tableDir)
+    val surviving = manifestLines(f, tableDir, cur).flatMap { e =>
+      if (isDeleteLine(e)) Seq(e).filter(l => keepTomb(entryVer(l)))
+      else {
+        val files = entryFiles(f, tableDir, e)
+        if (!files.exists(touched.contains)) Seq(e)
+        else files.filterNot(touched.contains)
       }
-      .reduce(_.unionByName(_, allowMissingColumns = true)))
+    }
+    commitStaged(rewritten, tableDir, partitionCol, note, statsCols,
+      linkBase = Some(cur), linkEntries = Some(surviving),
+      deleteDf = deleteDf, transform = transform,
+      writeData = touched.nonEmpty, dropOwnDirIfEmpty = true)
   }
 
   /** The file-level merge core shared by [[upsert]] and [[delete]]:
@@ -2281,12 +2290,11 @@ object Versioned {
     * decision never over- or under-approximates the way min/max ranges
     * would) and untouched; rewrite ONLY the touched files' surviving
     * rows plus `add`, and LINK everything untouched through the
-    * manifest — directories whose files are all untouched as one
-    * entry, partially-touched directories file-by-file. At 100 TB this
-    * turns a single-key update from a full-table rewrite into a scan
-    * plus a handful of file rewrites, which is Iceberg's copy-on-write
-    * MERGE cost model. Returns None when nothing matches (caller
-    * decides: append or no-op). */
+    * manifest ([[linkRewrite]]). At 100 TB this turns a single-key
+    * update from a full-table rewrite into a scan plus a handful of
+    * file rewrites, which is Iceberg's copy-on-write MERGE cost model.
+    * Returns None when nothing matches (caller decides: append or
+    * no-op). */
   private def mergeFiles(spark: SparkSession, tableDir: String,
       matches: DataFrame => DataFrame,
       rewrite: DataFrame => DataFrame,
@@ -2317,37 +2325,13 @@ object Versioned {
       .map(r => decodePath(r.getString(0)).stripPrefix(root + "/"))
       .toSet
     if (touched.isEmpty) return None
-    // data entries split into untouched (linked) and touched-survivor
-    // files; tombstone lines link through unchanged — they still apply
-    // to the older files they cover (the rewrite applies them to its
-    // own input below, so rewritten rows never resurrect)
-    val surviving = manifestLines(f, tableDir, v).flatMap { e =>
-      if (isDeleteLine(e)) Seq(e)
-      else {
-        val files = entryFiles(f, tableDir, e)
-        if (!files.exists(touched.contains)) Seq(e)
-        else files.filterNot(touched.contains)
-      }
-    }
     // size the rewrite like the files it replaces: without this, a
-    // one-file rewrite fans out to shuffle.partitions tiny part files.
-    // The all-deleted-rewrite handling (drop the empty own dir from
-    // the manifest, record no spec decision) moved INSIDE commitStaged
-    // (`dropOwnDirIfEmpty`), decided from the write job's own task
-    // metrics — the pre-commit `isEmpty` action (and the persist that
-    // kept it from running the anti-joins twice) is gone: the rewrite
-    // executes exactly once, in the commit's write job.
+    // one-file rewrite fans out to shuffle.partitions tiny part files
     val rewritten = rewrite(readFiles(spark, tableDir, touched.toSeq,
         manifestDeletes(spark, f, tableDir, v)))
       .coalesce(math.max(1, touched.size))
-    Some(commitStaged(rewritten, tableDir,
-      partitionCol, note = note, statsCols,
-      linkBase = Some(v),
-      linkEntries = Some(surviving),
-      deleteDf = deleteDf,
-      ownDirInManifest = true,
-      transform = transform,
-      dropOwnDirIfEmpty = true))
+    Some(linkRewrite(spark, tableDir, v, touched, rewritten, partitionCol,
+      statsCols, transform, note, deleteDf))
   }
 
   /** Row-level MERGE (upsert) by key: rows of the current snapshot
@@ -2428,8 +2412,8 @@ object Versioned {
         statsCols = statsCols, note = note))
   }
 
-  /** ONE pre-flight action over a merge's (small) update side, shared
-    * by [[upsert]] and [[applyChanges]]: row count, MERGE INTO's
+  /** ONE pre-flight action over [[upsert]]'s (small) update side:
+    * row count, MERGE INTO's
     * duplicate-key rejection (Iceberg/Delta reject multi-source rows
     * per key — silently appending both would break key uniqueness
     * forever), NULL-key rejection (a null key never matches the merge's
@@ -2613,7 +2597,7 @@ object Versioned {
         val t = readSnapshot(spark, tableDir, Some(cur),
           withDeletes = true, withMeta = true).alias("__t")
         val multi = t.join(src, on, "inner")
-          .groupBy(col(MetaFileCol), col(MetaPosCol))
+          .groupBy(col("__dfile"), col("__dpos"))
           .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
         require(multi.isEmpty, "MERGE cardinality violation: a target " +
           "row matched more than one source row (the update/delete " +
@@ -2766,7 +2750,7 @@ object Versioned {
         missing.mkString(", "))
     commitStaged(keys.limit(0), tableDir, partitionCol = None,
       note = note, statsCols = Nil, linkBase = Some(cur),
-      ownDirInManifest = false, deleteDf = Some(keys.distinct()),
+      deleteDf = Some(keys.distinct()),
       writeData = false)
   }
 
@@ -2796,13 +2780,13 @@ object Versioned {
     val rows = readSnapshot(spark, tableDir, Some(cur),
         withDeletes = true, withMeta = true)
       .filter(coalesce(pred, lit(false)))
-      .select(col(MetaFileCol).as("file"), col(MetaPosCol).as("pos"))
+      .select(col("__dfile").as("file"), col("__dpos").as("pos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (rows.isEmpty) cur
       else commitStaged(rows.limit(0), tableDir, partitionCol = None,
         note = note, statsCols = Nil, linkBase = Some(cur),
-        ownDirInManifest = false, posDeleteDf = Some(rows),
+        posDeleteDf = Some(rows),
         writeData = false)
     } finally rows.unpersist(blocking = false)
   }
@@ -3123,14 +3107,6 @@ object Versioned {
     val small = sized.flatMap(_._2).filter(_._2 < threshold)
       .filter(fl => inScope(fl._1))
     if (small.size < 2) return cur
-    val smallSet = small.map(_._1).toSet
-    // tombstone lines link through: they still apply to the surviving
-    // older files (packed output is newer than every tombstone, and its
-    // rows were packed with them applied, so it is never re-filtered)
-    val surviving = sized.flatMap { case (e, files) =>
-      if (!files.exists(fl => smallSet.contains(fl._1))) Seq(e)
-      else files.map(_._1).filterNot(smallSet.contains)
-    } ++ manifestLines(f, tableDir, cur).filter(isDeleteLine)
     val bytes = small.map(_._2).sum
     val nFiles =
       math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
@@ -3142,7 +3118,9 @@ object Versioned {
     // declared/current spec — packing a transform-partitioned table's
     // drip-fed files must not write them flat (and, when the packed
     // output replaces the only _tspec-carrying entries, must not
-    // erase the spec for future writes).
+    // erase the spec for future writes). Packed output is newer than
+    // every tombstone and its rows were packed with them applied, so
+    // every tombstone line links through.
     val base = readFiles(spark, tableDir, small.map(_._1),
       manifestDeletes(spark, f, tableDir, cur))
     val tspec =
@@ -3151,21 +3129,9 @@ object Versioned {
         .filter(t => base.columns.contains(t.source))
     val packed = sizeForWrite(base, nFiles,
       tspec.map(_.writeExpr(base)).orElse(partitionCol.map(col)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // tombstones may have deleted EVERY packed row: a partitionBy
-      // write of an empty frame produces no files, and publishing a
-      // file-less scan root would brick every subsequent read — same
-      // guard mergeFiles carries
-      val allGone = packed.isEmpty
-      val survivingData = surviving.filterNot(isDeleteLine)
-      commitStaged(packed, tableDir,
-        if (allGone) None else partitionCol,
-        note = noteWithPins(spark, tableDir, cur, note), statsCols,
-        linkBase = Some(cur), linkEntries = Some(surviving),
-        ownDirInManifest = !allGone || survivingData.isEmpty,
-        transform = if (allGone) None else tspec)
-    } finally packed.unpersist(blocking = false)
+    linkRewrite(spark, tableDir, cur, small.map(_._1).toSet, packed,
+      partitionCol, statsCols, tspec,
+      noteWithPins(spark, tableDir, cur, note))
   }
 
   /** TOMBSTONE-TARGETED compaction — the middle gear between paying a
@@ -3218,23 +3184,12 @@ object Versioned {
       .filter(e => entryVer(e) < maxTomb)
       .flatMap(e => entryFiles(f, tableDir, e))
     val chain = renameChain(f, tableDir, cur)
-    def candScan(withDeletes: Boolean): DataFrame =
-      candidates.groupBy(_.split("/").head).toSeq.sortBy(_._1)
-        .map { case (vdir, fls) =>
-          val ver = vdir.stripPrefix("v=").toInt
-          val base = scanUnit(spark, ScanUnit(
-            fls.map(r => new Path(tableDir, r).toString),
-            Some(new Path(tableDir, vdir).toString),
-            ownerEpoch(f, tableDir, vdir)))
-            .withColumn(MetaFileCol, col("_metadata.file_path"))
-            .withColumn(MetaPosCol, col("_metadata.row_index"))
-          if (!withDeletes) base
-          else applyDeletes(applySchemaSteps(base, chain, ver),
-            tombs.filter(_.ver > ver))
-        }.reduce(_.unionByName(_, allowMissingColumns = true))
     def perFile(withDeletes: Boolean, as: String) =
-      candScan(withDeletes)
-        .groupBy(col(MetaFileCol).as("file"))
+      perVersionDir(spark, f, tableDir, chain, candidates) { (scan, ver) =>
+        if (withDeletes)
+          applyDeletes(withCoords(scan), tombs.filter(_.ver > ver))
+        else withCoords(scan)
+      }.get.groupBy(col("__dfile").as("file"))
         .agg(count(lit(1)).as(as))
     // exact per-file deletion counts: raw minus surviving (the same
     // anti-joins reads pay, so the subtraction is the read's truth)
@@ -3253,69 +3208,31 @@ object Versioned {
         rel
     }.toSet
     // tombstone absorption: T applies only to entries OLDER than its
-    // version, so T is droppable when every kept deletion-carrying
-    // file is at least as new as T
+    // version, so T is kept only while some kept deletion-carrying
+    // file is older than T
     val keptDelVers = delStats.collect {
       case (rel, _, _) if !touched.contains(rel) => entryVer(rel)
     }
-    def absorbed(tver: Int) = keptDelVers.forall(_ >= tver)
-    val surviving = manifestLines(f, tableDir, cur).flatMap { e =>
-      if (isDeleteLine(e)) {
-        if (absorbed(entryVer(e.stripPrefix(DeletePrefix)))) Nil
-        else Seq(e)
-      } else {
-        val files = entryFiles(f, tableDir, e)
-        if (!files.exists(touched.contains)) Seq(e)
-        else files.filterNot(touched.contains)
-      }
-    }
-    if (touched.isEmpty) {
-      // every tombstone matches nothing (or none met the ratio while
-      // absorbing nothing): publish only when delete lines actually
-      // drop, else the commit would be an empty churn version
-      if (surviving.size == manifestLines(f, tableDir, cur).size)
-        return cur
-      return commitStaged(
-        read(spark, tableDir, Some(cur)).limit(0), tableDir,
-        partitionCol = None, note = noteWithPins(spark, tableDir, cur, note), statsCols = Nil,
-        linkBase = Some(cur), linkEntries = Some(surviving),
-        ownDirInManifest = false, writeData = false)
-    }
-    val rewritten = readFiles(spark, tableDir, touched.toSeq, tombs)
-      .coalesce(math.max(1, touched.size))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val allGone = rewritten.isEmpty
-      val survivingData = surviving.filterNot(isDeleteLine)
-      // like compact(): a bare maintenance rewrite keeps the table's
-      // layout rather than silently flattening the touched files
-      val tspec =
-        if (transform.isDefined || partitionCol.isDefined) transform
-        else currentTransform(spark, tableDir)
-          .filter(t => rewritten.columns.contains(t.source))
-      commitStaged(rewritten, tableDir,
-        if (allGone) None else partitionCol, note = noteWithPins(spark, tableDir, cur, note), statsCols,
-        linkBase = Some(cur), linkEntries = Some(surviving),
-        ownDirInManifest = !allGone || survivingData.isEmpty,
-        transform = if (allGone) None else tspec)
-    } finally rewritten.unpersist(blocking = false)
+    def keepTomb(tver: Int) = keptDelVers.exists(_ < tver)
+    // every tombstone matches nothing (or none met the ratio while
+    // absorbing nothing): publish nothing rather than an empty churn
+    // version
+    if (touched.isEmpty && tombs.forall(t => keepTomb(t.ver))) return cur
+    val rewritten =
+      if (touched.isEmpty) read(spark, tableDir, Some(cur)).limit(0)
+      else readFiles(spark, tableDir, touched.toSeq, tombs)
+        .coalesce(touched.size)
+    // like compact(): a bare maintenance rewrite keeps the table's
+    // layout rather than silently flattening the touched files
+    val tspec =
+      if (transform.isDefined || partitionCol.isDefined) transform
+      else currentTransform(spark, tableDir)
+        .filter(t => rewritten.columns.contains(t.source))
+    linkRewrite(spark, tableDir, cur, touched, rewritten, partitionCol,
+      statsCols, tspec, noteWithPins(spark, tableDir, cur, note),
+      keepTomb = keepTomb)
   }
 
-  /** Expire old snapshots, keeping the most recent `keep` (the current
-    * version is always retained). The marker is removed first so a crash
-    * mid-vacuum never leaves a published-but-deleted version. Directory
-    * deletion is REFERENCE-COUNTED across the retained versions'
-    * manifests: an expired version's directory survives as long as any
-    * retained snapshot still links its files (the Iceberg
-    * expire-snapshots rule — expiring history never corrupts the
-    * current table).
-    *
-    * Also reclaims commit debris: unpublished, unreferenced `v=K`
-    * directories (a committer crashed between its rename and its marker
-    * — they block version slot K) and orphaned `.stage-*` /
-    * `.reclaim-*` directories. Maintenance only — do not run
-    * concurrently with active committers, whose in-flight claims look
-    * identical to debris. */
   /** The versions a `vacuum(keep)` would expire — the DRY-RUN view
     * an operator checks before pulling the trigger (Iceberg's
     * expire_snapshots dry-run). Shares the exact pin logic with
@@ -3336,6 +3253,21 @@ object Versioned {
       .filterNot(tagged.contains)
   }
 
+  /** Expire old snapshots, keeping the most recent `keep` (the current
+    * version is always retained). The marker is removed first so a crash
+    * mid-vacuum never leaves a published-but-deleted version. Directory
+    * deletion is REFERENCE-COUNTED across the retained versions'
+    * manifests: an expired version's directory survives as long as any
+    * retained snapshot still links its files (the Iceberg
+    * expire-snapshots rule — expiring history never corrupts the
+    * current table).
+    *
+    * Also reclaims commit debris: unpublished, unreferenced `v=K`
+    * directories (a committer crashed between its rename and its marker
+    * — they block version slot K) and orphaned `.stage-*` /
+    * `.reclaim-*` directories. Maintenance only — do not run
+    * concurrently with active committers, whose in-flight claims look
+    * identical to debris. */
   def vacuum(spark: SparkSession, tableDir: String, keep: Int = 1): Unit = {
     val f = fs(spark, tableDir)
     if (!f.exists(new Path(tableDir))) return // never-committed table: no-op
@@ -3824,7 +3756,7 @@ object Versioned {
       statsCols = Nil,
       linkBase = Some(toV), // the CAS: head moved => lose, re-resolve
       linkEntries = Some(manifestLines(f, tableDir, fromV)),
-      ownDirInManifest = false, writeData = false,
+      writeData = false,
       branch = if (to == MainBranch) None else Some(to))
   }
 
@@ -3998,13 +3930,6 @@ object Versioned {
       "total_bytes")
   }
 
-  /** Per-file inventory of a snapshot — the Iceberg `.files`
-    * metadata-table analog: every data file the version's manifest
-    * reaches, with its size, owning entry, whether it is LINKED from an
-    * older version (O(delta) append / file-level merge) or written by
-    * this version, and its kind (`data`, or `delete` for a
-    * merge-on-read tombstone's key files). Metadata-scale: one FS
-    * listing per manifest entry, no file contents read. */
   /** Every file of every RETAINED snapshot — Iceberg's `all_files`
     * metadata table: one row per (snapshot, file), so a file linked
     * by several snapshots appears once per snapshot (Iceberg's all_*
@@ -4071,6 +3996,13 @@ object Versioned {
     }
   }
 
+  /** Per-file inventory of a snapshot — the Iceberg `.files`
+    * metadata-table analog: every data file the version's manifest
+    * reaches, with its size, owning entry, whether it is LINKED from an
+    * older version (O(delta) append / file-level merge) or written by
+    * this version, and its kind (`data`, or `delete` for a
+    * merge-on-read tombstone's key files). Metadata-scale: one FS
+    * listing per manifest entry, no file contents read. */
   def files(spark: SparkSession, tableDir: String,
       version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, tableDir))
@@ -4118,19 +4050,6 @@ object Versioned {
     rows.toDF("file", "size_bytes", "entry", "kind", "status")
   }
 
-  /** The positional tombstones a snapshot carries — the Iceberg
-    * `.position_deletes` metadata-table analog: one row per deleted
-    * (data file, row ordinal) coordinate, with the commit that wrote
-    * the tombstone and the tombstone file it lives in. Unlike the
-    * driver-metadata tables this one SCANS the tombstone key files
-    * (they are data-scale — a billion-row delete writes a billion
-    * coordinates), so the frame is a distributed parquet read of
-    * exactly the `_posdeletes` files the snapshot's manifest reaches:
-    * O(tombstone bytes), never a data-file scan, and empty the moment
-    * `compact`/`compactDeletes` absorbs them. Equality tombstones are
-    * key-valued, not positional — they surface through `.files` kinds
-    * and `readChanges`, matching Iceberg where equality deletes are
-    * likewise absent from position_deletes. */
   /** The `.stats` metadata table: the live snapshot's stats-sidecar
     * rows, SQL-queryable — one row per (data file, column) bound plus
     * the count-only pseudo rows (NULL column) that ride every data
@@ -4170,6 +4089,19 @@ object Versioned {
       .orderBy(col("file"), col("column"))
   }
 
+  /** The positional tombstones a snapshot carries — the Iceberg
+    * `.position_deletes` metadata-table analog: one row per deleted
+    * (data file, row ordinal) coordinate, with the commit that wrote
+    * the tombstone and the tombstone file it lives in. Unlike the
+    * driver-metadata tables this one SCANS the tombstone key files
+    * (they are data-scale — a billion-row delete writes a billion
+    * coordinates), so the frame is a distributed parquet read of
+    * exactly the `_posdeletes` files the snapshot's manifest reaches:
+    * O(tombstone bytes), never a data-file scan, and empty the moment
+    * `compact`/`compactDeletes` absorbs them. Equality tombstones are
+    * key-valued, not positional — they surface through `.files` kinds
+    * and `readChanges`, matching Iceberg where equality deletes are
+    * likewise absent from position_deletes. */
   def positionDeletes(spark: SparkSession, tableDir: String,
       version: Option[Int] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, tableDir))
@@ -4615,13 +4547,6 @@ object Versioned {
     }
   }
 
-  /** The hidden-transform spec of the table's NEWEST partitioned
-    * write, if any — the spec catalog writes, row-level DML, and CALL
-    * maintenance INHERIT so SQL-driven appends and rewrites keep the
-    * table's layout (the Iceberg table-level partition-spec analog:
-    * partitioning here is a per-write property, so the newest
-    * `_tspec` IS the table's current spec). Callers drop it when the
-    * transform's source column is absent from what they write. */
   /** Memo for [[currentTransform]]: the answer is a pure function of
     * the (immutable) version's manifest + sidecars, and inheritance
     * consults it on EVERY bare append/INSERT — without the memo a
@@ -4633,6 +4558,13 @@ object Versioned {
   private val transformMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Transform]]()
 
+  /** The hidden-transform spec of the table's NEWEST partitioned
+    * write, if any — the spec catalog writes, row-level DML, and CALL
+    * maintenance INHERIT so SQL-driven appends and rewrites keep the
+    * table's layout (the Iceberg table-level partition-spec analog:
+    * partitioning here is a per-write property, so the newest
+    * `_tspec` IS the table's current spec). Callers drop it when the
+    * transform's source column is absent from what they write. */
   def currentTransform(spark: SparkSession,
       tableDir: String): Option[Transform] = {
     val cur = Try(currentVersion(spark, tableDir)).getOrElse(0)
@@ -4676,17 +4608,6 @@ object Versioned {
         read(spark, tableDir, Some(cur)).columns.contains(t.source))
   }
 
-  /** Declare the table's DEFAULT partition spec going forward — the
-    * Iceberg partition-spec-evolution analog (`ALTER TABLE … ADD/DROP
-    * PARTITION FIELD`, surfaced in SQL as `CALL graft.system
-    * .set_spec`): one metadata-only commit whose payload is the new
-    * spec. Files already written keep the layout (and the pruning)
-    * they were committed under — the engine's per-version `_tspec`
-    * already supports mixed layouts in one table — while every FUTURE
-    * commit/INSERT without an explicit transform inherits the new
-    * spec via [[currentTransform]]. `None` CLEARS the spec (the
-    * sentinel sidecar): later writes go unpartitioned rather than
-    * resurrecting an older spec from deeper in the manifest. */
   /** Pin fragments (`key=vN`) in version `cur`'s note that
     * `callerNote` does not itself re-pin. Every maintenance/metadata
     * rewrite prepends these to its own note — compaction, z-order,
@@ -4717,6 +4638,17 @@ object Versioned {
     else Some((keep ++ note.toSeq).mkString(";"))
   }
 
+  /** Declare the table's DEFAULT partition spec going forward — the
+    * Iceberg partition-spec-evolution analog (`ALTER TABLE … ADD/DROP
+    * PARTITION FIELD`, surfaced in SQL as `CALL graft.system
+    * .set_spec`): one metadata-only commit whose payload is the new
+    * spec. Files already written keep the layout (and the pruning)
+    * they were committed under — the engine's per-version `_tspec`
+    * already supports mixed layouts in one table — while every FUTURE
+    * commit/INSERT without an explicit transform inherits the new
+    * spec via [[currentTransform]]. `None` CLEARS the spec (the
+    * sentinel sidecar): later writes go unpartitioned rather than
+    * resurrecting an older spec from deeper in the manifest. */
   def setSpec(spark: SparkSession, tableDir: String,
       spec: Option[Transform], note: Option[String] = None,
       branch: Option[String] = None): Int = withCommitRetry() {
@@ -4846,6 +4778,23 @@ object Versioned {
     properties(spark, tableDir).get(WriteOrderProp).toSeq
       .flatMap(parseWriteOrder)
 
+  /** Resolve a declared (property-sourced) column name against a
+    * frame under the SESSION's case sensitivity — exact match first,
+    * then (case-insensitive analysis only) a unique ignore-case
+    * match; absent or ambiguous degrades to None, never a guess.
+    * Shared by the write-order and distribution-mode appliers so the
+    * two can never key on different columns for one declared name. */
+  private def resolveDeclared(df: DataFrame, c: String): Option[String] = {
+    val ci = !df.sparkSession.sessionState.conf.caseSensitiveAnalysis
+    df.columns.find(_ == c).orElse {
+      if (!ci) None
+      else df.columns.filter(_.equalsIgnoreCase(c)) match {
+        case Array(one) => Some(one)
+        case _ => None
+      }
+    }
+  }
+
   /** Apply the declared write order as a LOCAL sort (per output task,
     * hence per file — Iceberg write.sort-order semantics: files are
     * internally ordered for range-scan/compression locality without
@@ -4864,23 +4813,6 @@ object Versioned {
     * directory. Leading with the partition column makes the child's
     * ordering satisfy the writer's requirement, so no re-sort is
     * injected and the per-file order survives. */
-  /** Resolve a declared (property-sourced) column name against a
-    * frame under the SESSION's case sensitivity — exact match first,
-    * then (case-insensitive analysis only) a unique ignore-case
-    * match; absent or ambiguous degrades to None, never a guess.
-    * Shared by the write-order and distribution-mode appliers so the
-    * two can never key on different columns for one declared name. */
-  private def resolveDeclared(df: DataFrame, c: String): Option[String] = {
-    val ci = !df.sparkSession.sessionState.conf.caseSensitiveAnalysis
-    df.columns.find(_ == c).orElse {
-      if (!ci) None
-      else df.columns.filter(_.equalsIgnoreCase(c)) match {
-        case Array(one) => Some(one)
-        case _ => None
-      }
-    }
-  }
-
   private def applyWriteOrderFrom(p: Map[String, String],
       df: DataFrame, partBy: Option[String] = None): DataFrame = {
     def resolve(c: String): Option[String] = resolveDeclared(df, c)
@@ -5052,6 +4984,11 @@ object Versioned {
     case _ => false
   }
 
+  /** The stage's freshly written DATA files (absolute path strings);
+    * sidecar/tombstone dirs are not data. */
+  private def stagedDataFiles(f: FileSystem, stage: Path): Seq[String] =
+    dataFilesUnder(f, stage).map(_.path.toString)
+
   /** Harvest per-file (min, max) for `statsCols` from the freshly
     * written staging directory into a `_stats.tsv` sidecar — one extra
     * Spark scan of the DELTA for the harvest (Iceberg collects the
@@ -5064,11 +5001,6 @@ object Versioned {
     * `\N` = null) as strings next to their catalog type and cast back
     * for pruning comparisons (timestamps as TZ-independent epoch
     * micros, see [[statsRoundTrips]]). */
-  /** The stage's freshly written DATA files (absolute path strings);
-    * sidecar/tombstone dirs are not data. */
-  private def stagedDataFiles(f: FileSystem, stage: Path): Seq[String] =
-    dataFilesUnder(f, stage).map(_.path.toString)
-
   private def writeStats(spark: SparkSession, f: FileSystem,
       stage: Path, statsCols: Seq[String]): Unit = {
     val rows = statRowsFor(spark, f, stage, statsCols)
@@ -5186,20 +5118,6 @@ object Versioned {
       overwrite = false)
   }
 
-  /** Count-only sidecar for commits WITHOUT declared `statsCols`:
-    * every data commit persists per-file `cnt__all` (Iceberg's
-    * manifest `record_count`), so metadata tables ([[partitions]])
-    * answer row counts in O(versions) sidecar reads instead of
-    * O(files) footer opens — the difference between a dashboard query
-    * and a 10⁶-file driver walk at warehouse scale. Counts come from
-    * the freshly staged DELTA's parquet footers, read driver-side on
-    * a small pool (no Spark job, no data pages — the same move
-    * Iceberg's writers make when they report record counts into the
-    * manifest). The pseudo-row encodes as column name "" with null
-    * bounds: [[readWhereAllImpl]] filters stat rows by REAL column
-    * names, so count rows can never affect pruning. Best-effort — a
-    * failed footer read degrades that file to the read-time fallback,
-    * never fails the commit. */
   /** Per-task `recordsWritten` of ONE stage-write job, keyed by task
     * partition index. The write job just counted every row it wrote
     * (`BasicWriteTaskStatsTracker` publishes the final count into the
@@ -5277,14 +5195,20 @@ object Versioned {
     case _ => None
   }
 
-  /** Row-count sidecar for a stats-less commit, served from the write
-    * job's own task metrics: a file whose task index maps to exactly
-    * ONE staged file takes that task's `recordsWritten` for free. Only
-    * ambiguous or unmatched files (a `partitionBy` task fanning into
-    * several directories, a `maxRecordsPerFile` split, a drained-late
-    * metric) fall back to a footer open — the unpartitioned protocol
-    * path (appends, merge rewrites, binpacks) commits with ZERO footer
-    * reads. */
+  /** Count-only sidecar for commits WITHOUT declared `statsCols`:
+    * every data commit persists per-file `cnt__all` (Iceberg's
+    * manifest `record_count`), so metadata tables ([[partitions]])
+    * answer row counts in O(versions) sidecar reads instead of
+    * O(files) footer opens. Counts come from the write job's own task
+    * metrics: a file whose task index maps to exactly ONE staged file
+    * takes that task's `recordsWritten` for free. Only ambiguous or
+    * unmatched files (a `partitionBy` task fanning into several
+    * directories, a `maxRecordsPerFile` split, a drained-late metric)
+    * fall back to a footer open — the unpartitioned protocol path
+    * (appends, merge rewrites, binpacks) commits with ZERO footer
+    * reads. The pseudo-row encodes as column name "" with null
+    * bounds: [[readWhereAllImpl]] filters stat rows by REAL column
+    * names, so count rows can never affect pruning. */
   private def writeCountStats(spark: SparkSession, f: FileSystem,
       stage: Path, taskRows: Map[Int, Long] = Map.empty): Unit = {
     val dataFiles = stagedDataFiles(f, stage)
@@ -5603,36 +5527,6 @@ object Versioned {
     case object CountStar extends StatsAgg
   }
 
-  /** Answer a global MIN / MAX / COUNT aggregate from the manifest's
-    * stats sidecars alone — ZERO data-file I/O, the Iceberg
-    * metadata-aggregate optimization ("SELECT min(c) FROM t" as an
-    * O(manifest) driver read instead of a 100-TB scan; Spark's own
-    * parquet COUNT pushdown still opens every footer, this opens
-    * none). `wants` is (output column name, aggregate) in output
-    * order.
-    *
-    * Returns None — the caller falls back to the scan plan — unless
-    * the sidecars PROVABLY carry the answer:
-    *  - live MoR tombstones (a tombstone newer than any data entry it
-    *    covers) remove rows the sidecar totals still count;
-    *  - pending schema steps mean older files carry pre-evolution
-    *    names/types (the exportSnapshot discipline) — compaction
-    *    clears both;
-    *  - every live data file must contribute: a known row count
-    *    (format-v2 or count-only sidecar) for COUNT(*), a (count,
-    *    null-count) row of the column for COUNT(c), a bounds row of
-    *    the column — with ONE consistent dtype across files — for
-    *    MIN/MAX (files committed without stats for the column bail);
-    *  - every stored non-null bound must cast cleanly back to the
-    *    column type (a foreign/stale sidecar degrades a FILTER to a
-    *    full scan, but an aggregate is all-or-nothing).
-    * MIN/MAX ignore nulls exactly like the scan aggregate (an
-    * all-null file stores null bounds, which the fold skips), and
-    * bounds evaluate through a tiny Spark job so string/timestamp
-    * ordering and cast semantics are the engine's own, never the
-    * JVM's. The 0-row evaluation input (an empty table or an
-    * all-null column) yields the scan-equal answer: COUNT 0, MIN and
-    * MAX null. */
   /** The per-file stats view of a snapshot when (and only when)
     * sidecar-served answers are PROVABLY sound: None on live MoR
     * tombstones (their rows are still in the sidecar totals) or
@@ -5696,6 +5590,36 @@ object Versioned {
     rows.get(c).filter(sr => sr.values >= 0 && sr.nulls >= 0)
       .map(sr => sr.values - sr.nulls)
 
+  /** Answer a global MIN / MAX / COUNT aggregate from the manifest's
+    * stats sidecars alone — ZERO data-file I/O, the Iceberg
+    * metadata-aggregate optimization ("SELECT min(c) FROM t" as an
+    * O(manifest) driver read instead of a 100-TB scan; Spark's own
+    * parquet COUNT pushdown still opens every footer, this opens
+    * none). `wants` is (output column name, aggregate) in output
+    * order.
+    *
+    * Returns None — the caller falls back to the scan plan — unless
+    * the sidecars PROVABLY carry the answer:
+    *  - live MoR tombstones (a tombstone newer than any data entry it
+    *    covers) remove rows the sidecar totals still count;
+    *  - pending schema steps mean older files carry pre-evolution
+    *    names/types (the exportSnapshot discipline) — compaction
+    *    clears both;
+    *  - every live data file must contribute: a known row count
+    *    (format-v2 or count-only sidecar) for COUNT(*), a (count,
+    *    null-count) row of the column for COUNT(c), a bounds row of
+    *    the column — with ONE consistent dtype across files — for
+    *    MIN/MAX (files committed without stats for the column bail);
+    *  - every stored non-null bound must cast cleanly back to the
+    *    column type (a foreign/stale sidecar degrades a FILTER to a
+    *    full scan, but an aggregate is all-or-nothing).
+    * MIN/MAX ignore nulls exactly like the scan aggregate (an
+    * all-null file stores null bounds, which the fold skips), and
+    * bounds evaluate through a tiny Spark job so string/timestamp
+    * ordering and cast semantics are the engine's own, never the
+    * JVM's. The 0-row evaluation input (an empty table or an
+    * all-null column) yields the scan-equal answer: COUNT 0, MIN and
+    * MAX null. */
   def statsAggregate(spark: SparkSession, tableDir: String,
       wants: Seq[(String, StatsAgg)],
       version: Option[Int] = None): Option[DataFrame] = {
@@ -6015,13 +5939,7 @@ object Versioned {
           // a pending schema step touching the transform's source
           // makes the spec's name stale for this root — skip partition
           // pruning rather than prune on the wrong column
-          if (rn.exists {
-            case RenameStep(_, from, to) =>
-              from == t.source || to == t.source
-            case AddStep(_, n, _) => n == t.source
-            case DropStep(_, n) => n == t.source
-            case RetypeStep(_, n, _) => n == t.source
-          }) None
+          if (rn.exists(_.cols.contains(t.source))) None
           else ranges.collectFirst { case (c, lo, hi) if c == t.source =>
             t.rangePred(lo, hi, dt, zone).map((_, t.partCol))
           }.flatten
@@ -6034,12 +5952,7 @@ object Versioned {
       // stale, so that entry degrades to a full scan (the evolved
       // post-scan filter stays correct) — degrade, never prune on the
       // wrong physical column
-      val renamedCols = rn.flatMap {
-        case RenameStep(_, from, to) => Seq(from, to)
-        case AddStep(_, n, _) => Seq(n)
-        case DropStep(_, n) => Seq(n)
-        case RetypeStep(_, n, _) => Seq(n)
-      }.toSet
+      val renamedCols = rn.flatMap(_.cols).toSet
       val st =
         if (colNames.exists(renamedCols.contains)) Nil
         else byRoot.getOrElse(vroot, Nil)

@@ -296,6 +296,57 @@ class DmlSpec extends SparkSpec {
       .map(_.getString(0)).toSeq == Seq("fresh"))
   }
 
+  test("a rewrite that deletes the last live rows under a live " +
+      "tombstone leaves the table readable") {
+    import spark.implicits._
+    val tombs: Seq[(String, String => Unit)] = Seq(
+      "rows" -> (t => Versioned.deleteRows(spark, t, Seq(3).toDF("id"))),
+      "where" -> (t => Versioned.deleteWhere(spark, t, col("id") === 3)))
+    val removals: Seq[(String, (String, String) => Unit)] = Seq(
+      "delete" -> ((t, _) => Versioned.delete(spark, t, col("id") > 0)),
+      "merge" -> ((t, _) => Versioned.mergeInto(spark, t,
+        (1 to 10).toDF("id"), col("__t.id") === col("__s.id"),
+        matched = Seq(Versioned.MergeDelete(None)))),
+      "sql" -> { (_, g) =>
+        (1 to 10).toDF("id").createOrReplaceTempView("mrg_all")
+        spark.sql(s"""
+          MERGE INTO $g USING mrg_all src ON $g.id = src.id
+          WHEN MATCHED THEN DELETE
+        """)
+      })
+    for ((tk, tomb) <- tombs; (rk, remove) <- removals) {
+      val (t, g) = fresh(s"empty_rewrite_${tk}_$rk")
+      Versioned.commit((1 to 10).map(i => (i, s"r$i")).toDF("id", "v")
+        .coalesce(1), t)
+      tomb(t)
+      remove(t, g)
+      assert(Versioned.read(spark, t).count() == 0, s"$tk/$rk")
+      // the tombstoned key comes back as a fresh row
+      Versioned.append(Seq((3, "new"), (11, "x")).toDF("id", "v"), t)
+      assert(spark.sql(s"SELECT id, v FROM $g ORDER BY id").collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq ==
+        Seq((3, "new"), (11, "x")), s"$tk/$rk")
+    }
+  }
+
+  test("compactDeletes that empties the files it rewrites keeps the " +
+      "other data and its tombstone") {
+    import spark.implicits._
+    val (t, _) = fresh("compact_deletes_empty")
+    Versioned.commit(Seq((1, "a"), (2, "b")).toDF("id", "v").coalesce(1), t)
+    Versioned.append((3 to 12).map(i => (i, s"r$i")).toDF("id", "v")
+      .coalesce(1), t)
+    // the first file loses every row, the second one row in ten
+    Versioned.deleteRows(spark, t, Seq(1, 2, 5).toDF("id"))
+    // a pending schema step sits between the file scans and the
+    // per-file deletion counts
+    Versioned.renameColumn(spark, t, "v", "w")
+    val before = Versioned.read(spark, t).orderBy("id").collect().toSeq
+    Versioned.compactDeletes(spark, t, minDeleteRatio = 0.5)
+    assert(Versioned.read(spark, t).orderBy("id").collect().toSeq == before)
+    assert(Versioned.dataFileCount(spark, t) == 1)
+  }
+
   test("MERGE WITH SCHEMA EVOLUTION adds missing source columns") {
     import spark.implicits._
     val (t, g) = fresh("merge_evo")
