@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import graft.sources.Tables
@@ -653,10 +653,17 @@ object Dedup {
     val pre = docsDf.agg(count(lit(1)), count(col("doc_id")),
       count_distinct(col("doc_id"))).head()
     require(pre.getLong(0) == pre.getLong(1) &&
-      pre.getLong(1) == pre.getLong(2),
-      s"$what needs one row per non-null doc_id — duplicate or null " +
-        "ids would merge two documents into one sketch")
+      pre.getLong(1) == pre.getLong(2), oneRowPerDoc(what))
   }
+
+  private def oneRowPerDoc(what: String): String =
+    s"$what needs one row per non-null doc_id — duplicate or null " +
+      "ids would merge two documents into one sketch"
+
+  private def localFrame(s: SparkSession, ddl: String,
+      rows: Seq[Row]): DataFrame =
+    s.createDataFrame(rows.asJava,
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** One narrow row per doc with BOTH outputs of one aggregation pass:
     * the 16 folded band keys (candidate generation) and the raw
@@ -687,13 +694,8 @@ object Dedup {
     requireOneRowPerDoc(docsDf, "buildDedupIndex")
     val sketch = dedupSketchOf(docsDf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sv = Versioned.commit(sketch.select(col("doc_id"), col("sig")),
-        dedupSigsDir(indexDir), statsCols = Seq("doc_id"))
-      Versioned.commit(bandRowsOf(sketch), indexDir,
-        partitionCol = Some("band"), note = Some(s"sigs=v$sv"),
-        statsCols = Seq("doc_id"))
-    } finally sketch.unpersist(blocking = false)
+    try publishSketch(sketch, indexDir, fresh = true)
+    finally sketch.unpersist(blocking = false)
   }
 
   def buildDedupIndex(s: SparkSession, d: String, indexDir: String): Unit =
@@ -755,7 +757,8 @@ object Dedup {
     require(Versioned.currentVersion(s, indexDir) > 0,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
     requireOneRowPerDoc(newDocs, "appendToDedupIndex")
-    requireNoLiveTombs(s, newDocs, indexDir, "appendToDedupIndex")
+    requireNoLiveTombs(newDocs.select(col("doc_id")),
+      dedupTombs(s, indexDir), indexDir, "appendToDedupIndex")
     val clash = Versioned.read(s, dedupSigsDir(indexDir),
         dedupSigsPin(s, indexDir))
       .join(newDocs.select(col("doc_id")).distinct(), Seq("doc_id"),
@@ -766,24 +769,30 @@ object Dedup {
         "their band rows; rebuild to re-index")
     val sketch = dedupSketchOf(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sv = Versioned.append(
-        sketch.select(col("doc_id"), col("sig")),
-        dedupSigsDir(indexDir), statsCols = Seq("doc_id"))
-      Versioned.append(bandRowsOf(sketch), indexDir,
-        partitionCol = Some("band"), note = Some(s"sigs=v$sv"),
-        statsCols = Seq("doc_id"))
-    } finally sketch.unpersist(blocking = false)
+    try publishSketch(sketch, indexDir)
+    finally sketch.unpersist(blocking = false)
+  }
+
+  /** The one index-pair publish of a sketch (`fresh` commits, else
+    * appends): signatures FIRST, then the band rows (one file per band
+    * partition) with a note pinning that sigs version. */
+  private def publishSketch(sketch: DataFrame, indexDir: String,
+      fresh: Boolean = false): Int = {
+    val write: (DataFrame, String, Option[String], Option[String]) => Int =
+      if (fresh) Versioned.commit(_, _, _, _, Seq("doc_id"))
+      else Versioned.append(_, _, _, _, Seq("doc_id"))
+    val sv = write(sketch.select(col("doc_id"), col("sig")),
+      dedupSigsDir(indexDir), None, None)
+    write(bandRowsOf(sketch), indexDir, Some("band"), Some(s"sigs=v$sv"))
   }
 
   /** A batch id with a LIVE tombstone refuses up front with its own
     * message: its band/sig rows still stand on disk, so an append
     * would duplicate them and the next compaction's anti-join would
     * kill the new rows along with the old. */
-  private def requireNoLiveTombs(s: SparkSession, newDocs: DataFrame,
+  private def requireNoLiveTombs(ids: DataFrame, tombs: DataFrame,
       indexDir: String, what: String): Unit = {
-    val tombClash = newDocs.select(col("doc_id"))
-      .join(broadcast(dedupTombs(s, indexDir)), Seq("doc_id"),
+    val tombClash = ids.join(broadcast(tombs), Seq("doc_id"),
         "left_semi").limit(5).collect().map(_.getLong(0))
     require(tombClash.isEmpty,
       s"$what: doc_ids ${tombClash.mkString(", ")} are " +
@@ -862,7 +871,16 @@ object Dedup {
     * survives (the d06 min-id convention), so the index never ingests
     * two copies in the same batch. Returns (doc_id, kept, dup_of) —
     * dup_of is the standing-corpus or smaller-id batch doc that
-    * evicted it (null when kept).
+    * evicted it (null when kept; a doc with no shingles has no sketch,
+    * so it is kept and not appended).
+    *
+    * The driver verifies: the batch ids and band keys collect; one
+    * index scan joined with the broadcast keys gives the corpus
+    * candidates, bucket groups of the keys the within-batch ones; one
+    * read of the pinned signatures ∪ the sketch, semi-joined on the
+    * candidate (by default also the batch) ids, feeds the compare.
+    * Driver bound: 8 B per batch id, 16 band keys per batch doc, the
+    * candidate pairs and the candidates' signatures.
     *
     * `allowReingest = true` makes a crash-retry idempotent (the
     * vector loop's semantics, [[Similarity.ingestDedupVectors]]):
@@ -888,103 +906,85 @@ object Dedup {
     val v0 = Versioned.currentVersion(s, indexDir)
     require(v0 > 0,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
-    requireOneRowPerDoc(newDocs, "ingestDedup")
+    val ids = newDocs.select(col("doc_id")).collect()
+    val batchIds = ids.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
+    require(batchIds.length == ids.length, oneRowPerDoc("ingestDedup"))
     val sigsPin = dedupSigsPin(s, indexDir)
-    // tombstones pinned like every other probe input, so every read
-    // of this call sees one tombstone state
+    // tombstones pinned like every other probe input (every read of
+    // this call sees one state); a never-tombstoned index skips them
     val tombsV = Versioned.currentVersion(s, dedupTombsDir(indexDir))
-    val tombsPinned = dedupTombs(s, indexDir,
-      Some(tombsV).filter(_ > 0))
-    requireNoLiveTombs(s, newDocs, indexDir, "ingestDedup")
-    // ids already LIVE in the index: refused loudly by default
-    // (corpusCands excludes self-pairs, so a crash-retry of an
-    // already-landed batch would otherwise re-keep every doc and
-    // append its band/sig rows a SECOND time — duplicate sketch rows
-    // forever); kept-by-identity under allowReingest
-    val liveIds = Versioned.read(s, dedupSigsDir(indexDir), sigsPin)
-      .select(col("doc_id"))
-      .join(broadcast(tombsPinned), Seq("doc_id"), "left_anti")
-    if (!allowReingest) {
-      val clash = liveIds
-        .join(newDocs.select(col("doc_id")).distinct(), Seq("doc_id"),
-          "left_semi").limit(5).collect().map(_.getLong(0))
+    val tombs = dedupTombs(s, indexDir, Some(tombsV))
+    if (tombsV > 0) requireNoLiveTombs(localFrame(s, "doc_id BIGINT",
+      batchIds.map(Row(_))), tombs, indexDir, "ingestDedup")
+    def live(df: DataFrame) = if (tombsV == 0) df
+      else df.join(broadcast(tombs), Seq("doc_id"), "left_anti")
+    val liveSigs = live(Versioned.read(s, dedupSigsDir(indexDir), sigsPin))
+    // under allowReingest the already-live slice skips the sketch
+    // pass entirely — the standing sketch is the document's identity
+    val sketch = dedupSketchOf(if (!allowReingest) newDocs
+        else newDocs.join(liveSigs.select(col("doc_id")), Seq("doc_id"),
+          "left_anti"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val keys = bandRowsOf(sketch).collect()
+      // (dup_of, new_id, dup_of's side: 0 index, 1 batch); a taken-
+      // down doc never evicts a new one, nor a doc itself (an indexed
+      // batch id refuses below); batch docs sharing a bucket pair up
+      val corpusCands = if (keys.isEmpty) Array.empty[Row]
+        else live(Versioned.read(s, indexDir, Some(v0))).as("y")
+          .join(broadcast(localFrame(s,
+              "doc_id BIGINT, band INT, band_hash BIGINT", keys)).as("x"),
+            col("x.band") === col("y.band") &&
+              col("x.band_hash") === col("y.band_hash") &&
+              col("x.doc_id") =!= col("y.doc_id"))
+          .select(col("y.doc_id"), col("x.doc_id")).distinct().collect()
+      val cands = (corpusCands.map(r => (r.getLong(0), r.getLong(1), 0)) ++
+        keys.groupMap(k => (k.getInt(1), k.getLong(2)))(_.getLong(0)).values
+          .flatMap(_.sorted.combinations(2).map(p => (p(0), p(1), 1))))
+        .toSeq.distinct
+      // ONE read, tagged by side (batch ids ride on the index side by
+      // default); with no candidate, no signature column is read
+      val need = (cands.flatMap { case (a, b, side) =>
+          Seq(Row(a, side), Row(b, 1)) } ++
+        (if (allowReingest) Nil else batchIds.toSeq.map(Row(_, 0)))).distinct
+      val fetched = if (need.isEmpty) Array.empty[Row]
+        else liveSigs.select(col("doc_id"), lit(0).as("side"), col("sig"))
+          .unionByName(sketch.select(col("doc_id"), lit(1).as("side"),
+            col("sig")))
+          .join(broadcast(localFrame(s, "doc_id BIGINT, side INT", need)),
+            Seq("doc_id", "side"), "left_semi")
+          .select(col("doc_id"), col("side"),
+            (if (cands.isEmpty) lit(null) else col("sig")).as("sig"))
+          .collect()
+      val clash = fetched.filter(r => !allowReingest && r.getInt(1) == 0)
+        .map(_.getLong(0)).intersect(batchIds).sorted.take(5)
       require(clash.isEmpty,
         s"ingestDedup: doc_ids ${clash.mkString(", ")} are already " +
           s"indexed in $indexDir — the batch (or part of it) was " +
           "already ingested; retry with allowReingest = true to " +
           "treat them as kept-by-identity, or filter the overlap " +
           s"out (an anti-join on `${dedupSigsDir(indexDir)}`)")
-    }
-    // under allowReingest the already-live slice skips the sketch
-    // pass entirely — the standing sketch is the document's identity
-    val docsIn = if (allowReingest)
-      newDocs.join(liveIds, Seq("doc_id"), "left_anti")
-    else newDocs
-    val sketch = dedupSketchOf(docsIn)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val batchBands = bandRowsOf(sketch)
-      // corpus candidates + within-batch candidates (smaller id wins,
-      // the d06 min-id convention) in one union, then one signature
-      // verification pass over stored sketches only; tombstoned
-      // corpus docs drop out of candidate generation (broadcast
-      // anti-join), so a taken-down document never evicts a new one
-      val corpusCands = batchBands.as("x")
-        .join(Versioned.read(s, indexDir, Some(v0))
-            .join(broadcast(tombsPinned), Seq("doc_id"), "left_anti")
-            .as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.band_hash") === col("y.band_hash") &&
-            col("x.doc_id") =!= col("y.doc_id"))
-        .select(col("y.doc_id").as("dup_of"),
-          col("x.doc_id").as("new_id"))
-      val batchCands = batchBands.as("x")
-        .join(batchBands.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.band_hash") === col("y.band_hash") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("dup_of"),
-          col("y.doc_id").as("new_id"))
-      val cands = corpusCands.unionByName(batchCands).distinct()
-      val sigPool = Versioned.read(s, dedupSigsDir(indexDir), sigsPin)
-        .select(col("doc_id"), col("sig"))
-        .unionByName(sketch.select(col("doc_id"), col("sig")))
-        .join(cands.select(col("dup_of").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_semi")
-        .select(col("doc_id").as("dup_of"), col("sig").as("a_sig"))
-      // one eviction witness per dropped doc: the smallest matching
-      // dup_of (a doc evicted by an evicted batch doc keeps its
-      // DIRECT witness — the pair-level contract, same as d06)
-      val dups = cands
-        .join(sigPool, Seq("dup_of"))
-        .join(sketch.select(col("doc_id").as("new_id"),
-          col("sig").as("b_sig")), Seq("new_id"))
-        .filter(aggregate(zip_with(col("a_sig"), col("b_sig"),
-          (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") /
-          NumPerms.toDouble >= minJ)
-        .groupBy(col("new_id"))
-        .agg(min(col("dup_of")).as("dup_of"))
-      // the probe runs ONCE: its drop set (at most one row per batch
-      // doc — the verdict's own scale) collects to the driver, and
-      // the append and the returned verdict are two views of it
-      val drops = broadcast(s.createDataFrame(dups.collect().toSeq.asJava,
-        dups.schema))
-      val survivorSketch = sketch.join(
-        drops.select(col("new_id").as("doc_id")), Seq("doc_id"),
-        "left_anti")
-      if (!survivorSketch.isEmpty) {
-        val sv = Versioned.append(
-          survivorSketch.select(col("doc_id"), col("sig")),
-          dedupSigsDir(indexDir), statsCols = Seq("doc_id"))
-        Versioned.append(bandRowsOf(survivorSketch), indexDir,
-          partitionCol = Some("band"), note = Some(s"sigs=v$sv"),
-          statsCols = Seq("doc_id"))
-      }
-      // the verdict is bounded by the batch: its id column joined with
-      // the materialized drop set, no cache and no index read, so a
-      // late evaluation rescans only the ids and cannot drift as the
-      // index moves on
+      // estimated Jaccard = matching minima / perms; one eviction
+      // witness per dropped doc: the smallest matching dup_of (a doc
+      // evicted by an evicted batch doc keeps its DIRECT witness — the
+      // pair-level contract, same as d06)
+      val sigOf = fetched.map(r =>
+        (r.getLong(0), r.getInt(1)) -> r.getSeq[Long](2)).toMap
+      val dropRows = cands.flatMap { case (a, b, side) =>
+          for (x <- sigOf.get((a, side)); y <- sigOf.get((b, 1))
+            if x.lazyZip(y).count(p => p._1 == p._2).toDouble /
+              NumPerms >= minJ) yield b -> a }
+        .groupMapReduce(_._1)(_._2)(math.min)
+        .map { case (b, a) => Row(b, a) }.toSeq
+      // append and verdict are two views of the local drop set; every
+      // drop is a distinct sketched doc, so counts decide the append
+      val drops = broadcast(localFrame(s, "new_id BIGINT, dup_of BIGINT",
+        dropRows))
+      if (keys.map(_.getLong(0)).distinct.length > dropRows.length)
+        publishSketch(sketch.join(drops.select(col("new_id").as("doc_id")),
+          Seq("doc_id"), "left_anti"), indexDir)
+      // the verdict holds no cache and reads no index: a late
+      // evaluation rescans only the batch ids and cannot drift
       newDocs.select(col("doc_id"))
         .join(drops.withColumnRenamed("new_id", "doc_id"),
           Seq("doc_id"), "left")

@@ -429,7 +429,7 @@ object Similarity {
       .withColumnRenamed("vec_id", "query_id")
       .withColumnRenamed("embedding", "q_emb")
       .withColumnRenamed("nrm", "q_nrm")
-    val qCells = {
+    val qPlan = {
       val scored = q.join(broadcast(cents))
         .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"),
           (dot(col("c_emb"), col("q_emb")) /
@@ -439,12 +439,15 @@ object Similarity {
       scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= NProbe)
         .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
-    }.cache()
-    // The probed cell ids are metadata (bounded by queries x nProbe,
-    // like a partition listing) — collecting them turns the probe into
-    // a statically partition-pruned scan.
-    val probed = qCells.select(col("cell")).distinct()
-      .collect().map(_.getLong(0))
+    }
+    // The (query, cell) probe rows are metadata-scale (queries x
+    // nProbe, like a partition listing) and broadcast below anyway:
+    // collected ONCE, they become a local frame (no cached block to
+    // release) and their cell ids turn the probe into a statically
+    // partition-pruned scan.
+    val qRows = qPlan.collect()
+    val qCells = s.createDataFrame(qRows.toSeq.asJava, qPlan.schema)
+    val probed = qRows.map(_.getAs[Long]("cell")).distinct
     // Partition-dir values infer as int; filter with ints so the
     // predicate hits the partition column uncasted (a cast would block
     // static pruning), then widen for the probe join. Cell ids are

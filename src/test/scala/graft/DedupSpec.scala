@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Dedup
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends SparkSpec {
 
@@ -248,6 +249,150 @@ class DedupSpec extends SparkSpec {
       Seq(witnesses.min).toDF("doc_id"), idx)
     Dedup.compactDedupIndex(spark, idx)
     assert(rows() == first)
+  }
+
+  /** One ingest of the 300-449 batch into a fresh index of docs < 300,
+    * with the Spark jobs it ran (the verdict's collect included) and
+    * the parquet files its new band and sigs versions hold. */
+  private lazy val guardedIngest = {
+    import spark.implicits._
+    val idx = "target/tmp/dedup-guard"
+    clean2(idx, s"$idx.sigs", s"$idx.tombs")
+    val all = graft.sources.Tables.load(spark, sf, "documents")
+    Dedup.buildDedupIndexOf(all.filter($"doc_id" < 300), idx)
+    val batch = all.filter($"doc_id" >= 300 && $"doc_id" < 450)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val lis = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.SparkInternals.waitListenerBus(sc, 10000L)
+    sc.addSparkListener(lis)
+    val verdict = try {
+      val v = Dedup.ingestDedup(spark, batch, idx).collect()
+      org.apache.spark.sql.graft.SparkInternals.waitListenerBus(sc, 10000L)
+      v
+    } finally sc.removeSparkListener(lis)
+    def parquetByDir(table: String): Map[String, Int] = {
+      val v = graft.sources.Versioned.currentVersion(spark, table)
+      org.apache.commons.io.FileUtils.listFiles(
+          new java.io.File(s"$table/v=$v"), Array("parquet"), true)
+        .asScala.toSeq.filterNot(_.getPath.contains("/_"))
+        .groupBy(_.getParentFile.getName).map { case (d, fs) => d -> fs.size }
+    }
+    (jobs.get, verdict, parquetByDir(idx), parquetByDir(s"$idx.sigs"))
+  }
+
+  test("ingestDedup of a 150-doc batch on a 300-doc index runs at most " +
+      "24 Spark jobs") {
+    val (jobs, verdict, _, _) = guardedIngest
+    assert(verdict.exists(!_.getBoolean(1)), "fixture must drop someone")
+    info(s"ingestDedup jobs: $jobs")
+    assert(jobs <= 24, s"ingestDedup ran $jobs jobs")
+  }
+
+  test("one ingest adds exactly one data file per touched band " +
+      "partition and one sigs file") {
+    val (_, verdict, bandFiles, sigsFiles) = guardedIngest
+    assert(verdict.exists(_.getBoolean(1)), "fixture must keep someone")
+    // every survivor holds one row per band, so all bands are touched
+    assert(bandFiles.keySet == (0 until Dedup.Bands).map(b => s"band=$b").toSet,
+      bandFiles)
+    assert(bandFiles.values.forall(_ == 1), bandFiles)
+    assert(sigsFiles.values.sum == 1, sigsFiles)
+  }
+
+  /** A fresh index of the fixture's docs < 300 for the edge cases. */
+  private def edgeIndex(name: String): String = {
+    import spark.implicits._
+    val idx = s"target/tmp/$name"
+    clean2(idx, s"$idx.sigs", s"$idx.tombs")
+    Dedup.buildDedupIndexOf(graft.sources.Tables.load(spark, sf,
+      "documents").filter($"doc_id" < 300), idx)
+    idx
+  }
+
+  private def verdictOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) ->
+      (r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
+
+  private def indexedIds(idx: String): Set[Long] =
+    graft.sources.Versioned.read(spark, s"$idx.sigs")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+
+  test("ingestDedup edge cases: a doc with no shingles is kept and not " +
+      "appended; a batch with no candidate reads no signature") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val idx = edgeIndex("dedup-edge")
+    val sigsRoot = new java.io.File(s"$idx.sigs").getAbsolutePath
+    // the executed plans of every action the ingest runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val lis = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children ++ o.subqueries
+    }).flatMap(nodes)
+    // does any action of `body` scan the sig column of the sigs table?
+    def readsSignatures(body: => Unit): Boolean = {
+      org.apache.spark.sql.graft.SparkInternals
+        .waitListenerBus(spark.sparkContext, 10000L)
+      plans.clear()
+      spark.listenerManager.register(lis)
+      try {
+        body
+        org.apache.spark.sql.graft.SparkInternals
+          .waitListenerBus(spark.sparkContext, 10000L)
+      } finally spark.listenerManager.unregister(lis)
+      plans.asScala.toSeq.flatMap(nodes).exists {
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(
+            _.toUri.getPath.startsWith(sigsRoot)) &&
+          f.requiredSchema.fieldNames.contains("sig")
+        case _ => false
+      }
+    }
+    val fresh = Seq((8000L, "too short"),
+      (8001L, "an entirely novel sentence that shares no shingle " +
+        "with any document of the fixture corpus qzx"))
+      .toDF("doc_id", "text")
+    var v = Map.empty[Long, (Boolean, Long)]
+    assert(!readsSignatures {
+      v = verdictOf(Dedup.ingestDedup(spark, fresh, idx))
+    }, "a batch with no candidate must fetch no signature")
+    assert(v == Map(8000L -> (true, -1L), 8001L -> (true, -1L)))
+    val ids = indexedIds(idx)
+    assert(ids.contains(8001L) && !ids.contains(8000L))
+    // the detector does see the read when candidates exist
+    assert(readsSignatures {
+      Dedup.ingestDedup(spark, graft.sources.Tables.load(spark, sf,
+        "documents").filter($"doc_id" >= 300 && $"doc_id" < 450), idx)
+    })
+  }
+
+  test("ingestDedup edge case: a dropped doc whose only witness is " +
+      "another batch doc") {
+    import spark.implicits._
+    val idx = edgeIndex("dedup-edge-batch")
+    val text = "a wholly novel passage about lighthouse keepers and the " +
+      "tides of a northern harbor in winter"
+    val v = verdictOf(Dedup.ingestDedup(spark,
+      Seq((8101L, text), (8100L, text)).toDF("doc_id", "text"), idx))
+    assert(v == Map(8100L -> (true, -1L), 8101L -> (false, 8100L)))
+    val ids = indexedIds(idx)
+    assert(ids.contains(8100L) && !ids.contains(8101L))
   }
 
   test("simhash banding reproduces the exact shingle-jaccard pairs") {

@@ -463,6 +463,20 @@ class SimilaritySpec extends SparkSpec {
       s"appended twin must be query 0's top-1, got $top1")
   }
 
+  test("ivfTopKIndexed leaves no cached block behind") {
+    val dir = "target/tmp/ivf-index-nocache"
+    Seq(dir, s"$dir.centroids").foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    Similarity.buildIvfIndex(spark, sf, dir)
+    // a first probe of another query batch warms whatever the fixture
+    // load itself keeps; the measured probe must then add nothing
+    Similarity.ivfTopKIndexed(spark, sf, dir, numQueries = 3).collect()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(Similarity.ivfTopKIndexed(spark, sf, dir).collect().nonEmpty)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"probe left cached RDDs $added")
+  }
+
   test("int8-IVF index deletes: same tombstone discipline as IVF-PQ") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
