@@ -35,19 +35,9 @@ case class VecDot(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i))
-        acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    java.lang.Double.valueOf(acc)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    java.lang.Double.valueOf(
+      VecDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
@@ -70,4 +60,24 @@ case class VecDot(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(newLeft, newRight)
+}
+
+object VecDot {
+
+  /** The interpreted kernel: Σ (double) xᵢ·(double) yᵢ over the common
+    * prefix, a null element on either side counting as 0. Driver-side
+    * scoring ([[graft.operators.Similarity.ingestDedupVectors]]) calls
+    * it on collected embeddings, so its scores equal the codegen'd
+    * path's bit for bit. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i))
+        acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      i += 1
+    }
+    acc
+  }
 }

@@ -660,7 +660,7 @@ object Dedup {
     s"$what needs one row per non-null doc_id — duplicate or null " +
       "ids would merge two documents into one sketch"
 
-  private def localFrame(s: SparkSession, ddl: String,
+  private[operators] def localFrame(s: SparkSession, ddl: String,
       rows: Seq[Row]): DataFrame =
     s.createDataFrame(rows.asJava,
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
@@ -970,26 +970,22 @@ object Dedup {
       // pair-level contract, same as d06)
       val sigOf = fetched.map(r =>
         (r.getLong(0), r.getInt(1)) -> r.getSeq[Long](2)).toMap
-      val dropRows = cands.flatMap { case (a, b, side) =>
+      val dropOf = cands.flatMap { case (a, b, side) =>
           for (x <- sigOf.get((a, side)); y <- sigOf.get((b, 1))
             if x.lazyZip(y).count(p => p._1 == p._2).toDouble /
               NumPerms >= minJ) yield b -> a }
         .groupMapReduce(_._1)(_._2)(math.min)
-        .map { case (b, a) => Row(b, a) }.toSeq
       // append and verdict are two views of the local drop set; every
       // drop is a distinct sketched doc, so counts decide the append
-      val drops = broadcast(localFrame(s, "new_id BIGINT, dup_of BIGINT",
-        dropRows))
-      if (keys.map(_.getLong(0)).distinct.length > dropRows.length)
-        publishSketch(sketch.join(drops.select(col("new_id").as("doc_id")),
-          Seq("doc_id"), "left_anti"), indexDir)
-      // the verdict holds no cache and reads no index: a late
-      // evaluation rescans only the batch ids and cannot drift
-      newDocs.select(col("doc_id"))
-        .join(drops.withColumnRenamed("new_id", "doc_id"),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), col("dup_of").isNull.as("kept"),
-          col("dup_of"))
+      if (keys.map(_.getLong(0)).distinct.length > dropOf.size)
+        publishSketch(sketch.join(broadcast(localFrame(s, "doc_id BIGINT",
+            dropOf.keys.map(Row(_)).toSeq)), Seq("doc_id"), "left_anti"),
+          indexDir)
+      // the verdict is a local frame of the collected ids: collecting
+      // it runs no job and reads no file, so it cannot drift
+      localFrame(s, "doc_id BIGINT, kept BOOLEAN NOT NULL, dup_of BIGINT",
+        batchIds.toSeq.map(id => Row(id, !dropOf.contains(id),
+          dropOf.get(id).map(Long.box).orNull)))
     } finally sketch.unpersist(blocking = false)
   }
 

@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData,
+  SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import scala.jdk.CollectionConverters._
 import graft.sources.{Tables, Versioned}
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, VecDot}
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` fixture
@@ -357,9 +359,7 @@ object Similarity {
     // the re-append trap, same as appendToIvfPqIndex: a
     // live-tombstoned vec_id's fresh entry would be anti-joined away
     // at every probe — compact first, then append
-    val clash = newVectors.select(col("vec_id"))
-      .join(broadcast(vecTombs(s, indexDir)), Seq("vec_id"),
-        "left_semi").limit(5).collect().map(_.getLong(0))
+    val clash = liveTombClash(s, newVectors, indexDir)
     require(clash.isEmpty,
       s"appendToIvfIndex: vec_ids ${clash.mkString(", ")} are " +
         s"live-tombstoned in $indexDir — the append would be " +
@@ -914,9 +914,7 @@ object Similarity {
     // same re-append trap as the text index: a live-tombstoned
     // vec_id's fresh codes would be anti-joined away at every probe —
     // refuse loudly; compactIvfPqIndex first, then append
-    val clash = newVectors.select(col("vec_id"))
-      .join(broadcast(vecTombs(s, indexDir)), Seq("vec_id"),
-        "left_semi").limit(5).collect().map(_.getLong(0))
+    val clash = liveTombClash(s, newVectors, indexDir)
     require(clash.isEmpty,
       s"appendToIvfPqIndex: vec_ids ${clash.mkString(", ")} are " +
         s"live-tombstoned in $indexDir — the append would be " +
@@ -1028,7 +1026,7 @@ object Similarity {
     val queries = e.filter(col("vec_id") < numQueries)
     // nProbe closest cells per query — same bounded window as
     // ivfTopKIndexed (#queries x C rows, never the corpus)
-    val qCells = {
+    val qPlan = {
       val scored = queries
         .select(col("vec_id").as("query_id"), col("embedding"),
           col("nrm"))
@@ -1041,16 +1039,18 @@ object Similarity {
       scored.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= NProbe)
         .select(col("query_id"), col("cell"))
-    }.cache()
-    // the probed-cell collect and the shortlist-sizing count are
+    }
+    // the (query, cell) collect and the shortlist-sizing count are
     // independent actions at the head of every probe — overlap them
-    // (guide §2.6). The shortlist scales to the CORPUS (same contract
-    // as pqTopK); the index row count is a parquet-footer count, not
-    // a scan.
-    val (probed, short) = graft.tools.Overlap.concurrently2(
-      () => qCells.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)),
+    // (guide §2.6). Collected once, the probe rows become a local
+    // frame (no cached block to release), as in ivfTopKIndexed. The
+    // shortlist scales to the CORPUS (same contract as pqTopK); the
+    // index row count is a parquet-footer count, not a scan.
+    val (qRows, short) = graft.tools.Overlap.concurrently2(
+      () => qPlan.collect(),
       () => pqShortlist(Versioned.read(s, indexDir).count()))
+    val qCells = s.createDataFrame(qRows.toSeq.asJava, qPlan.schema)
+    val probed = qRows.map(_.getLong(1)).distinct
     require(probed.forall(_.isValidInt),
       s"IVF cell id beyond Int range: ${probed.max}")
     val idx = Versioned.read(s, indexDir)
@@ -1108,6 +1108,16 @@ object Similarity {
     if (Versioned.currentVersion(s, vecTombsDir(indexDir)) > 0)
       Versioned.read(s, vecTombsDir(indexDir)).select(col("vec_id"))
     else s.range(0).select(col("id").as("vec_id"))
+
+  /** Up to five of the batch's vec_ids with a live tombstone; an index
+    * without a tombstone table answers without a job. */
+  private def liveTombClash(s: SparkSession, newVectors: DataFrame,
+      indexDir: String): Array[Long] =
+    if (Versioned.currentVersion(s, vecTombsDir(indexDir)) == 0)
+      Array.empty
+    else newVectors.select(col("vec_id"))
+      .join(broadcast(vecTombs(s, indexDir)), Seq("vec_id"),
+        "left_semi").limit(5).collect().map(_.getLong(0))
 
   /** DELETE vectors from the persisted IVF-PQ index — the vector twin
     * of [[TextAnalysis.deleteFromTextIndex]], same Lucene discipline
@@ -1397,21 +1407,32 @@ object Similarity {
     * multi-probe — each new vector scores against the members of its
     * top-[[NProbe]] centroid cells (never corpus-quadratic; the probed
     * cell set is partition-pruned like every index probe) — plus the
-    * within-batch same-cell pairs (smaller id wins). A match is
-    * cosine ≥ `minCos` on the index's own stored values (dequantized
-    * for the int8 layout). A standing LIVE row with the SAME vec_id
-    * drops the batch row UNCONDITIONALLY (identity, not cosine), so a
-    * re-ingested batch is idempotent and even a drifted re-embed
-    * mistakenly sent through ingest can never land a duplicate id row
-    * — re-embeds go through [[upsertIntoVectorIndex]]. Live-tombstoned
-    * batch ids refuse up front (compact, or upsert to supersede).
-    * Refuses the IVF-PQ layout:
+    * within-batch pairs where one vector's window holds the other's
+    * cell (smaller id wins). A match is cosine ≥ `minCos` on the
+    * index's own stored values (dequantized for the int8 layout). A
+    * standing LIVE row with the SAME vec_id drops the batch row
+    * UNCONDITIONALLY (identity, not cosine), so a re-ingested batch is
+    * idempotent and even a drifted re-embed mistakenly sent through
+    * ingest can never land a duplicate id row — re-embeds go through
+    * [[upsertIntoVectorIndex]]. Live-tombstoned batch ids and zero
+    * vectors (no cosine) refuse up front. Refuses the IVF-PQ layout:
     * code bytes only ADC-approximate cosines, and near-dup thresholds
     * sit above ADC noise. Returns (vec_id, kept, dup_of — null when
     * kept); survivors are appended at the pinned centroid generation
-    * before the verdict returns. The probe runs once: the verdict is
-    * the batch's ids joined with its drop set, materialized on the
-    * driver, so it holds no index read and is bounded by the batch. */
+    * before the verdict returns.
+    *
+    * The driver decides; only the corpus-scale member scan is a Spark
+    * query. The batch and the pinned centroids collect once. Each
+    * vector's cells rank on the driver by cosine (descending, as Spark
+    * sorts doubles) then cell id: the top [[NProbe]] are its probe
+    * window, the first its cell. Within-batch pairs compare on the
+    * driver, batch-quadratic per cell. One collect unions the corpus
+    * candidates (the window cells' live members joined with the
+    * broadcast window rows) and the batch ids' standing rows. The
+    * survivors append as a local frame, and the verdict is a local
+    * frame of the collected ids, so collecting it runs no job. Driver
+    * bound: the batch's vectors, C centroids, batch × [[NProbe]]
+    * window rows and the candidate pairs. */
   def ingestDedupVectors(s: SparkSession, newVectors: DataFrame,
       indexDir: String, minCos: Double = 0.98): DataFrame = {
     val v0 = Versioned.currentVersion(s, indexDir)
@@ -1422,126 +1443,118 @@ object Similarity {
       s"ingestDedupVectors needs the int8/float IVF layout — an " +
         "IVF-PQ index stores code bytes only, which ADC-approximate " +
         "the cosines a near-dup threshold compares")
-    // one row per non-null vec_id, like every other index entry point
-    // — a repeated id would land duplicate index rows (the equal-id
-    // pair is never a within-batch candidate), a null id matches no
-    // equality join ever
-    val idPre = newVectors.agg(count(lit(1)), count(col("vec_id")),
-      count_distinct(col("vec_id"))).head()
-    require(idPre.getLong(0) == idPre.getLong(1) &&
-      idPre.getLong(1) == idPre.getLong(2),
+    // the batch collects once, its norms from the kernel. One row per
+    // non-null vec_id, like every other index entry point — a repeated
+    // id would land duplicate index rows (the equal-id pair is never a
+    // within-batch candidate), a null id matches no equality join ever
+    val batch = newVectors.select(col("vec_id"), col("embedding"),
+      l2Norm(col("embedding")).as("nrm")).collect()
+    val ids = batch.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
+    require(ids.length == batch.length,
       "ingestDedupVectors needs one row per non-null vec_id — " +
         "duplicate or null ids would land duplicate index rows")
-    // a live-tombstoned id refuses UP FRONT with the ingest's own
-    // message, before any probe work (appendToIvfIndex would throw
-    // the same class of error at the very end, misattributed)
-    val tombClash = newVectors.select(col("vec_id"))
-      .join(broadcast(vecTombs(s, indexDir)), Seq("vec_id"),
-        "left_semi").limit(5).collect().map(_.getLong(0))
-    require(tombClash.isEmpty,
-      s"ingestDedupVectors: vec_ids ${tombClash.mkString(", ")} are " +
-        s"live-tombstoned in $indexDir — compact the index (or " +
-        "upsertIntoVectorIndex to re-embed them) before re-ingesting")
-    val cents = Versioned.read(s, centroidsDir(indexDir),
-      pins.get("centroids"))
-    // tombstones PINNED like every other probe input, so every read
-    // of this call sees one tombstone state
+    // tombstones PINNED like every other probe input, so every read of
+    // this call sees one tombstone state; a live-tombstoned id refuses
+    // UP FRONT with the ingest's own message, before any probe work
     val tombsV = Versioned.currentVersion(s, vecTombsDir(indexDir))
-    val tombsPinned = if (tombsV > 0)
-      Versioned.read(s, vecTombsDir(indexDir), Some(tombsV))
-        .select(col("vec_id"))
-      else s.range(0).select(col("id").as("vec_id"))
-    val delta = newVectors.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", l2Norm(col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE centroid-scoring pass ranks every (vector, cell): the
-      // top-NProbe slice is the multi-probe window (a cell-boundary
-      // near-dup is still seen), the rn=1 slice is the append
-      // assignment — no second broadcast join over the batch
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("c_cos").desc, col("cell"))
-      val ranked = delta.join(broadcast(cents))
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-          (dot(col("c_emb"), col("embedding")) /
-            (col("c_nrm") * col("nrm"))).as("c_cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= NProbe)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-          col("rn"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val probeCells = ranked.drop("rn")
-      try {
-        val cellsHit = probeCells.select(col("cell")).distinct()
-          .collect().map(_.getLong(0)) // metadata-scale, like a listing
-        require(cellsHit.forall(_.isValidInt),
-          s"IVF cell id beyond Int range: ${cellsHit.max}")
-        val raw = Versioned.read(s, indexDir, Some(v0))
-          .filter(col("cell").isin(cellsHit.map(_.toInt): _*))
-          .join(broadcast(tombsPinned), Seq("vec_id"), "left_anti")
-        val members = (if (!raw.columns.contains("q_emb")) raw
-          else raw.withColumn("embedding",
-              transform(col("q_emb"),
-                v => (v.cast("double") * col("q_scale")).cast("float")))
-            .drop("q_emb", "q_scale"))
-          .withColumn("cell", col("cell").cast("long"))
-          .select(col("vec_id").as("dup_of"),
-            col("embedding").as("m_emb"), col("nrm").as("m_nrm"),
-            col("cell"))
-        val corpusDups = probeCells.join(members, Seq("cell"))
-          .filter(dot(col("embedding"), col("m_emb")) /
-            (col("nrm") * col("m_nrm")) >= minCos)
-          .select(col("dup_of"), col("vec_id").as("new_id"))
-        // a standing live row with the SAME vec_id drops the batch row
-        // UNCONDITIONALLY (dup_of = itself) — "already ingested" is an
-        // identity fact, not a cosine fact, so even a drifted vector
-        // mistakenly re-sent through ingest can never land a duplicate
-        // id row (re-embeds go through upsertIntoVectorIndex). One
-        // narrow semi-join over the pinned snapshot's key column.
-        val sameId = delta.select(col("vec_id"))
-          .join(Versioned.read(s, indexDir, Some(v0))
-            .select(col("vec_id"))
-            .join(broadcast(tombsPinned), Seq("vec_id"), "left_anti"),
-            Seq("vec_id"), "left_semi")
-          .select(col("vec_id").as("dup_of"),
-            col("vec_id").as("new_id"))
-        // within-batch: the SAME probe semantics as batch-vs-corpus —
-        // one side's multi-probe window (rn ≤ NProbe) against the
-        // other's top-1 assignment cell, so a cell-boundary pair is
-        // seen whenever either vector's window covers the other's
-        // cell (cosine is symmetric, so ONE join with least/greatest
-        // covers both directions); smaller id survives (the d06
-        // convention, matching semanticDedup's cluster-local rule)
-        val top1 = ranked.filter(col("rn") === 1).drop("rn")
-        val batchDups = ranked.drop("rn").as("x").join(top1.as("y"),
-            col("x.cell") === col("y.cell") &&
-              col("x.vec_id") =!= col("y.vec_id") &&
-              dot(col("x.embedding"), col("y.embedding")) /
-                (col("x.nrm") * col("y.nrm")) >= minCos)
-          .select(least(col("x.vec_id"), col("y.vec_id")).as("dup_of"),
-            greatest(col("x.vec_id"), col("y.vec_id")).as("new_id"))
-        val dups = corpusDups.unionByName(batchDups).unionByName(sameId)
-          .groupBy(col("new_id")).agg(min(col("dup_of")).as("dup_of"))
-        // the probe runs ONCE: its drop set (at most one row per batch
-        // vector) collects to the driver, and the append and the
-        // returned verdict are two views of it
-        val dropRows = dups.collect()
-        val drops = broadcast(s.createDataFrame(dropRows.toSeq.asJava,
-          dups.schema))
-        // every drop-set id is a distinct batch id, so the counts
-        // decide whether any vector survives
-        if (idPre.getLong(0) > dropRows.length)
-          appendToIvfIndex(s, delta.join(
-            drops.select(col("new_id").as("vec_id")),
-            Seq("vec_id"), "left_anti")
-            .select(col("vec_id"), col("embedding")), indexDir)
-        newVectors.select(col("vec_id"))
-          .join(drops.withColumnRenamed("new_id", "vec_id"),
-            Seq("vec_id"), "left")
-          .select(col("vec_id"), col("dup_of").isNull.as("kept"),
-            col("dup_of"))
-      } finally ranked.unpersist(blocking = false)
-    } finally delta.unpersist(blocking = false)
+    lazy val tombs = Versioned.read(s, vecTombsDir(indexDir), Some(tombsV))
+      .select(col("vec_id"))
+    def live(df: DataFrame) = if (tombsV == 0) df
+      else df.join(broadcast(tombs), Seq("vec_id"), "left_anti")
+    if (tombsV > 0) {
+      val tombClash = tombs.filter(col("vec_id").isin(ids: _*))
+        .limit(5).collect().map(_.getLong(0))
+      require(tombClash.isEmpty,
+        s"ingestDedupVectors: vec_ids ${tombClash.mkString(", ")} are " +
+          s"live-tombstoned in $indexDir — compact the index (or " +
+          "upsertIntoVectorIndex to re-embed them) before re-ingesting")
+    }
+    val zero = batch.filter(r => !r.isNullAt(2) && r.getDouble(2) == 0.0)
+      .map(_.getLong(0))
+    require(zero.isEmpty,
+      s"ingestDedupVectors: vec_ids ${zero.take(5).mkString(", ")} are " +
+        "zero vectors — every cosine against them divides by zero")
+    def arr(r: Row, i: Int): ArrayData =
+      if (r.isNullAt(i)) null else new GenericArrayData(r.getSeq[Any](i))
+    // (id, embedding, nrm): a null embedding scores null, like the plans
+    val vecs = batch.map(r => (r.getLong(0), arr(r, 1),
+      if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
+    val cents = Versioned.read(s, centroidsDir(indexDir),
+        pins.get("centroids"))
+      .select(col("cell"), col("c_emb"), col("c_nrm")).collect()
+      .map(r => (r.getLong(0), arr(r, 1), r.getDouble(2)))
+    // the plans' `dot(a, b) / (nrmA * nrmB)` on the same kernel loop,
+    // None where they yield null
+    def cos(a: ArrayData, an: Double, b: ArrayData,
+        bn: Double): Option[Double] =
+      if (a == null || b == null) None else Some(VecDot.dot(a, b) / (an * bn))
+    // doubles compare as Spark compares them: NaN largest, -0.0 = 0.0
+    val sparkDouble: Ordering[Double] = SQLOrderingUtil.compareDoubles(_, _)
+    def near(c: Option[Double]) = c.exists(sparkDouble.gteq(_, minCos))
+    // cosine descending (nulls last), then the lower cell
+    val byRank = Ordering.Tuple2(Ordering.Option(sparkDouble).reverse,
+      Ordering.Long)
+    val windows = vecs.map { case (_, e, n) =>
+      cents.map { case (cell, c, cn) => (cos(c, cn, e, n), cell) }
+        .sorted(byRank).take(NProbe).map(_._2)
+    }
+    // within-batch: the SAME probe semantics as batch-vs-corpus — one
+    // side's window against the other's cell, so a cell-boundary pair
+    // is seen whenever either vector's window covers the other's cell
+    // (cosine is symmetric, so (least, greatest) covers both
+    // directions); smaller id survives (the d06 convention, matching
+    // semanticDedup's cluster-local rule)
+    val inCell = vecs.indices.filter(windows(_).nonEmpty)
+      .groupBy(windows(_).head)
+    val batchDups = for {
+      x <- vecs.indices; cell <- windows(x); y <- inCell.getOrElse(cell, Nil)
+      (xi, xe, xn) = vecs(x); (yi, ye, yn) = vecs(y)
+      if xi != yi && near(cos(xe, xn, ye, yn))
+    } yield (math.max(xi, yi), math.min(xi, yi))
+    // ONE collect of (dup_of, new_id): the window cells' live members
+    // scored against the broadcast window rows, plus the batch ids'
+    // standing rows — "already ingested" is an identity fact, not a
+    // cosine fact, so even a drifted vector mistakenly re-sent through
+    // ingest can never land a duplicate id row
+    val cellsHit = windows.flatten.distinct
+    require(cellsHit.forall(_.isValidInt),
+      s"IVF cell id beyond Int range: ${cellsHit.max}")
+    val corpusDups = if (batch.isEmpty) Array.empty[Row] else {
+      val raw = live(Versioned.read(s, indexDir, Some(v0))
+        .filter(col("cell").isin(cellsHit.map(_.toInt): _*)))
+      val members = (if (!raw.columns.contains("q_emb")) raw
+        else raw.withColumn("embedding",
+            transform(col("q_emb"),
+              v => (v.cast("double") * col("q_scale")).cast("float")))
+          .drop("q_emb", "q_scale"))
+        .select(col("vec_id").as("dup_of"), col("embedding").as("m_emb"),
+          col("nrm").as("m_nrm"), col("cell").cast("long").as("cell"))
+      val windowRows = for (i <- batch.indices; cell <- windows(i))
+        yield Row(batch(i).get(0), batch(i).get(1), batch(i).get(2), cell)
+      members.join(broadcast(Dedup.localFrame(s,
+          "new_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, cell BIGINT",
+          windowRows)), Seq("cell"))
+        .filter(dot(col("embedding"), col("m_emb")) /
+          (col("nrm") * col("m_nrm")) >= minCos)
+        .select(col("dup_of"), col("new_id"))
+        .unionByName(live(Versioned.read(s, indexDir, Some(v0))
+            .select(col("vec_id")).filter(col("vec_id").isin(ids: _*)))
+          .select(col("vec_id").as("dup_of"), col("vec_id").as("new_id")))
+        .collect()
+    }
+    val dropOf = (corpusDups.map(r => r.getLong(1) -> r.getLong(0)) ++
+      batchDups).groupMapReduce(_._1)(_._2)(math.min)
+    // every drop is a distinct batch id, so the counts decide whether
+    // any vector survives. The append re-assigns cells: an int8 index
+    // assigns against the dequantized floats, not the batch's own
+    if (batch.length > dropOf.size)
+      appendToIvfIndex(s, Dedup.localFrame(s,
+        "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE",
+        batch.toSeq.filterNot(r => dropOf.contains(r.getLong(0)))),
+        indexDir)
+    Dedup.localFrame(s, "vec_id BIGINT, kept BOOLEAN NOT NULL, dup_of BIGINT",
+      ids.toSeq.map(id => Row(id, !dropOf.contains(id),
+        dropOf.get(id).map(Long.box).orNull)))
   }
 
   /** File pair + unit query vector resolved by the LAST

@@ -261,20 +261,8 @@ class DedupSpec extends SparkSpec {
     val all = graft.sources.Tables.load(spark, sf, "documents")
     Dedup.buildDedupIndexOf(all.filter($"doc_id" < 300), idx)
     val batch = all.filter($"doc_id" >= 300 && $"doc_id" < 450)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val lis = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graft.SparkInternals.waitListenerBus(sc, 10000L)
-    sc.addSparkListener(lis)
-    val verdict = try {
-      val v = Dedup.ingestDedup(spark, batch, idx).collect()
-      org.apache.spark.sql.graft.SparkInternals.waitListenerBus(sc, 10000L)
-      v
-    } finally sc.removeSparkListener(lis)
+    val (jobs, verdict) =
+      jobsOf(Dedup.ingestDedup(spark, batch, idx).collect())
     def parquetByDir(table: String): Map[String, Int] = {
       val v = graft.sources.Versioned.currentVersion(spark, table)
       org.apache.commons.io.FileUtils.listFiles(
@@ -282,7 +270,7 @@ class DedupSpec extends SparkSpec {
         .asScala.toSeq.filterNot(_.getPath.contains("/_"))
         .groupBy(_.getParentFile.getName).map { case (d, fs) => d -> fs.size }
     }
-    (jobs.get, verdict, parquetByDir(idx), parquetByDir(s"$idx.sigs"))
+    (jobs, verdict, parquetByDir(idx), parquetByDir(s"$idx.sigs"))
   }
 
   test("ingestDedup of a 150-doc batch on a 300-doc index runs at most " +
@@ -393,6 +381,19 @@ class DedupSpec extends SparkSpec {
     assert(v == Map(8100L -> (true, -1L), 8101L -> (false, 8100L)))
     val ids = indexedIds(idx)
     assert(ids.contains(8100L) && !ids.contains(8101L))
+  }
+
+  test("ingestDedup's verdict is a local frame: its collect runs no " +
+      "Spark job and lists no input file") {
+    import spark.implicits._
+    val idx = edgeIndex("dedup-verdict-local")
+    val verdict = Dedup.ingestDedup(spark, graft.sources.Tables.load(spark,
+      sf, "documents").filter($"doc_id" >= 300 && $"doc_id" < 450), idx)
+    assert(verdict.inputFiles.isEmpty,
+      s"the verdict lists ${verdict.inputFiles.mkString(", ")}")
+    val (jobs, rows) = jobsOf(verdict.collect())
+    assert(jobs == 0, s"the verdict's collect ran $jobs jobs")
+    assert(rows.length == 150 && rows.exists(!_.getBoolean(1)))
   }
 
   test("simhash banding reproduces the exact shingle-jaccard pairs") {

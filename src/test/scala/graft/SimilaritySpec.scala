@@ -870,5 +870,137 @@ class SimilaritySpec extends SparkSpec {
       Similarity.exportVectorIndex(spark, torn))
     assert(e.getMessage.contains("torn maintenance"))
   }
-}
 
+  test("ivfPqTopKIndexed leaves no cached block behind") {
+    val dir = "target/tmp/ivfpq-index-nocache"
+    Seq(dir, s"$dir.centroids", s"$dir.codebooks").foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    Similarity.buildIvfPqIndex(spark, sf, dir)
+    Similarity.ivfPqTopKIndexed(spark, sf, dir, numQueries = 3).collect()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(Similarity.ivfPqTopKIndexed(spark, sf, dir).collect().nonEmpty)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"probe left cached RDDs $added")
+  }
+
+  private def cleanIndex(dir: String): Unit =
+    Seq(dir, s"$dir.centroids", s"$dir.tombs").foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+
+  test("ingestDedupVectors of a 110-vector batch on a 390-vector index " +
+      "runs at most 10 Spark jobs") {
+    import org.apache.spark.sql.functions._
+    val dir = "target/tmp/ivf-ingest-jobs"
+    cleanIndex(dir)
+    val emb = graft.sources.Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    Similarity.buildIvfIndexOf(spark, emb.filter(col("vec_id") >= 10 &&
+        col("vec_id") < 400)
+      .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(
+        col("embedding"))), dir)
+    // 100 fresh vectors plus twins of ten indexed ones
+    val batch = emb.filter(col("vec_id") >= 400).unionByName(
+      emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
+        .select((col("vec_id") + 8000000L).as("vec_id"), col("embedding")))
+    val (jobs, verdict) = jobsOf(
+      Similarity.ingestDedupVectors(spark, batch, dir).collect())
+    assert(verdict.length == 110)
+    assert(verdict.count(!_.getBoolean(1)) == 10, "the twins must drop")
+    info(s"ingestDedupVectors jobs: $jobs")
+    assert(jobs <= 10, s"ingestDedupVectors ran $jobs jobs")
+  }
+
+  /** A 64-d IVF index whose 16 centroids are the unit axes e0..e15
+    * (cells 10..25: the seed centroids, no k-means pass), so a
+    * vector's score for cell 10+k is its component k over its norm;
+    * members 100..163 are seeded Gaussian vectors. */
+  private def axisIndex(dir: String, quantized: Boolean): Unit = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    cleanIndex(dir)
+    val r = new java.util.Random(11)
+    val axes = (0 until 16).map(k =>
+      (10L + k, Seq.tabulate(64)(i => if (i == k) 1.0f else 0.0f)))
+    val members = (100L until 164L).map(id =>
+      (id, Seq.fill(64)(r.nextGaussian().toFloat)))
+    Similarity.buildIvfIndexOf(spark, (axes ++ members)
+        .toDF("vec_id", "embedding")
+        .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(
+          col("embedding"))),
+      dir, iters = 0, quantized = quantized)
+  }
+
+  /** A 64-d vector: `mass` on each dim of `massDims`, then `bumps`. */
+  private def axisVec(massDims: Range, mass: Float,
+      bumps: (Int, Float)*): Seq[Float] = {
+    val v = Array.tabulate(64)(i => if (massDims.contains(i)) mass else 0f)
+    bumps.foreach { case (i, x) => v(i) = x }
+    v.toSeq
+  }
+
+  test("ingestDedupVectors edge cases on the float and int8 layouts: a " +
+      "centroid tie, a pair meeting only across a window boundary, NaN " +
+      "cosines, a batch of same-id rows, a zero vector") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.sources.Versioned
+    val m1 = 16 until 40
+    val m2 = 40 until 64
+    val batch = Seq(
+      // tied on cells 13 and 17: the lower cell is its assignment
+      9000002L -> axisVec(m1, 2.5f, 3 -> 1f, 7 -> 1f),
+      // near 9000002, its window holds cell 13 but not 17: the pair
+      // meets only when 9000002 is assigned to 13
+      9000003L -> axisVec(m1, 2.5f, 10 -> 1f, 3 -> 0.9f, 0 -> 0.5f,
+        1 -> 0.5f, 2 -> 0.5f, 4 -> 0.5f),
+      // assigned 18, its window reaches cell 10 at rank 2 ...
+      9000004L -> axisVec(m2, 2.5f, 0 -> 1f, 1 -> 1f, 2 -> 1f, 3 -> 1f,
+        4 -> 1f, 5 -> 1f, 8 -> 1.1f),
+      // ... where its near-dup is assigned; this one's window (cells
+      // 10-15, tied) never reaches cell 18
+      9000005L -> axisVec(m2, 2.5f, 0 -> 1f, 1 -> 1f, 2 -> 1f, 3 -> 1f,
+        4 -> 1f, 5 -> 1f)).toDF("vec_id", "embedding")
+    // a NaN or an infinite component makes every cosine NaN: the cells
+    // tie (window 10-15), and NaN clears the threshold as Spark
+    // compares doubles, so the smallest window member is the witness
+    val nan = Seq(9000007L -> axisVec(m1, 1f, 2 -> Float.NaN),
+        9000008L -> axisVec(m2, 2f, 12 -> Float.PositiveInfinity))
+      .toDF("vec_id", "embedding")
+    // standing ids re-sent with fresh vectors: identity is the only
+    // candidate
+    val sameIds = {
+      val r = new java.util.Random(5)
+      Seq(100L, 101L).map(id => id -> Seq.fill(64)(r.nextGaussian().toFloat))
+        .toDF("vec_id", "embedding")
+    }
+    // a zero vector has no cosine: its batch refuses and lands nothing
+    val zero = Seq(9000001L -> Seq.fill(64)(0f), 9000006L -> axisVec(m2, 1f))
+      .toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getBoolean(1),
+        if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq.sorted
+    for (quantized <- Seq(false, true)) {
+      val dir = s"target/tmp/ivf-ingest-edges-$quantized"
+      axisIndex(dir, quantized)
+      assert(rows(Similarity.ingestDedupVectors(spark, batch, dir)) ==
+        Seq((9000002L, true, -1L), (9000003L, false, 9000002L),
+          (9000004L, true, -1L), (9000005L, false, 9000004L)),
+        s"quantized=$quantized")
+      assert(Versioned.read(spark, dir).filter(col("vec_id") >= 9000000L)
+        .select(col("vec_id"), col("cell").cast("long")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(9000002L -> 13L, 9000004L -> 18L))
+      assert(rows(Similarity.ingestDedupVectors(spark, nan, dir)) ==
+        Seq((9000007L, false, 10L), (9000008L, false, 10L)),
+        s"quantized=$quantized")
+      assert(rows(Similarity.ingestDedupVectors(spark, sameIds, dir)) ==
+        Seq((100L, false, 100L), (101L, false, 101L)),
+        s"quantized=$quantized")
+      val v = Versioned.currentVersion(spark, dir)
+      val e = intercept[IllegalArgumentException](
+        Similarity.ingestDedupVectors(spark, zero, dir))
+      assert(e.getMessage.contains("9000001 are zero vectors"))
+      assert(Versioned.currentVersion(spark, dir) == v)
+    }
+  }
+}
