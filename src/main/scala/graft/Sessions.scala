@@ -40,7 +40,7 @@ object Sessions {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", aqe)
-      // Write-path constants (measured r18, WriteProfile: a 10-row
+      // Write-path constants (measured r18, OPTIMIZATION_r18.md: a 10-row
       // parquet write pays ~90 ms over the bare job floor; these three
       // recover ~45 ms of it — ~30% of every commit's write job, and
       // the versioned-lifecycle gates run hundreds of such writes):

@@ -1861,7 +1861,7 @@ object SparkEntry {
            CAST(3 AS BIGINT) AS refresh_to,
            CAST(1 AS BIGINT) AS eq_full_recompute,
            CAST(1 AS BIGINT) AS noop_stable,
-           CAST(1 AS BIGINT) AS refused_foreign_key,
+           CAST(1 AS BIGINT) AS foreign_key_exact,
            CAST(1 AS BIGINT) AS refused_unpinned""",
     "q55_mv_lifecycle" ->
       """SELECT CAST(1 AS BIGINT) AS created_derived,

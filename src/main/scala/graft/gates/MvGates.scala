@@ -189,34 +189,36 @@ object MvGates {
       val g3 = tot.getLong(0)
       // row-for-row equality against the full recompute (bag
       // semantics) — one signed-union shuffle, see [[bagEqual]]
-      val expect = Versioned.read(s, src).groupBy(col("source")).agg(
-        sum(col("n_chars")).as("sum_n_chars"),
-        count(col("n_chars")).as("cnt_n_chars"),
-        count(lit(1)).as("n_rows"))
-      val eq = bagEqual(fin, expect)
+      def exact(view: DataFrame) = bagEqual(view,
+        Versioned.read(s, src).groupBy(col("source")).agg(
+          sum(col("n_chars")).as("sum_n_chars"),
+          count(col("n_chars")).as("cnt_n_chars"),
+          count(lit(1)).as("n_rows")))
+      val eq = exact(fin)
       fin.unpersist(blocking = false)
       // no-op stability: the pin matches, no new destination version
       val vBefore = Versioned.currentVersion(s, dst)
       val noop = refreshAgg(s, src, dst, "doc_id", Seq("source"), "n_chars")
       val noopOk = noop == ((rTo, rTo)) &&
         Versioned.currentVersion(s, dst) == vBefore
-      // tombstones keyed off the row key must refuse (the refresh
-      // contract), and an unpinned destination refuses
+      // a tombstone keyed off the row key refreshes like any other
+      // window (the net diff carries the deleted rows whole), and an
+      // unpinned destination refuses
       import s.implicits._
       Versioned.deleteRows(s, src, Seq("migrated").toDF("source"))
-      val refusedKey = scala.util.Try(
-        refreshAgg(s, src, dst, "doc_id", Seq("source"), "n_chars")).isFailure
+      refreshAgg(s, src, dst, "doc_id", Seq("source"), "n_chars")
+      val fkExact = exact(Versioned.read(s, dst))
       val plain = work.resolve("plain").toString
       Versioned.commit(Versioned.read(s, src).limit(3), plain)
       val refusedPin = scala.util.Try(
         refreshAgg(s, src, plain, "doc_id", Seq("source"), "n_chars")).isFailure
       Seq((g1, g2, g3, tot.getLong(1), tot.getLong(2), tot.getLong(3),
           rFrom.toLong, rTo.toLong, if (eq) 1L else 0L,
-          if (noopOk) 1L else 0L, if (refusedKey) 1L else 0L,
+          if (noopOk) 1L else 0L, if (fkExact) 1L else 0L,
           if (refusedPin) 1L else 0L))
         .toDF("groups_v1", "groups_v2", "groups_v3", "rows_v3",
           "charsum_v3", "charcnt_v3", "refresh_from", "refresh_to",
-          "eq_full_recompute", "noop_stable", "refused_foreign_key",
+          "eq_full_recompute", "noop_stable", "foreign_key_exact",
           "refused_unpinned")
     }
 

@@ -705,19 +705,8 @@ object Dedup {
       indexDir: String): Option[Int] =
     Versioned.notePin(s, indexDir, "sigs")
 
-  private def dedupTombsDir(indexDir: String): String = s"$indexDir.tombs"
-
-  /** Live tombstoned doc_ids of the dedup index (empty frame when
-    * none) at `version` — pinned by callers that read the index
-    * state more than once in one call. Bounded between compactions,
-    * so the probes' anti-joins broadcast. */
-  private def dedupTombs(s: SparkSession, indexDir: String,
-      version: Option[Int] = None): DataFrame = {
-    val td = dedupTombsDir(indexDir)
-    if (version.getOrElse(Versioned.currentVersion(s, td)) > 0)
-      Versioned.read(s, td, version).select(col("doc_id"))
-    else s.range(0).select(col("id").as("doc_id"))
-  }
+  private def dedupTombs(s: SparkSession, indexDir: String): IndexTombs =
+    IndexTombs(s, indexDir, "doc_id")
 
   /** DELETE documents from the dedup index — the takedown path
     * (license revocation, PII purge): without it a removed document
@@ -740,10 +729,7 @@ object Dedup {
       indexDir: String): Unit = {
     require(Versioned.currentVersion(s, indexDir) > 0,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
-    val ids = docIds.select(col("doc_id")).distinct()
-    val td = dedupTombsDir(indexDir)
-    if (Versioned.currentVersion(s, td) > 0) Versioned.append(ids, td)
-    else Versioned.commit(ids, td)
+    IndexTombs.delete(s, docIds, indexDir, "doc_id")
   }
 
   /** O(delta) maintenance: the new docs' band rows append (only their
@@ -757,8 +743,8 @@ object Dedup {
     require(Versioned.currentVersion(s, indexDir) > 0,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
     requireOneRowPerDoc(newDocs, "appendToDedupIndex")
-    requireNoLiveTombs(newDocs.select(col("doc_id")),
-      dedupTombs(s, indexDir), indexDir, "appendToDedupIndex")
+    requireNoLiveTombs(dedupTombs(s, indexDir).clash(newDocs), indexDir,
+      "appendToDedupIndex")
     val clash = Versioned.read(s, dedupSigsDir(indexDir),
         dedupSigsPin(s, indexDir))
       .join(newDocs.select(col("doc_id")).distinct(), Seq("doc_id"),
@@ -790,15 +776,12 @@ object Dedup {
     * message: its band/sig rows still stand on disk, so an append
     * would duplicate them and the next compaction's anti-join would
     * kill the new rows along with the old. */
-  private def requireNoLiveTombs(ids: DataFrame, tombs: DataFrame,
-      indexDir: String, what: String): Unit = {
-    val tombClash = ids.join(broadcast(tombs), Seq("doc_id"),
-        "left_semi").limit(5).collect().map(_.getLong(0))
+  private def requireNoLiveTombs(tombClash: Array[Long], indexDir: String,
+      what: String): Unit =
     require(tombClash.isEmpty,
       s"$what: doc_ids ${tombClash.mkString(", ")} are " +
         s"live-tombstoned in $indexDir — compactDedupIndex first to " +
         "apply the deletes, then re-ingest")
-  }
 
   /** Dedup a NEW batch against the standing indexed corpus: the
     * batch's band keys join the index's (the LSH candidate step — a
@@ -832,9 +815,8 @@ object Dedup {
     // tombstone anti-join broadcasts — bounded between compactions),
     // so a taken-down document never evicts a new one
     val cands = bandRowsOf(sketch).as("x")
-      .join(Versioned.read(s, indexDir)
-          .join(broadcast(dedupTombs(s, indexDir)), Seq("doc_id"),
-            "left_anti").as("y"),
+      .join(dedupTombs(s, indexDir).live(Versioned.read(s, indexDir))
+          .as("y"),
         col("x.band") === col("y.band") &&
           col("x.band_hash") === col("y.band_hash"))
       .select(col("y.doc_id").as("dup_of"),
@@ -912,13 +894,10 @@ object Dedup {
     val sigsPin = dedupSigsPin(s, indexDir)
     // tombstones pinned like every other probe input (every read of
     // this call sees one state); a never-tombstoned index skips them
-    val tombsV = Versioned.currentVersion(s, dedupTombsDir(indexDir))
-    val tombs = dedupTombs(s, indexDir, Some(tombsV))
-    if (tombsV > 0) requireNoLiveTombs(localFrame(s, "doc_id BIGINT",
-      batchIds.map(Row(_))), tombs, indexDir, "ingestDedup")
-    def live(df: DataFrame) = if (tombsV == 0) df
-      else df.join(broadcast(tombs), Seq("doc_id"), "left_anti")
-    val liveSigs = live(Versioned.read(s, dedupSigsDir(indexDir), sigsPin))
+    val tombs = dedupTombs(s, indexDir)
+    requireNoLiveTombs(tombs.clash(batchIds.toSeq), indexDir, "ingestDedup")
+    val liveSigs =
+      tombs.live(Versioned.read(s, dedupSigsDir(indexDir), sigsPin))
     // under allowReingest the already-live slice skips the sketch
     // pass entirely — the standing sketch is the document's identity
     val sketch = dedupSketchOf(if (!allowReingest) newDocs
@@ -931,7 +910,7 @@ object Dedup {
       // down doc never evicts a new one, nor a doc itself (an indexed
       // batch id refuses below); batch docs sharing a bucket pair up
       val corpusCands = if (keys.isEmpty) Array.empty[Row]
-        else live(Versioned.read(s, indexDir, Some(v0))).as("y")
+        else tombs.live(Versioned.read(s, indexDir, Some(v0))).as("y")
           .join(broadcast(localFrame(s,
               "doc_id BIGINT, band INT, band_hash BIGINT", keys)).as("x"),
             col("x.band") === col("y.band") &&
@@ -1008,26 +987,16 @@ object Dedup {
       minFileBytes: Long = 0L): Int = {
     require(Versioned.currentVersion(s, indexDir) > 0,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
-    val tombs = dedupTombs(s, indexDir)
-    if (!tombs.isEmpty) {
+    IndexTombs.absorb(s, indexDir, "doc_id") { tombs =>
       // sigs publish FIRST, the band commit pins them — the
       // index-pair order every write path here follows
       val sv = Versioned.commit(
-        Versioned.read(s, dedupSigsDir(indexDir),
-            dedupSigsPin(s, indexDir))
-          .join(broadcast(tombs), Seq("doc_id"), "left_anti"),
+        tombs.live(Versioned.read(s, dedupSigsDir(indexDir),
+          dedupSigsPin(s, indexDir))),
         dedupSigsDir(indexDir), statsCols = Seq("doc_id"))
-      Versioned.commit(
-        Versioned.read(s, indexDir)
-          .join(broadcast(tombs), Seq("doc_id"), "left_anti"),
+      Versioned.commit(tombs.live(Versioned.read(s, indexDir)),
         indexDir, partitionCol = Some("band"),
         note = Some(s"sigs=v$sv"), statsCols = Seq("doc_id"))
-      // reset ONLY the absorbed set: a concurrent takedown appending
-      // after the entry read survives to the next compaction instead
-      // of being wiped unapplied
-      Versioned.commit(dedupTombs(s, indexDir)
-        .join(tombs, Seq("doc_id"), "left_anti"),
-        dedupTombsDir(indexDir))
     }
     // sigs compact FIRST, band compact re-pins the compacted version
     // (same rows, fresh files) — the publish order every index-pair
@@ -1102,9 +1071,7 @@ object Dedup {
       minJ: Double = 0.5): DataFrame = {
     require(Versioned.currentVersion(s, indexDir) > 0,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
-    val live = Versioned.read(s, indexDir)
-      .join(broadcast(dedupTombs(s, indexDir)), Seq("doc_id"),
-        "left_anti")
+    val live = dedupTombs(s, indexDir).live(Versioned.read(s, indexDir))
     val cands = live.as("x").join(live.as("y"),
         col("x.band") === col("y.band") &&
           col("x.band_hash") === col("y.band_hash") &&
@@ -1152,7 +1119,7 @@ object Dedup {
       s"cannot export dedup index at $indexDir: bands pin sigs=v$pin " +
         s"but the sigs table head is v$sigsHead — torn maintenance; " +
         "rebuild or re-append to restore the pair")
-    if (!dedupTombs(s, indexDir).isEmpty)
+    if (dedupTombs(s, indexDir).nonEmpty)
       throw new IllegalStateException(
         s"cannot export dedup index at $indexDir: live tombstones " +
           "would resurrect taken-down documents in a raw-file read " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData,
   SQLOrderingUtil}
 import org.apache.spark.sql.functions._
@@ -100,7 +100,8 @@ object Similarity {
     // a quantized corpus (q_emb/q_scale alongside the float form it
     // scores with) assigns in the same single pass — no second join
     val carry = corpus.columns.filterNot(_ == "vec_id").toSeq
-    corpus.join(broadcast(cents))
+    corpus.withColumn("nrm", withCosine(col("nrm"), col("nrm")))
+      .join(broadcast(cents))
       .select(col("vec_id") +: carry.map(col) :+ col("cell") :+
         ((dot(col("c_emb"), col("embedding")) /
           (col("c_nrm") * col("nrm"))).as("c_cos")): _*)
@@ -111,6 +112,16 @@ object Similarity {
       .select(col("vec_id") +:
         (carry :+ "cell").map(n => col(s"best.$n").as(n)): _*)
   }
+
+  /** `v`, unless the row's norm `nrm` leaves its vector without a
+    * cosine (zero, NaN or infinite): then the plan fails naming the
+    * row's vec_id, before any division by that norm — a check inside
+    * the projection, so it adds no Spark job. */
+  private def withCosine(v: Column, nrm: Column): Column =
+    when(nrm === 0.0 || isnan(nrm) || nrm === Double.PositiveInfinity,
+      raise_error(concat(lit("vec_id "), col("vec_id").cast("string"),
+        lit(" is a zero or non-finite vector — it has no cosine to any " +
+          "centroid")))).otherwise(v)
 
   /** Random-hyperplane LSH top-k — the second scale path. 8 independent
     * hash tables of 6 sign-bits each (sign of graft_vec_dot against
@@ -279,7 +290,9 @@ object Similarity {
     * probe scores are all computed on exactly the values a reader of
     * the compact index reconstructs. */
   private def quantizedForm(df: DataFrame): DataFrame =
-    dequantizeInt8(quantizeInt8(df.select(col("vec_id"), col("embedding"))))
+    dequantizeInt8(quantizeInt8(df.select(col("vec_id"),
+        withCosine(col("embedding"), l2Norm(col("embedding")))
+          .as("embedding"))))
       .select(col("vec_id"), col("q_emb"), col("q_scale"),
         col("dq_emb").as("embedding"))
       .withColumn("nrm", l2Norm(col("embedding")))
@@ -359,7 +372,7 @@ object Similarity {
     // the re-append trap, same as appendToIvfPqIndex: a
     // live-tombstoned vec_id's fresh entry would be anti-joined away
     // at every probe — compact first, then append
-    val clash = liveTombClash(s, newVectors, indexDir)
+    val clash = vecTombs(s, indexDir).clash(newVectors)
     require(clash.isEmpty,
       s"appendToIvfIndex: vec_ids ${clash.mkString(", ")} are " +
         s"live-tombstoned in $indexDir — the append would be " +
@@ -387,32 +400,24 @@ object Similarity {
     * partitioning (probes stay partition-pruned) — published as a
     * snapshot like every other commit, so probes never see a
     * half-compacted index. Files already at size link unchanged
-    * (O(small files), not O(index)). */
+    * (O(small files), not O(index)). With live tombstones
+    * ([[deleteFromVectorIndex]]) it instead absorbs them: one
+    * cell-partitioned rewrite without the deleted vectors, then a reset
+    * of exactly the absorbed set. */
   def compactIvfIndex(s: SparkSession, indexDir: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 0L): Int = {
-    val tombs = vecTombs(s, indexDir)
-    if (!tombs.isEmpty) {
-      // tombstones applied in ONE cell-partitioned rewrite carrying
-      // the centroid pin, reset LAST (the crash-safe order shared
-      // with compactIvfPqIndex / compactTextIndex)
-      val survivors = Versioned.read(s, indexDir)
-        .join(tombs, Seq("vec_id"), "left_anti")
-      val v = Versioned.commit(survivors, indexDir,
-        partitionCol = Some("cell"),
-        note = pinnedCentroidVersion(s, indexDir)
-          .map(cv => s"centroids=v$cv"),
-        statsCols = Seq("vec_id"))
-      Versioned.commit(tombs.limit(0), vecTombsDir(indexDir))
-      v
-    } else
-      // the binpack carries the centroid pin forward: a compacted
-      // index keeps resolving the centroid generation it was assigned
-      // against
+    // the rewrite and the binpack both carry the centroid pin forward:
+    // a compacted index keeps resolving the centroid generation it was
+    // assigned against
+    val note = pinnedCentroidVersion(s, indexDir).map(v => s"centroids=v$v")
+    // tombstones applied in ONE cell-partitioned rewrite
+    IndexTombs.absorb(s, indexDir, "vec_id") { tombs =>
+      Versioned.commit(tombs.live(Versioned.read(s, indexDir)), indexDir,
+        partitionCol = Some("cell"), note = note, statsCols = Seq("vec_id"))
+    }.getOrElse(
       Versioned.compactSmall(s, indexDir, targetFileBytes, minFileBytes,
-        statsCols = Seq("vec_id"), partitionCol = Some("cell"),
-        note = pinnedCentroidVersion(s, indexDir)
-          .map(v => s"centroids=v$v"))
+        statsCols = Seq("vec_id"), partitionCol = Some("cell"), note = note))
   }
 
   /** Query a persisted [[buildIvfIndex]] index: the probe-cell set
@@ -456,15 +461,13 @@ object Similarity {
     require(probed.forall(c => c.isValidInt),
       s"IVF cell id beyond Int range: ${probed.max}")
     // snapshot read resolves the current published version; the filter
-    // pushes through the manifest scans to the cell partition dirs
-    val raw = Versioned.read(s, indexDir)
+    // pushes through the manifest scans to the cell partition dirs.
+    // Live tombstones gate membership here exactly as on the IVF-PQ
+    // probe ([[deleteFromVectorIndex]] serves both index layouts — the
+    // pin-shape requirement matches either)
+    val raw = vecTombs(s, indexDir).live(Versioned.read(s, indexDir)
       .filter(col("cell").isin(probed.map(_.toInt): _*))
-      .withColumn("cell", col("cell").cast("long"))
-      // live tombstones gate membership here exactly as on the IVF-PQ
-      // probe ([[deleteFromVectorIndex]] serves both index layouts —
-      // the pin-shape requirement matches either)
-      .join(broadcast(vecTombs(s, indexDir)), Seq("vec_id"),
-        "left_anti")
+      .withColumn("cell", col("cell").cast("long")))
     // a quantized index (int8 on disk, no float column) declares
     // itself by schema; reconstruct the float view per probed row and
     // DROP the stored payload — its `q_emb` name would otherwise
@@ -914,7 +917,7 @@ object Similarity {
     // same re-append trap as the text index: a live-tombstoned
     // vec_id's fresh codes would be anti-joined away at every probe —
     // refuse loudly; compactIvfPqIndex first, then append
-    val clash = liveTombClash(s, newVectors, indexDir)
+    val clash = vecTombs(s, indexDir).clash(newVectors)
     require(clash.isEmpty,
       s"appendToIvfPqIndex: vec_ids ${clash.mkString(", ")} are " +
         s"live-tombstoned in $indexDir — the append would be " +
@@ -997,8 +1000,8 @@ object Similarity {
     finally if (cached != null) cached.unpersist(blocking = false)
     // 2. supersede any live tombstones on these ids (fresh encodings
     // are now the only stored rows, so visibility is correct)
-    Versioned.dropTombstones(s, vecTombsDir(indexDir),
-      newVectors.select(col("vec_id")).distinct(), "vec_id")
+    IndexTombs.lift(s, newVectors.select(col("vec_id")).distinct(),
+      indexDir, "vec_id")
   }
 
   /** Query a persisted [[buildIvfPqIndex]] index: resolve pinned
@@ -1053,14 +1056,11 @@ object Similarity {
     val probed = qRows.map(_.getLong(1)).distinct
     require(probed.forall(_.isValidInt),
       s"IVF cell id beyond Int range: ${probed.max}")
-    val idx = Versioned.read(s, indexDir)
+    // live tombstones gate membership before ADC — a deleted vector
+    // can never enter a shortlist ([[deleteFromVectorIndex]])
+    val idx = vecTombs(s, indexDir).live(Versioned.read(s, indexDir)
       .filter(col("cell").isin(probed.map(_.toInt): _*))
-      .withColumn("cell", col("cell").cast("long"))
-      // live tombstones gate membership before ADC — a deleted vector
-      // can never enter a shortlist ([[deleteFromVectorIndex]]);
-      // bounded set, the anti-join broadcasts
-      .join(broadcast(vecTombs(s, indexDir)), Seq("vec_id"),
-        "left_anti")
+      .withColumn("cell", col("cell").cast("long")))
     // per-query flattened ADC lookup table from the PINNED codebooks
     val qTab = subvectors(queries)
       .join(broadcast(cb), "j")
@@ -1100,24 +1100,8 @@ object Similarity {
     topkByQuery(scored)
   }
 
-  private def vecTombsDir(indexDir: String): String = s"$indexDir.tombs"
-
-  /** Live tombstoned vec_ids of the index, empty frame when none —
-    * bounded between compactions, the probe's anti-join broadcasts. */
-  private def vecTombs(s: SparkSession, indexDir: String): DataFrame =
-    if (Versioned.currentVersion(s, vecTombsDir(indexDir)) > 0)
-      Versioned.read(s, vecTombsDir(indexDir)).select(col("vec_id"))
-    else s.range(0).select(col("id").as("vec_id"))
-
-  /** Up to five of the batch's vec_ids with a live tombstone; an index
-    * without a tombstone table answers without a job. */
-  private def liveTombClash(s: SparkSession, newVectors: DataFrame,
-      indexDir: String): Array[Long] =
-    if (Versioned.currentVersion(s, vecTombsDir(indexDir)) == 0)
-      Array.empty
-    else newVectors.select(col("vec_id"))
-      .join(broadcast(vecTombs(s, indexDir)), Seq("vec_id"),
-        "left_semi").limit(5).collect().map(_.getLong(0))
+  private def vecTombs(s: SparkSession, indexDir: String): IndexTombs =
+    IndexTombs(s, indexDir, "vec_id")
 
   /** DELETE vectors from the persisted IVF-PQ index — the vector twin
     * of [[TextAnalysis.deleteFromTextIndex]], same Lucene discipline
@@ -1139,36 +1123,24 @@ object Similarity {
     require(pinnedVersionsOf(s, indexDir).contains("centroids"),
       s"$indexDir is not a built vector index (buildIvfIndex / " +
         "buildIvfPqIndex first)")
-    val ids = vecIds.select(col("vec_id")).distinct()
-    val td = vecTombsDir(indexDir)
-    if (Versioned.currentVersion(s, td) > 0) Versioned.append(ids, td)
-    else Versioned.commit(ids, td)
+    IndexTombs.delete(s, vecIds, indexDir, "vec_id")
   }
 
   /** Apply live tombstones in ONE cell-partitioned rewrite, carrying
-    * the quantization pins forward, then reset the tombstone table
-    * (LAST — a crash above leaves the set live, which is safe: the
-    * anti-join re-applies). Without tombstones this is a no-op
+    * the quantization pins forward, then reset the absorbed set (LAST —
+    * a crash above leaves the set live, which is safe: the anti-join
+    * re-applies). Without tombstones this is a no-op
     * returning the current version: code cells binpack through the
     * generic [[graft.sources.Versioned.compactSmall]] if needed. */
-  def compactIvfPqIndex(s: SparkSession, indexDir: String): Int = {
-    val tombs = vecTombs(s, indexDir)
-    if (tombs.isEmpty) return Versioned.currentVersion(s, indexDir)
-    val pins = pinnedVersionsOf(s, indexDir)
-    val survivors = Versioned.read(s, indexDir)
-      .join(tombs, Seq("vec_id"), "left_anti")
-    val v = Versioned.commit(survivors, indexDir,
-      partitionCol = Some("cell"),
-      note = Some("centroids=v" + pins("centroids") +
-        ";codebooks=v" + pins("codebooks")),
-      statsCols = Seq("vec_id"))
-    // reset ONLY the absorbed set: a concurrent delete appending
-    // after the entry read survives to the next compaction instead
-    // of being wiped unapplied
-    Versioned.commit(vecTombs(s, indexDir)
-      .join(tombs, Seq("vec_id"), "left_anti"), vecTombsDir(indexDir))
-    v
-  }
+  def compactIvfPqIndex(s: SparkSession, indexDir: String): Int =
+    IndexTombs.absorb(s, indexDir, "vec_id") { tombs =>
+      val pins = pinnedVersionsOf(s, indexDir)
+      Versioned.commit(tombs.live(Versioned.read(s, indexDir)), indexDir,
+        partitionCol = Some("cell"),
+        note = Some("centroids=v" + pins("centroids") +
+          ";codebooks=v" + pins("codebooks")),
+        statsCols = Seq("vec_id"))
+    }.getOrElse(Versioned.currentVersion(s, indexDir))
 
   private val ivfPqCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -1262,7 +1234,7 @@ object Similarity {
     // files alone would resurrect the deleted vectors in the second
     // engine's probe — refuse, cleared by the matching compact (the
     // same contract as exportTextIndex / exportSnapshot)
-    if (!vecTombs(s, indexDir).isEmpty) throw new IllegalStateException(
+    if (vecTombs(s, indexDir).nonEmpty) throw new IllegalStateException(
       s"cannot export vector index at $indexDir: live tombstones " +
         "would resurrect deleted vectors in a raw-file read — " +
         "compact the index first")
@@ -1414,12 +1386,12 @@ object Similarity {
     * UNCONDITIONALLY (identity, not cosine), so a re-ingested batch is
     * idempotent and even a drifted re-embed mistakenly sent through
     * ingest can never land a duplicate id row — re-embeds go through
-    * [[upsertIntoVectorIndex]]. Live-tombstoned batch ids and zero
-    * vectors (no cosine) refuse up front. Refuses the IVF-PQ layout:
-    * code bytes only ADC-approximate cosines, and near-dup thresholds
-    * sit above ADC noise. Returns (vec_id, kept, dup_of — null when
-    * kept); survivors are appended at the pinned centroid generation
-    * before the verdict returns.
+    * [[upsertIntoVectorIndex]]. Live-tombstoned batch ids and zero or
+    * non-finite vectors (no cosine) refuse up front. Refuses the IVF-PQ
+    * layout: code bytes only ADC-approximate cosines, and near-dup
+    * thresholds sit above ADC noise. Returns (vec_id, kept, dup_of —
+    * null when kept); survivors are appended at the pinned centroid
+    * generation before the verdict returns.
     *
     * The driver decides; only the corpus-scale member scan is a Spark
     * query. The batch and the pinned centroids collect once. Each
@@ -1456,24 +1428,22 @@ object Similarity {
     // tombstones PINNED like every other probe input, so every read of
     // this call sees one tombstone state; a live-tombstoned id refuses
     // UP FRONT with the ingest's own message, before any probe work
-    val tombsV = Versioned.currentVersion(s, vecTombsDir(indexDir))
-    lazy val tombs = Versioned.read(s, vecTombsDir(indexDir), Some(tombsV))
-      .select(col("vec_id"))
-    def live(df: DataFrame) = if (tombsV == 0) df
-      else df.join(broadcast(tombs), Seq("vec_id"), "left_anti")
-    if (tombsV > 0) {
-      val tombClash = tombs.filter(col("vec_id").isin(ids: _*))
-        .limit(5).collect().map(_.getLong(0))
-      require(tombClash.isEmpty,
-        s"ingestDedupVectors: vec_ids ${tombClash.mkString(", ")} are " +
-          s"live-tombstoned in $indexDir — compact the index (or " +
-          "upsertIntoVectorIndex to re-embed them) before re-ingesting")
+    val tombs = vecTombs(s, indexDir)
+    val tombClash = tombs.clash(ids.toSeq)
+    require(tombClash.isEmpty,
+      s"ingestDedupVectors: vec_ids ${tombClash.mkString(", ")} are " +
+        s"live-tombstoned in $indexDir — compact the index (or " +
+        "upsertIntoVectorIndex to re-embed them) before re-ingesting")
+    def refuse(bad: Double => Boolean, what: String): Unit = {
+      val hit = batch.filter(r => !r.isNullAt(2) && bad(r.getDouble(2)))
+        .map(_.getLong(0))
+      require(hit.isEmpty, s"ingestDedupVectors: vec_ids " +
+        s"${hit.take(5).mkString(", ")} are $what")
     }
-    val zero = batch.filter(r => !r.isNullAt(2) && r.getDouble(2) == 0.0)
-      .map(_.getLong(0))
-    require(zero.isEmpty,
-      s"ingestDedupVectors: vec_ids ${zero.take(5).mkString(", ")} are " +
-        "zero vectors — every cosine against them divides by zero")
+    refuse(_ == 0.0, "zero vectors — every cosine against them divides " +
+      "by zero")
+    refuse(n => n.isNaN || n.isInfinite, "non-finite vectors — a NaN or " +
+      "infinite component makes every cosine against them NaN")
     def arr(r: Row, i: Int): ArrayData =
       if (r.isNullAt(i)) null else new GenericArrayData(r.getSeq[Any](i))
     // (id, embedding, nrm): a null embedding scores null, like the plans
@@ -1520,7 +1490,7 @@ object Similarity {
     require(cellsHit.forall(_.isValidInt),
       s"IVF cell id beyond Int range: ${cellsHit.max}")
     val corpusDups = if (batch.isEmpty) Array.empty[Row] else {
-      val raw = live(Versioned.read(s, indexDir, Some(v0))
+      val raw = tombs.live(Versioned.read(s, indexDir, Some(v0))
         .filter(col("cell").isin(cellsHit.map(_.toInt): _*)))
       val members = (if (!raw.columns.contains("q_emb")) raw
         else raw.withColumn("embedding",
@@ -1537,7 +1507,7 @@ object Similarity {
         .filter(dot(col("embedding"), col("m_emb")) /
           (col("nrm") * col("m_nrm")) >= minCos)
         .select(col("dup_of"), col("new_id"))
-        .unionByName(live(Versioned.read(s, indexDir, Some(v0))
+        .unionByName(tombs.live(Versioned.read(s, indexDir, Some(v0))
             .select(col("vec_id")).filter(col("vec_id").isin(ids: _*)))
           .select(col("vec_id").as("dup_of"), col("vec_id").as("new_id")))
         .collect()

@@ -1552,9 +1552,7 @@ object TextAnalysis {
     // be silently invisible until compaction — and dropping the
     // tombstone instead would resurrect the OLD postings beside the
     // new ones. Refuse loudly; compact first, then append.
-    val clash = newDocs.select(col("doc_id"))
-      .join(broadcast(textTombs(s, indexDir)), Seq("doc_id"),
-        "left_semi").limit(5).collect().map(_.getLong(0))
+    val clash = textTombs(s, indexDir).clash(newDocs)
     require(clash.isEmpty,
       s"appendToTextIndex: doc_ids ${clash.mkString(", ")} are " +
         s"live-tombstoned in $indexDir — the append would be " +
@@ -1652,17 +1650,11 @@ object TextAnalysis {
     Versioned.upsertGroups(s, indexDir, postingsOf(docs), "doc_id",
       partitionCol = Some("bucket"), note = Some(s"stats=v$sv"),
       statsCols = Seq("doc_id"))
-    Versioned.dropTombstones(s, textTombsDir(indexDir), ids, "doc_id")
+    IndexTombs.lift(s, ids, indexDir, "doc_id")
   }
 
-  private def textTombsDir(indexDir: String): String = s"$indexDir.tombs"
-
-  /** Live tombstoned doc_ids of the index, empty frame when none.
-    * Bounded between compactions, so the probe's anti-join broadcasts. */
-  private def textTombs(s: SparkSession, indexDir: String): DataFrame =
-    if (Versioned.currentVersion(s, textTombsDir(indexDir)) > 0)
-      Versioned.read(s, textTombsDir(indexDir)).select(col("doc_id"))
-    else s.range(0).select(col("id").as("doc_id"))
+  private def textTombs(s: SparkSession, indexDir: String): IndexTombs =
+    IndexTombs(s, indexDir, "doc_id")
 
   /** DELETE documents from the index — the Lucene deleted-docs
     * discipline, chosen deliberately over eager postings rewrites: a
@@ -1685,27 +1677,22 @@ object TextAnalysis {
       indexDir: String): Unit = {
     require(Versioned.currentVersion(s, indexDir) > 0,
       s"$indexDir is not a built text index (buildTextIndex first)")
-    val ids = docIds.select(col("doc_id")).distinct()
-    val td = textTombsDir(indexDir)
-    if (Versioned.currentVersion(s, td) > 0) Versioned.append(ids, td)
-    else Versioned.commit(ids, td)
+    IndexTombs.delete(s, docIds, indexDir, "doc_id")
   }
 
   /** Maintenance for a drip-fed postings index, the text twin of
     * [[Similarity.compactIvfIndex]]: with live tombstones, ONE full
     * rewrite drops the deleted docs' postings, recomputes the exact
     * (n_docs, sum_dl) from the survivors, re-pins, and resets the
-    * tombstone table — after it, scores are exact as if rebuilt from
-    * the reduced corpus. Without tombstones it binpacks each bucket's
+    * tombstones it absorbed — after it, scores are exact as if rebuilt
+    * from the reduced corpus. Without tombstones it binpacks each bucket's
     * accumulated append files in place (stats pin carried, probes
     * stay pruned). */
   def compactTextIndex(s: SparkSession, indexDir: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 0L): Int = {
-    val tombs = textTombs(s, indexDir)
-    if (!tombs.isEmpty) {
-      val survivors = Versioned.read(s, indexDir)
-        .join(tombs, Seq("doc_id"), "left_anti")
+    IndexTombs.absorb(s, indexDir, "doc_id") { tombs =>
+      val survivors = tombs.live(Versioned.read(s, indexDir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // exact scalars from the survivors: dl rides every posting
@@ -1715,24 +1702,14 @@ object TextAnalysis {
           .agg(first(col("dl")).as("dl"))
           .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
         val sv = Versioned.commit(stats, textStatsDir(indexDir))
-        val v = Versioned.commit(survivors, indexDir,
+        Versioned.commit(survivors, indexDir,
           partitionCol = Some("bucket"), note = Some(s"stats=v$sv"),
           statsCols = Seq("doc_id"))
-        // tombstones applied — reset LAST, and only the set this
-        // rewrite ABSORBED: a concurrent delete appending between the
-        // entry read (version-pinned at plan build) and this commit
-        // survives to the next compaction instead of being wiped
-        // unapplied. A crash above leaves everything live — probes
-        // stay correct, re-compact re-applies.
-        Versioned.commit(textTombs(s, indexDir)
-          .join(tombs, Seq("doc_id"), "left_anti"),
-          textTombsDir(indexDir))
-        v
       } finally survivors.unpersist(blocking = false)
-    } else Versioned.compactSmall(s, indexDir, targetFileBytes,
+    }.getOrElse(Versioned.compactSmall(s, indexDir, targetFileBytes,
       minFileBytes, statsCols = Seq("doc_id"),
       partitionCol = Some("bucket"),
-      note = textStatsPin(s, indexDir).map(v => s"stats=v$v"))
+      note = textStatsPin(s, indexDir).map(v => s"stats=v$v")))
   }
 
   /** BM25 over the persisted index: the probe reads ONLY the query
@@ -1751,16 +1728,13 @@ object TextAnalysis {
     val stats = pinnedTextStats(s, indexDir)
       .select(col("n_docs").cast("double").as("n_docs"),
         (col("sum_dl") / col("n_docs")).as("avgdl"))
-    val tf = Versioned.read(s, indexDir)
+    // live tombstones gate membership immediately (Lucene semantics,
+    // [[deleteFromTextIndex]]); df downstream derives from the
+    // survivors, the scalar stats stay as-built until compaction
+    val tf = textTombs(s, indexDir).live(Versioned.read(s, indexDir)
       .filter(col("bucket").isin(bks: _*))
       .filter(col("term").isin(terms: _*))
-      .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-      // live tombstones gate membership immediately (Lucene
-      // semantics, [[deleteFromTextIndex]]); df downstream derives
-      // from the survivors, the scalar stats stay as-built until
-      // compaction. Bounded set — the anti-join broadcasts.
-      .join(broadcast(textTombs(s, indexDir)), Seq("doc_id"),
-        "left_anti")
+      .select(col("doc_id"), col("dl"), col("term"), col("tf")))
     bm25Score(tf, stats, k)
   }
 
@@ -1855,7 +1829,7 @@ object TextAnalysis {
     // postings files alone would RESURRECT the deleted documents in
     // the second engine — the same refusal exportSnapshot applies to
     // table tombstones, cleared the same way (compact first)
-    if (!textTombs(s, indexDir).isEmpty) throw new IllegalStateException(
+    if (textTombs(s, indexDir).nonEmpty) throw new IllegalStateException(
       s"cannot export text index at $indexDir: live tombstones would " +
         "resurrect deleted documents in a raw-file read — " +
         "compactTextIndex first")

@@ -1155,14 +1155,10 @@ object DerivedTable {
     * come from net diffs ([[Versioned.netChanges]]). Each changed
     * leg's touched dim keys are uniqueness-audited eagerly. The
     * limit-probe fold serves count, null check, and IN-tier values in
-    * one job (the refreshAgg discipline). A window whose equality
-    * tombstones key on other columns than the dim key (or, on the
-    * fact, than `key`) refuses, decided from the tombstones' schemas
-    * ([[Versioned.equalityDeleteKeys]]) before any Spark job; a null
-    * key value in a diff refuses with the same message. (The
-    * tombstone refusal is a contract kept from the per-version
-    * changelog's key-only delete events; the net diff carries full
-    * rows and would not miss those deletions.) `use` runs
+    * one job (the refreshAgg discipline). A null key value in a diff
+    * refuses. The net diff carries full rows, so a window whose
+    * equality tombstones key on other columns than the dim key (or,
+    * on the fact, than `key`) refreshes like any other. `use` runs
     * with the persisted distinct key frame, its count, and the
     * ≤ limit+1 probe rows; every persist is released after. */
   private def affectedFactKeys[T](s: SparkSession, factDir: String,
@@ -1182,9 +1178,6 @@ object DerivedTable {
             "different column, so the affected fact rows can't be " +
             s"located; key dim deletes on '$dimKeyStr' (or refresh by " +
             "rebuild)"
-          require(Versioned.equalityDeleteKeys(s, dm.dir, froms(i),
-            tos(i)).forall(ks => dm.dimKeys.forall(ks.contains)),
-            nullDimKey)
           val asFk = dm.dimKeys.zip(dm.fkCols).map { case (d, f) =>
             col(d).as(f) }
           val tdDf = Versioned.netChanges(s, dm.dir, froms(i), tos(i))
@@ -1232,8 +1225,6 @@ object DerivedTable {
         s"deletes on '$key' and filter null keys at ingest"
       val factTouched =
         if (to1 > from1) {
-          require(Versioned.equalityDeleteKeys(s, factDir, from1, to1)
-            .forall(_.contains(key)), nullFactKey)
           Versioned.netChanges(s, factDir, from1, to1).select(col(key))
         } else Versioned.read(s, factDir, Some(to1)).select(col(key))
           .limit(0)
@@ -1356,10 +1347,8 @@ object DerivedTable {
     * (`distinctCols`) is the merge-on-insert alternative whose
     * append refresh pays no recompute read.
     *
-    * Contracts refused loudly: a window holding an equality tombstone
-    * keyed off `rowKey` (decided from the tombstones' schemas,
-    * [[Versioned.equalityDeleteKeys]], before any Spark job) or a
-    * diff row whose `rowKey` is null, and a patched group whose row
+    * Contracts refused loudly: a diff row whose `rowKey` is null, and
+    * a patched group whose row
     * count would go negative (a corrupt pin/history). Exactness note:
     * integer/decimal sums are exact; float sums accumulate the usual
     * reassociation drift relative to a full recompute.
@@ -1631,16 +1620,10 @@ object DerivedTable {
       s"head v$to — the source was rolled back or replaced; rebuild " +
       "into a fresh destination")
     if (from == to) return (to, to)
-    // the refusal and its message are kept from the per-version
-    // changelog, whose key-only equality-delete events could not
-    // locate such rows; the net diff carries full deleted rows, so it
-    // stays only as the refresh's contract
     val nullRowKey = s"a change event carries a null '$rowKey' — the " +
       "source's equality tombstones key on a different column, so " +
       "the snapshot diff would miss those deletions; key deletes on " +
       s"'$rowKey' (or refresh by rebuild)"
-    require(Versioned.equalityDeleteKeys(s, srcDir, from, to)
-      .forall(_.contains(rowKey)), nullRowKey)
     // persisted: the touched-key count and the delta aggregation both
     // read it
     val diff = Versioned.netChanges(s, srcDir, from, to)

@@ -1825,27 +1825,6 @@ object Versioned {
     tombs.indices.map(i => byTomb.getOrElse(i, Nil).map(_._2).toSet)
   }
 
-  /** Key columns of every EQUALITY tombstone a commit in `(fromVersion,
-    * toVersion]` added, at `toVersion`'s names — the schema of its
-    * one-file key set comes from the footer, no Spark job. A refresh
-    * that locates changed rows by a key column refuses a window whose
-    * tombstones key on other columns. */
-  private[sources] def equalityDeleteKeys(spark: SparkSession,
-      tableDir: String, fromVersion: Int,
-      toVersion: Int): Seq[Seq[String]] = {
-    val f = fs(spark, tableDir)
-    val chain = renameChain(f, tableDir, toVersion)
-    changeLineage(spark, f, tableDir, fromVersion, toVersion).flatMap { v =>
-      val p = refInfo(f, tableDir, v)._2
-      val prev = if (p == 0) Set.empty[String]
-        else manifestLines(f, tableDir, p).toSet
-      manifestLines(f, tableDir, v)
-        .filter(l => isDeleteLine(l) && !prev(l) &&
-          !l.endsWith("/" + PosDeletesDir))
-    }.distinct
-      .map(tombOf(spark, f, tableDir, chain, _).df.columns.toSeq)
-  }
-
   /** APPEND as a new snapshot: the published version holds the previous
     * snapshot's rows plus `df` — Iceberg's append semantics, where every
     * snapshot is a consistent prefix of the ingested data and time
@@ -2358,21 +2337,6 @@ object Versioned {
       // no existing key matched: the whole batch is new rows — O(delta)
       .getOrElse(append(updates, tableDir, partitionCol,
         statsCols = statsCols, transform = transform))
-  }
-
-  /** SUPERSEDE live tombstones: drop `ids` from a sibling tombstone
-    * table (one commit), a no-op when the table is absent or none of
-    * the ids are tombstoned. Shared by the index upsert paths — after
-    * an upsert replaced an id's stored rows, its tombstone must lift
-    * or the fresh rows stay invisible. */
-  def dropTombstones(spark: SparkSession, tombsDir: String,
-      ids: DataFrame, key: String): Unit = {
-    if (currentVersion(spark, tombsDir) == 0) return
-    val tombs = read(spark, tombsDir).select(col(key))
-    if (!tombs.join(broadcast(ids.select(col(key))), Seq(key),
-        "left_semi").isEmpty)
-      commit(tombs.join(broadcast(ids.select(col(key))), Seq(key),
-        "left_anti"), tombsDir)
   }
 
   /** Row-GROUP merge by key: every current row whose `key` appears in

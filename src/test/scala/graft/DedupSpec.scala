@@ -587,4 +587,21 @@ class DedupSpec extends SparkSpec {
     assert(cand == 0) // the surviving pair partner was taken down
     spark.catalog.clearCache()
   }
+
+  test("dedupAgainstIndex on an index without a tombstone table runs " +
+      "no tombstone job") {
+    import spark.implicits._
+    val idx = "target/tmp/dedup-no-tombs-jobs"
+    clean2(idx, s"$idx.sigs")
+    val all = graft.sources.Tables.load(spark, sf, "documents")
+    Dedup.buildDedupIndexOf(all.filter($"doc_id" < 300), idx)
+    val batch = all.filter($"doc_id" >= 300 && $"doc_id" < 450)
+    Dedup.dedupAgainstIndex(spark, batch, idx).collect() // warm
+    val (jobs, found) = jobsOf(
+      Dedup.dedupAgainstIndex(spark, batch, idx).collect())
+    assert(found.nonEmpty, "fixture must plant cross-boundary dups")
+    info(s"dedupAgainstIndex jobs: $jobs")
+    // 13 when the probe anti-joined a broadcast empty frame
+    assert(jobs <= 12, s"dedupAgainstIndex ran $jobs jobs")
+  }
 }

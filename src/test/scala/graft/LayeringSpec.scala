@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level layering guard: verification gates (whole lifecycles
   * over fixture copies, one oracle row each) live in `graft.gates`,
-  * the engine never depends on them, and every view refresh reads
-  * the one net-diff path ([[graft.sources.Versioned.netChanges]]). */
+  * the engine never depends on them, every view refresh reads the one
+  * net-diff path ([[graft.sources.Versioned.netChanges]]), and the
+  * persisted indexes share one tombstone sibling
+  * ([[graft.operators.IndexTombs]]). */
 class LayeringSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -44,5 +46,24 @@ class LayeringSpec extends AnyFunSuite {
       finally s.close()
     }
     assert(offenders.isEmpty, s"engine files import graft.gates: $offenders")
+  }
+
+  test("IndexTombs alone names, reads and resets an index's tombstone " +
+      "sibling; Versioned holds no index-tombstone or key-walk helper") {
+    val ops = main.resolve("operators")
+    val s = Files.list(ops)
+    val offenders =
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(_.getFileName.toString != "IndexTombs.scala")
+        .filter(p => """\.tombs\b|(?i)tombsDir""".r
+          .findFirstIn(text(p)).nonEmpty).toList
+      finally s.close()
+    assert(offenders.isEmpty,
+      s"operator files spell the tombstone sibling: $offenders")
+    assert(text(ops.resolve("IndexTombs.scala")).contains(".tombs"))
+    val versioned = text(main.resolve("sources").resolve("Versioned.scala"))
+    for (name <- Seq("dropTombstones", "equalityDeleteKeys"))
+      assert(!versioned.contains(s"def $name"),
+        s"Versioned.scala defines $name")
   }
 }

@@ -960,9 +960,8 @@ class SimilaritySpec extends SparkSpec {
       // 10-15, tied) never reaches cell 18
       9000005L -> axisVec(m2, 2.5f, 0 -> 1f, 1 -> 1f, 2 -> 1f, 3 -> 1f,
         4 -> 1f, 5 -> 1f)).toDF("vec_id", "embedding")
-    // a NaN or an infinite component makes every cosine NaN: the cells
-    // tie (window 10-15), and NaN clears the threshold as Spark
-    // compares doubles, so the smallest window member is the witness
+    // a NaN or an infinite component makes every cosine NaN: the batch
+    // refuses and lands nothing, like a zero vector
     val nan = Seq(9000007L -> axisVec(m1, 1f, 2 -> Float.NaN),
         9000008L -> axisVec(m2, 2f, 12 -> Float.PositiveInfinity))
       .toDF("vec_id", "embedding")
@@ -990,9 +989,12 @@ class SimilaritySpec extends SparkSpec {
         .select(col("vec_id"), col("cell").cast("long")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
         Map(9000002L -> 13L, 9000004L -> 18L))
-      assert(rows(Similarity.ingestDedupVectors(spark, nan, dir)) ==
-        Seq((9000007L, false, 10L), (9000008L, false, 10L)),
-        s"quantized=$quantized")
+      val v0 = Versioned.currentVersion(spark, dir)
+      val en = intercept[IllegalArgumentException](
+        Similarity.ingestDedupVectors(spark, nan, dir))
+      assert(en.getMessage.contains(
+        "9000007, 9000008 are non-finite vectors"), en.getMessage)
+      assert(Versioned.currentVersion(spark, dir) == v0)
       assert(rows(Similarity.ingestDedupVectors(spark, sameIds, dir)) ==
         Seq((100L, false, 100L), (101L, false, 101L)),
         s"quantized=$quantized")
@@ -1002,5 +1004,94 @@ class SimilaritySpec extends SparkSpec {
       assert(e.getMessage.contains("9000001 are zero vectors"))
       assert(Versioned.currentVersion(spark, dir) == v)
     }
+  }
+
+  test("IVF write paths refuse a zero or non-finite vector by id, " +
+      "before anything is written") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.sources.Versioned
+    val bad = Seq(9000001L -> Seq.fill(64)(0f),
+      9000007L -> axisVec(16 until 40, 1f, 2 -> Float.NaN),
+      9000008L -> axisVec(40 until 64, 2f, 12 -> Float.PositiveInfinity))
+    def refused(id: Long)(write: => Unit): Unit = {
+      val e = intercept[Exception](write)
+      assert(e.getMessage.contains(
+        s"vec_id $id is a zero or non-finite vector"), e.getMessage)
+    }
+    for (quantized <- Seq(false, true)) {
+      val dir = s"target/tmp/ivf-bad-norm-$quantized"
+      axisIndex(dir, quantized)
+      val v = Versioned.currentVersion(spark, dir)
+      for ((id, vec) <- bad) {
+        val one = Seq(id -> vec).toDF("vec_id", "embedding")
+        refused(id)(Similarity.appendToIvfIndex(spark, one, dir))
+        refused(id)(Similarity.upsertIntoVectorIndex(spark, one, dir))
+      }
+      assert(Versioned.currentVersion(spark, dir) == v)
+    }
+    val dir = "target/tmp/ivf-bad-norm-build"
+    cleanIndex(dir)
+    val r = new java.util.Random(3)
+    val corpus = ((10L until 60L).map(id =>
+        id -> Seq.fill(64)(r.nextGaussian().toFloat)) :+ bad.head)
+      .toDF("vec_id", "embedding")
+      .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(
+        col("embedding")))
+    refused(bad.head._1)(Similarity.buildIvfIndexOf(spark, corpus, dir))
+    assert(Versioned.currentVersion(spark, dir) == 0)
+  }
+
+  test("IndexTombs.absorb resets only the set it absorbed: a delete " +
+      "landing during the rewrite stays tombstoned and unprobeable") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.sources.Versioned
+    import graft.operators.IndexTombs
+    val dir = "target/tmp/ivf-absorb"
+    cleanIndex(dir)
+    Similarity.buildIvfIndex(spark, sf, dir)
+    def top1(q: Long) = Similarity.ivfTopKIndexed(spark, sf, dir)
+      .filter(col("query_id") === q && col("rank") === 1).head().getLong(2)
+    def probed(id: Long) = !Similarity.ivfTopKIndexed(spark, sf, dir)
+      .filter(col("neighbor_id") === id).isEmpty
+    def stored(id: Long) = Versioned.read(spark, dir)
+      .filter(col("vec_id") === id).count()
+    def tombstoned() = Versioned.read(spark, s"$dir.tombs").collect()
+      .map(_.getLong(0)).toSet
+    val absorbed = top1(0)
+    Similarity.deleteFromVectorIndex(spark, Seq(absorbed).toDF("vec_id"),
+      dir)
+    val late = top1(1)
+    // compactIvfIndex's rewrite, with a delete landing mid-rewrite
+    IndexTombs.absorb(spark, dir, "vec_id") { tombs =>
+      val v = Versioned.commit(tombs.live(Versioned.read(spark, dir)), dir,
+        partitionCol = Some("cell"),
+        note = Versioned.notePin(spark, dir, "centroids")
+          .map(cv => s"centroids=v$cv"),
+        statsCols = Seq("vec_id"))
+      Similarity.deleteFromVectorIndex(spark, Seq(late).toDF("vec_id"), dir)
+      v
+    }
+    assert(tombstoned() == Set(late))
+    assert(stored(absorbed) == 0 && stored(late) == 1)
+    assert(!probed(absorbed) && !probed(late))
+    // the next compaction absorbs the late delete
+    Similarity.compactIvfIndex(spark, dir)
+    assert(tombstoned().isEmpty && stored(late) == 0 && !probed(late))
+  }
+
+  test("ivfTopKIndexed on an index without a tombstone table runs " +
+      "no tombstone job") {
+    val dir = "target/tmp/ivf-no-tombs-jobs"
+    cleanIndex(dir)
+    Similarity.buildIvfIndex(spark, sf, dir)
+    Similarity.ivfTopKIndexed(spark, sf, dir).collect() // warm
+    val (jobs, rows) = jobsOf(
+      Similarity.ivfTopKIndexed(spark, sf, dir).collect())
+    assert(rows.length == Similarity.NumQueries * Similarity.K)
+    info(s"ivfTopKIndexed jobs: $jobs")
+    // 11 when the probe anti-joined a broadcast empty frame
+    assert(jobs <= 10, s"ivfTopKIndexed ran $jobs jobs")
   }
 }

@@ -1170,4 +1170,30 @@ class TextEventsSpec extends SparkSpec {
     assert(out(5L) == None)
     assert(out(8L) == Some(7L))
   }
+
+  test("bm25SearchIndexed and appendToTextIndex on an index without a " +
+      "tombstone table run no tombstone job") {
+    import spark.implicits._
+    val dir = "target/tmp/text-index-no-tombs-jobs"
+    Seq(dir, s"$dir.stats").foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    TextAnalysis.buildTextIndexOf(Seq((1L, "alpha beta gamma"),
+      (2L, "beta delta"), (3L, "gamma alpha alpha")).toDF("doc_id", "text"),
+      dir)
+    val q = Seq("alpha", "beta")
+    TextAnalysis.bm25SearchIndexed(spark, dir, q, 10).collect() // warm
+    val (probeJobs, hits) = jobsOf(
+      TextAnalysis.bm25SearchIndexed(spark, dir, q, 10).collect())
+    assert(hits.length == 3)
+    TextAnalysis.appendToTextIndex(spark,
+      Seq((4L, "alpha epsilon")).toDF("doc_id", "text"), dir) // warm
+    val (appendJobs, _) = jobsOf(TextAnalysis.appendToTextIndex(spark,
+      Seq((5L, "beta zeta")).toDF("doc_id", "text"), dir))
+    info(s"bm25SearchIndexed jobs: $probeJobs, " +
+      s"appendToTextIndex jobs: $appendJobs")
+    // 9 and 6 when the probe anti-joined, and the append semi-joined,
+    // a broadcast empty frame
+    assert(probeJobs <= 8, s"bm25SearchIndexed ran $probeJobs jobs")
+    assert(appendJobs <= 5, s"appendToTextIndex ran $appendJobs jobs")
+  }
 }
