@@ -113,7 +113,7 @@ object SparkEntry {
     "t05_dedup_exact"  -> (TextAnalysis.dedupExact _),
     "t06_token_counts" -> (TextAnalysis.tokenCounts _),
     "t07_curation"     -> (TextAnalysis.curationPipeline _),
-    "t08_rolling_fp"   -> (TextAnalysis.rollingFpGate _),
+    "t08_rolling_fp"   -> (graft.gates.KernelGates.rollingFpGate _),
     "t09_stratified"   -> ((s, d) => TextAnalysis.stratifiedSample(s, d)),
     "t10_packing"      -> ((s, d) => TextAnalysis.sequencePacking(s, d)),
     "t11_top_tokens"   -> ((s, d) => TextAnalysis.topTokens(s, d)),
@@ -121,16 +121,16 @@ object SparkEntry {
     // Persisted eval-set decontamination index (t30): index the bench
     // slice once, sweep the corpus against the stored shingle rows —
     // t13's exact answer from the table the batch path only caches.
-    "t30_decontam_index" -> (TextAnalysis.decontamIndexGate _),
+    "t30_decontam_index" -> (graft.gates.IndexGates.decontamIndexGate _),
     "t20_importance_sample" -> ((s, d) => TextAnalysis.importanceSample(s, d)),
     "t22_boilerplate"  -> (TextAnalysis.boilerplateLines _),
     "t23_bm25_search"  -> ((s, d) => TextAnalysis.bm25Search(s, d)),
-    "t24_bm25_indexed" -> (TextAnalysis.bm25SearchIndexedGate _),
+    "t24_bm25_indexed" -> (graft.gates.IndexGates.bm25SearchIndexedGate _),
     "t25_split_assign" -> (TextAnalysis.splitAssign _),
     "t26_percentile_norm" -> (TextAnalysis.percentileNorm _),
     "t27_substr_dedup" -> (TextAnalysis.exactSubstrDedup _),
     "t28_nb_filter" -> (TextAnalysis.nbQualityFilter _),
-    "t29_bm25_deletes" -> (TextAnalysis.bm25DeletesGate _),
+    "t29_bm25_deletes" -> (graft.gates.IndexGates.bm25DeletesGate _),
     "t21_mixture_sample" -> (TextAnalysis.mixtureSample _),
     "t14_repetition" -> (TextAnalysis.repetitionSignals _),
     // PII redaction (emails/phones/IPv4 -> typed placeholders): the
@@ -158,14 +158,15 @@ object SparkEntry {
     // against the standing corpus without re-hashing it — build,
     // probe, O(delta) append, probe the grown index; the union of
     // found pairs equals DuckDB's exact cross-boundary answer.
-    "d10_dedup_index"     -> (Dedup.dedupIndexGate _),
+    "d10_dedup_index"     -> (graft.gates.IndexGates.dedupIndexGate _),
     // Dedup-index DELETE lifecycle (d11): takedowns tombstone, stop
     // matching immediately, compact applies, the freed id re-ingests.
-    "d11_dedup_index_deletes" -> (Dedup.dedupIndexDeletesGate _),
+    "d11_dedup_index_deletes" ->
+      (graft.gates.IndexGates.dedupIndexDeletesGate _),
     // Cross-engine dedup-index export (d12): DuckDB re-runs the
     // within-corpus near-dup probe (band join + matching-minima
     // estimate) from the exported band + signature bytes alone.
-    "d12_dedup_index_export" -> (Dedup.dedupIndexExportGate _),
+    "d12_dedup_index_export" -> (graft.gates.IndexGates.dedupIndexExportGate _),
     "d03_simhash"         -> (Dedup.simhashPairs _),
     "d04_embedding_neardup" -> (Dedup.embeddingNearDup _),
     "d05_embedding_lsh"     -> ((s, d) => Dedup.embeddingNearDupLsh(s, d)),
@@ -266,7 +267,7 @@ object SparkEntry {
     // (integer-exact above-mean bits), nibble-banded candidates,
     // hamming <= 5 pairs — the image-dedup analog.
     "m05_ahash_neardup" -> ((s, d) => Multimodal.ahashNearDup(s, d)),
-    "m06_cdc_chunks"   -> (Multimodal.cdcChunkGate _),
+    "m06_cdc_chunks"   -> (graft.gates.KernelGates.cdcChunkGate _),
     "m07_chunk_neardup" -> (Multimodal.chunkNearDupRecall _),
     // Cross-engine shared-table read: the oracle's DuckDB side scans
     // the graft table's OWN exported data files (read_parquet over
@@ -291,18 +292,18 @@ object SparkEntry {
     // (read_parquet over the postings buckets + the pinned stats
     // file) and must hash-match the in-engine probe — q47's
     // layout-portability proof extended to the index family.
-    "q50_index_export" -> (TextAnalysis.textIndexExportGate _),
+    "q50_index_export" -> (graft.gates.IndexGates.textIndexExportGate _),
     // Cross-engine VECTOR-index read: the oracle re-runs the ADC
     // probe in DuckDB from the exported IVF-PQ triple (hive-pruned
     // code cells + pinned centroids + pinned codebooks) and must
     // match the in-engine candidate set — rank-exact by the gate's
     // asserted boundary gaps, score-free by design.
     "q51_vector_index_export" ->
-      (Similarity.vectorIndexExportGate _),
+      (graft.gates.IndexGates.vectorIndexExportGate _),
     // Vector-index DELETE semantics: an appended exact twin of query
     // 0 is tombstoned and must vanish immediately and stay gone after
     // compaction; export refuses while tombstones are live.
-    "s15_ann_deletes" -> (Similarity.vectorDeletesGate _),
+    "s15_ann_deletes" -> (graft.gates.IndexGates.vectorDeletesGate _),
     // Incremental derived-table maintenance: a curated projection
     // kept current through bootstrap -> append -> one atomic mixed
     // CDC batch, each refresh paying O(changed files) via the
@@ -325,7 +326,7 @@ object SparkEntry {
     // pruned-cell cosine probe from the exported (cells, centroids)
     // pair alone — q51's probe-from-bytes proof on the s09 layout.
     "q56_int8_index_export" ->
-      (graft.operators.Similarity.int8IndexExportGate _),
+      (graft.gates.IndexGates.int8IndexExportGate _),
     // MV shapes + staleness (q57): a FILTERED aggregate view, a
     // multi-column group tuple, and the mv.max-staleness-versions
     // read refusal — all pure SQL, states equal full recomputes.
@@ -2133,8 +2134,8 @@ object SparkEntry {
                 CAST(1 AS BIGINT) AS served_after_refresh,
                 CAST(1 AS BIGINT) AS eq_refresh,
                 CAST(1 AS BIGINT) AS disabled_scan""",
-  ) ++ exportOracle ++ indexExportOracle ++ vectorIndexExportOracle ++
-    int8IndexExportOracle ++ dedupIndexExportOracle
+  ) ++ snapshotExportOracle ++ indexExportOracle ++
+    vectorIndexExportOracle ++ int8IndexExportOracle ++ dedupIndexExportOracle
 
   /** d12's oracle re-runs the dedup probe from the exported index
     * bytes alone: candidates from a band self-join over the exported
@@ -2144,21 +2145,18 @@ object SparkEntry {
     * same arithmetic as the engine's zip_with verify, exact in both
     * (integer count / 128 has no float drift). */
   private def dedupIndexExportOracle: Map[String, String] =
-    Dedup.lastDedupIndexExport.map { case (bands, sigs) =>
-      def files(fs: Seq[String]) =
-        fs.map(f => s"'$f'").mkString("[", ", ", "]")
+    exportOracle("d12_dedup_index_export") { e =>
       val perms = Dedup.NumPerms
-      "d12_dedup_index_export" ->
         s"""WITH cand AS (SELECT DISTINCT a.doc_id AS a_id,
                     b.doc_id AS b_id
-               FROM read_parquet(${files(bands)},
+               FROM read_parquet(${e.list("bands")},
                                  hive_partitioning = true) a
-               JOIN read_parquet(${files(bands)},
+               JOIN read_parquet(${e.list("bands")},
                                  hive_partitioning = true) b
                  ON a.band = b.band AND a.band_hash = b.band_hash
                 AND a.doc_id < b.doc_id),
              sg AS (SELECT doc_id, sig
-                    FROM read_parquet(${files(sigs)})),
+                    FROM read_parquet(${e.list("sigs")})),
              est AS (SELECT a_id, b_id,
                    list_sum(list_transform(range(1, $perms + 1),
                      i -> CASE WHEN sa.sig[i] = sb.sig[i]
@@ -2171,7 +2169,7 @@ object SparkEntry {
                   CAST(1 AS BIGINT) AS refused_unpinned
            FROM est WHERE est_jaccard >= 0.5
            ORDER BY a_id, b_id"""
-    }.toMap
+    }
 
   /** q47's oracle aggregates the graft table's OWN data files — the
     * literal `read_parquet([...])` list resolved by the exportGate run
@@ -2179,19 +2177,17 @@ object SparkEntry {
     * SQL, so the list is always populated for the driver; a standalone
     * dump omits the key → rows-only check). Integer sums cast to
     * BIGINT: DuckDB widens sum(INTEGER) to HUGEINT, Spark to long. */
-  private def exportOracle: Map[String, String] =
-    graft.gates.VersionedGates.lastExport.map { files =>
-      val list = files.map(f => s"'$f'").mkString("[", ", ", "]")
-      "q47_export_snapshot" ->
+  private def snapshotExportOracle: Map[String, String] =
+    exportOracle("q47_export_snapshot") { e =>
         s"""SELECT n_regionkey, count(*) AS cnt,
                   CAST(sum(n_nationkey) AS BIGINT) AS keysum,
                   sum(score) AS scoresum,
                   CAST(sum(length(name)) AS BIGINT) AS namelen,
                   CAST(1 AS BIGINT) AS refused_tombs,
                   CAST(1 AS BIGINT) AS n_files
-           FROM read_parquet($list)
+           FROM read_parquet(${e.list("data")})
            GROUP BY n_regionkey ORDER BY n_regionkey"""
-    }.toMap
+    }
 
   /** q50's oracle recomputes BM25 from the persisted index's OWN
     * exported bytes: `read_parquet` over the postings bucket files
@@ -2202,16 +2198,13 @@ object SparkEntry {
     * match against the in-engine probe proves the index bytes alone
     * carry the search. */
   private def indexExportOracle: Map[String, String] =
-    TextAnalysis.lastTextIndexExport.map { case (postings, stats) =>
-      val plist = postings.map(f => s"'$f'").mkString("[", ", ", "]")
-      val slist = stats.map(f => s"'$f'").mkString("[", ", ", "]")
-      "q50_index_export" ->
+    exportOracle("q50_index_export") { e =>
         s"""WITH tf AS (SELECT doc_id, dl, term, tf
-                 FROM read_parquet($plist)
+                 FROM read_parquet(${e.list("postings")})
                  WHERE term IN ('spark', 'vector', 'stream')),
              stats AS (SELECT CAST(n_docs AS DOUBLE) AS n_docs,
                               sum_dl / n_docs AS avgdl
-                       FROM read_parquet($slist)),
+                       FROM read_parquet(${e.list("stats")})),
              dft AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE)
                        AS df FROM tf GROUP BY 1),
              sc AS (SELECT doc_id,
@@ -2226,7 +2219,7 @@ object SparkEntry {
              SELECT doc_id, score, n_terms,
                     CAST(1 AS BIGINT) AS refused_unpinned
              FROM top ORDER BY doc_id"""
-    }.toMap
+    }
 
   /** q51's oracle re-runs the IVF-PQ ADC probe in DuckDB from the
     * index's OWN exported bytes: centroid cosines over the pinned
@@ -2239,29 +2232,24 @@ object SparkEntry {
     * crosses engines: scores are float-order sensitive, the id set
     * is rank-exact by the gate's asserted boundary gaps. */
   private def vectorIndexExportOracle: Map[String, String] =
-    graft.operators.Similarity.lastVectorIndexExport.map {
-      case (codes, cents, cbs, qUnit) =>
-        def files(fs: Seq[String]) =
-          fs.map(f => s"'$f'").mkString("[", ", ", "]")
-        val q = qUnit.map(java.lang.Double.toString)
-          .mkString("[", ", ", "]")
+    exportOracle("q51_vector_index_export") { e =>
+        val q = queryLiteral(e)
         val subDim = 64 / graft.operators.Similarity.PqM
         val nProbe = graft.operators.Similarity.NProbe
-        "q51_vector_index_export" ->
           s"""WITH q AS (SELECT CAST($q AS DOUBLE[]) AS qe),
              cscore AS (SELECT CAST(cell AS BIGINT) AS cell,
                     list_dot_product(CAST(c_emb AS DOUBLE[]), qe)
                       / c_nrm AS c_cos
-                  FROM read_parquet(${files(cents)}), q),
+                  FROM read_parquet(${e.list("centroids")}), q),
              probed AS (SELECT cell FROM cscore
                         ORDER BY c_cos DESC, cell LIMIT $nProbe),
              dp AS (SELECT j, code,
                     list_dot_product(CAST(c_sub AS DOUBLE[]),
                       list_slice(qe, j * $subDim + 1,
                                  j * $subDim + $subDim)) AS dp
-                  FROM read_parquet(${files(cbs)}), q),
+                  FROM read_parquet(${e.list("codebooks")}), q),
              cod AS (SELECT vec_id, codes
-                  FROM read_parquet(${files(codes)},
+                  FROM read_parquet(${e.list("codes")},
                                     hive_partitioning = true)
                   WHERE CAST(cell AS BIGINT) IN
                         (SELECT cell FROM probed)),
@@ -2279,32 +2267,27 @@ object SparkEntry {
                     CAST($nProbe AS BIGINT) AS n_probed,
                     CAST(1 AS BIGINT) AS refused_unpinned
              FROM top ORDER BY vec_id"""
-    }.toMap
+    }
 
   /** q56: DuckDB re-runs the int8-IVF pruned-cell cosine probe from
     * the exported (cell files, centroid files) pair alone — members
     * reconstruct as q_emb x q_scale, no codebooks, no store. */
   private def int8IndexExportOracle: Map[String, String] =
-    graft.operators.Similarity.lastInt8IndexExport.map {
-      case (cells, cents, qUnit) =>
-        def files(fs: Seq[String]) =
-          fs.map(f => s"'$f'").mkString("[", ", ", "]")
-        val q = qUnit.map(java.lang.Double.toString)
-          .mkString("[", ", ", "]")
+    exportOracle("q56_int8_index_export") { e =>
+        val q = queryLiteral(e)
         val nProbe = graft.operators.Similarity.NProbe
-        "q56_int8_index_export" ->
           s"""WITH q AS (SELECT CAST($q AS DOUBLE[]) AS qe),
              cscore AS (SELECT CAST(cell AS BIGINT) AS cell,
                     list_dot_product(CAST(c_emb AS DOUBLE[]), qe)
                       / c_nrm AS c_cos
-                  FROM read_parquet(${files(cents)}), q),
+                  FROM read_parquet(${e.list("centroids")}), q),
              probed AS (SELECT cell FROM cscore
                         ORDER BY c_cos DESC, cell LIMIT $nProbe),
              sc AS (SELECT vec_id,
                     list_dot_product(list_transform(q_emb,
                       x -> CAST(x AS DOUBLE) * q_scale), qe) / nrm
                       AS cos
-                  FROM read_parquet(${files(cells)},
+                  FROM read_parquet(${e.list("cells")},
                                     hive_partitioning = true), q
                   WHERE CAST(cell AS BIGINT) IN
                         (SELECT cell FROM probed)),
@@ -2314,5 +2297,17 @@ object SparkEntry {
                     CAST($nProbe AS BIGINT) AS n_probed,
                     CAST(1 AS BIGINT) AS no_codebook_files
              FROM top ORDER BY vec_id"""
-    }.toMap
+    }
+
+  /** Query `name`'s oracle over the files its export gate resolved in
+    * this JVM ([[graft.gates.lastExport]]); no entry when the gate has
+    * not run. */
+  private def exportOracle(name: String)(
+      sql: graft.gates.Export => String): Map[String, String] =
+    graft.gates.lastExport(name).map(e => name -> sql(e)).toMap
+
+  /** A vector gate's unit query as a DuckDB list literal, each element
+    * printed shortest-round-trip. */
+  private def queryLiteral(e: graft.gates.Export): String =
+    e.query.map(java.lang.Double.toString).mkString("[", ", ", "]")
 }

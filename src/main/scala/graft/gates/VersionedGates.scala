@@ -223,14 +223,6 @@ object VersionedGates {
         lit(currentVersion(s, t).toLong).as("final_version"))
     }
 
-  /** File list resolved by the LAST [[exportGate]] run in this JVM —
-    * SparkEntry.oracleSql embeds it literally into the q47 DuckDB
-    * `read_parquet([...])` oracle. Verify dumps oracle SQL AFTER
-    * running every query, so the list is always populated when the
-    * driver reads it; when no gate ran (a standalone oracle dump) the
-    * q47 entry is omitted and the driver records a rows-only check. */
-  @volatile private[graft] var lastExport: Option[Seq[String]] = None
-
   /** Driver-visible gate for CROSS-ENGINE SHARED-TABLE reads — q47.
     * Unlike the constant-emitting gates, BOTH sides of this oracle
     * compute over the graft table's OWN data files: the Spark side
@@ -270,7 +262,7 @@ object VersionedGates {
         (col("n_nationkey") * 1.5 + 0.25).cast("double").as("score"))
     append(extra, t)                                        // v7: +2
     val files = exportSnapshot(s, t)
-    lastExport = Some(files)
+    recordExport("q47_export_snapshot", Export(Map("data" -> files)))
     read(s, t)
       .groupBy(col("n_regionkey"))
       .agg(count(lit(1)).as("cnt"),

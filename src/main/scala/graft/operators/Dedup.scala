@@ -642,14 +642,13 @@ object Dedup {
 
   import graft.sources.Versioned
 
-  private def dedupSigsDir(indexDir: String): String = s"$indexDir.sigs"
-
   /** Every dedup-index entry point refuses duplicate (or null) batch
     * doc_ids up front: [[dedupSketchOf]] groups by doc_id, so two
     * batch rows sharing an id would silently merge into one CHIMERA
     * sketch — minima over the union of both documents' shingles,
     * matching neither — and corrupt the stored sketch permanently. */
-  private def requireOneRowPerDoc(docsDf: DataFrame, what: String): Unit = {
+  private[graft] def requireOneRowPerDoc(docsDf: DataFrame,
+      what: String): Unit = {
     val pre = docsDf.agg(count(lit(1)), count(col("doc_id")),
       count_distinct(col("doc_id"))).head()
     require(pre.getLong(0) == pre.getLong(1) &&
@@ -668,7 +667,7 @@ object Dedup {
   /** One narrow row per doc with BOTH outputs of one aggregation pass:
     * the 16 folded band keys (candidate generation) and the raw
     * 128-minima signature (verification) — same shuffle, two sketches. */
-  private def dedupSketchOf(docsDf: DataFrame): DataFrame =
+  private[graft] def dedupSketchOf(docsDf: DataFrame): DataFrame =
     docsDf.select(col("doc_id"),
       explode(call_function(GraftFunctions.ShingleHashesName,
         trim(lower(col("text"))), lit(3))).as("shingle"))
@@ -694,16 +693,12 @@ object Dedup {
     requireOneRowPerDoc(docsDf, "buildDedupIndex")
     val sketch = dedupSketchOf(docsDf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try publishSketch(sketch, indexDir, fresh = true)
+    try publishSketch(sketch, IndexPins(s, indexDir), fresh = true)
     finally sketch.unpersist(blocking = false)
   }
 
   def buildDedupIndex(s: SparkSession, d: String, indexDir: String): Unit =
     buildDedupIndexOf(docs(s, d), indexDir)
-
-  private def dedupSigsPin(s: SparkSession,
-      indexDir: String): Option[Int] =
-    Versioned.notePin(s, indexDir, "sigs")
 
   private def dedupTombs(s: SparkSession, indexDir: String): IndexTombs =
     IndexTombs(s, indexDir, "doc_id")
@@ -740,13 +735,13 @@ object Dedup {
     * themselves; re-index by rebuild (or dedup the batch first). */
   def appendToDedupIndex(s: SparkSession, newDocs: DataFrame,
       indexDir: String): Unit = {
-    require(Versioned.currentVersion(s, indexDir) > 0,
+    val pins = IndexPins(s, indexDir)
+    require(pins.built,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
     requireOneRowPerDoc(newDocs, "appendToDedupIndex")
     requireNoLiveTombs(dedupTombs(s, indexDir).clash(newDocs), indexDir,
       "appendToDedupIndex")
-    val clash = Versioned.read(s, dedupSigsDir(indexDir),
-        dedupSigsPin(s, indexDir))
+    val clash = pins.sibling("sigs")
       .join(newDocs.select(col("doc_id")).distinct(), Seq("doc_id"),
         "left_semi").limit(5).collect().map(_.getLong(0))
     require(clash.isEmpty,
@@ -755,21 +750,21 @@ object Dedup {
         "their band rows; rebuild to re-index")
     val sketch = dedupSketchOf(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try publishSketch(sketch, indexDir)
+    try publishSketch(sketch, pins)
     finally sketch.unpersist(blocking = false)
   }
 
   /** The one index-pair publish of a sketch (`fresh` commits, else
     * appends): signatures FIRST, then the band rows (one file per band
     * partition) with a note pinning that sigs version. */
-  private def publishSketch(sketch: DataFrame, indexDir: String,
+  private def publishSketch(sketch: DataFrame, pins: IndexPins,
       fresh: Boolean = false): Int = {
     val write: (DataFrame, String, Option[String], Option[String]) => Int =
       if (fresh) Versioned.commit(_, _, _, _, Seq("doc_id"))
       else Versioned.append(_, _, _, _, Seq("doc_id"))
-    val sv = write(sketch.select(col("doc_id"), col("sig")),
-      dedupSigsDir(indexDir), None, None)
-    write(bandRowsOf(sketch), indexDir, Some("band"), Some(s"sigs=v$sv"))
+    pins.publish("sigs" ->
+      (write(sketch.select(col("doc_id"), col("sig")), _, None, None)))(
+      write(bandRowsOf(sketch), pins.dir, Some("band"), _))
   }
 
   /** A batch id with a LIVE tombstone refuses up front with its own
@@ -809,14 +804,14 @@ object Dedup {
     * index side. */
   private[graft] def dedupProbeOf(s: SparkSession, sketch: DataFrame,
       indexDir: String, minJ: Double = 0.5): DataFrame = {
-    require(Versioned.currentVersion(s, indexDir) > 0,
+    val pins = IndexPins(s, indexDir)
+    require(pins.built,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
     // deleted corpus docs drop out of candidate generation HERE (the
     // tombstone anti-join broadcasts — bounded between compactions),
     // so a taken-down document never evicts a new one
     val cands = bandRowsOf(sketch).as("x")
-      .join(dedupTombs(s, indexDir).live(Versioned.read(s, indexDir))
-          .as("y"),
+      .join(dedupTombs(s, indexDir).live(pins.head).as("y"),
         col("x.band") === col("y.band") &&
           col("x.band_hash") === col("y.band_hash"))
       .select(col("y.doc_id").as("dup_of"),
@@ -825,8 +820,7 @@ object Dedup {
     // candidates' corpus signatures only — a broadcast semi-join over
     // the pinned sibling (candidate sets are batch-scale; at corpus
     // scale the sigs table's doc_id stats prune the read further)
-    val corpusSigs = Versioned.read(s, dedupSigsDir(indexDir),
-        dedupSigsPin(s, indexDir))
+    val corpusSigs = pins.sibling("sigs")
       .join(cands.select(col("dup_of").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("dup_of"), col("sig").as("a_sig"))
@@ -885,19 +879,17 @@ object Dedup {
     // probe and a sketch recompute all read one index state — an
     // unpinned read would see the survivors this call appends and
     // match them against themselves
-    val v0 = Versioned.currentVersion(s, indexDir)
-    require(v0 > 0,
+    val pins = IndexPins(s, indexDir)
+    require(pins.built,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
     val ids = newDocs.select(col("doc_id")).collect()
     val batchIds = ids.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct
     require(batchIds.length == ids.length, oneRowPerDoc("ingestDedup"))
-    val sigsPin = dedupSigsPin(s, indexDir)
     // tombstones pinned like every other probe input (every read of
     // this call sees one state); a never-tombstoned index skips them
     val tombs = dedupTombs(s, indexDir)
     requireNoLiveTombs(tombs.clash(batchIds.toSeq), indexDir, "ingestDedup")
-    val liveSigs =
-      tombs.live(Versioned.read(s, dedupSigsDir(indexDir), sigsPin))
+    val liveSigs = tombs.live(pins.sibling("sigs"))
     // under allowReingest the already-live slice skips the sketch
     // pass entirely — the standing sketch is the document's identity
     val sketch = dedupSketchOf(if (!allowReingest) newDocs
@@ -910,7 +902,7 @@ object Dedup {
       // down doc never evicts a new one, nor a doc itself (an indexed
       // batch id refuses below); batch docs sharing a bucket pair up
       val corpusCands = if (keys.isEmpty) Array.empty[Row]
-        else tombs.live(Versioned.read(s, indexDir, Some(v0))).as("y")
+        else tombs.live(pins.head).as("y")
           .join(broadcast(localFrame(s,
               "doc_id BIGINT, band INT, band_hash BIGINT", keys)).as("x"),
             col("x.band") === col("y.band") &&
@@ -942,7 +934,7 @@ object Dedup {
           s"indexed in $indexDir — the batch (or part of it) was " +
           "already ingested; retry with allowReingest = true to " +
           "treat them as kept-by-identity, or filter the overlap " +
-          s"out (an anti-join on `${dedupSigsDir(indexDir)}`)")
+          s"out (an anti-join on `${pins.siblingDir("sigs")}`)")
       // estimated Jaccard = matching minima / perms; one eviction
       // witness per dropped doc: the smallest matching dup_of (a doc
       // evicted by an evicted batch doc keeps its DIRECT witness — the
@@ -959,7 +951,7 @@ object Dedup {
       if (keys.map(_.getLong(0)).distinct.length > dropOf.size)
         publishSketch(sketch.join(broadcast(localFrame(s, "doc_id BIGINT",
             dropOf.keys.map(Row(_)).toSeq)), Seq("doc_id"), "left_anti"),
-          indexDir)
+          pins)
       // the verdict is a local frame of the collected ids: collecting
       // it runs no job and reads no file, so it cannot drift
       localFrame(s, "doc_id BIGINT, kept BOOLEAN NOT NULL, dup_of BIGINT",
@@ -985,78 +977,24 @@ object Dedup {
   def compactDedupIndex(s: SparkSession, indexDir: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 0L): Int = {
-    require(Versioned.currentVersion(s, indexDir) > 0,
+    val pins = IndexPins(s, indexDir)
+    require(pins.built,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
     IndexTombs.absorb(s, indexDir, "doc_id") { tombs =>
-      // sigs publish FIRST, the band commit pins them — the
-      // index-pair order every write path here follows
-      val sv = Versioned.commit(
-        tombs.live(Versioned.read(s, dedupSigsDir(indexDir),
-          dedupSigsPin(s, indexDir))),
-        dedupSigsDir(indexDir), statsCols = Seq("doc_id"))
-      Versioned.commit(tombs.live(Versioned.read(s, indexDir)),
-        indexDir, partitionCol = Some("band"),
-        note = Some(s"sigs=v$sv"), statsCols = Seq("doc_id"))
+      pins.publish("sigs" -> (Versioned.commit(
+        tombs.live(pins.sibling("sigs")), _, statsCols = Seq("doc_id"))))(
+        note => Versioned.commit(tombs.live(pins.head), indexDir,
+          partitionCol = Some("band"), note = note,
+          statsCols = Seq("doc_id")))
     }
-    // sigs compact FIRST, band compact re-pins the compacted version
-    // (same rows, fresh files) — the publish order every index-pair
-    // maintenance here follows
-    val sv = Versioned.compactSmall(s, dedupSigsDir(indexDir),
-      targetFileBytes, minFileBytes, statsCols = Seq("doc_id"))
-    val bv = Versioned.compactSmall(s, indexDir, targetFileBytes,
-      minFileBytes, statsCols = Seq("doc_id"),
-      partitionCol = Some("band"), note = Some(s"sigs=v$sv"))
-    // the band table can legitimately have nothing to pack (< 2 small
-    // files) while the sigs sibling DID compact — compactSmall then
-    // returns without committing, leaving the head note pinned to the
-    // superseded sigs version; a later sigs expire/vacuum would strand
-    // that pin and break every probe. A note-only commit keeps the
-    // pin tracking the sigs head whenever the band compact no-oped.
-    if (!dedupSigsPin(s, indexDir).contains(sv))
-      Versioned.commitNote(s, indexDir, s"sigs=v$sv")
-    else bv
-  }
-
-  /** Driver-visible gate (d10): incremental corpus dedup end to end —
-    * index docs < 300, dedup the 300-449 batch against it, APPEND that
-    * batch (O(delta)), then dedup the 450+ batch against the grown
-    * index. The union of both phases' (dup_of, new_id) pairs equals
-    * the EXACT cross-boundary 3-gram-Jaccard >= 0.5 pairs, which
-    * DuckDB restates independently — LSH recall at the fixture's gap
-    * and the signature estimate's ≥9σ margin make the approximate
-    * pipeline reproduce the exact answer, so the check is a full hash
-    * match, not a recall bound. */
-  def dedupIndexGate(s: SparkSession, d: String): DataFrame = {
-    val all = docs(s, d)
-    // BOTH artifacts pool once per JVM: the probes are read-only, so
-    // no private copy is needed — the base serves phase 1 (and d11's
-    // clone), the grown index serves phase 2, and the O(delta) append
-    // itself runs inside the grown builder, its bytes pinned by the
-    // phase-2 probe answer (identical artifact → identical pairs).
-    // The PROBES stay live: sketching the batch and the band/sig
-    // joins are the operator cost this gate measures.
-    val base = graft.sources.FixturePool.readOnly(
-      s"dedup-base300:$d", reclaimAtExit = true)(
-      dir => buildDedupIndexOf(all.filter(col("doc_id") < 300), dir))
-    val grown = graft.sources.FixturePool.readOnly(
-      s"dedup-grown450:$d", reclaimAtExit = true) { dir =>
-      // the base resolves ABOVE (no computeIfAbsent re-entry); this
-      // builder pays a directory copy plus the O(delta) append
-      graft.sources.FixturePool.copyInto(base, dir)
-      appendToDedupIndex(s,
-        all.filter(col("doc_id") >= 300 && col("doc_id") < 450), dir)
-    }
-    val p1 = dedupAgainstIndex(s,
-      all.filter(col("doc_id") >= 300 && col("doc_id") < 450), base)
-      .select(col("dup_of"), col("new_id"))
-    val p2 = dedupAgainstIndex(s, all.filter(col("doc_id") >= 450),
-      grown)
-      .select(col("dup_of"), col("new_id"))
-    val pairs = p1.unionByName(p2)
-      .orderBy(col("dup_of"), col("new_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    import s.implicits._
-    pairs.toDF("dup_of", "new_id")
+    // sigs compact first, the band compact re-pins the compacted
+    // version (same rows, fresh files); a band table with nothing to
+    // pack gets a note-only re-pin ([[IndexPins.publish]])
+    IndexPins(s, indexDir).publish("sigs" -> (Versioned.compactSmall(s, _,
+      targetFileBytes, minFileBytes, statsCols = Seq("doc_id"))))(
+      note => Versioned.compactSmall(s, indexDir, targetFileBytes,
+        minFileBytes, statsCols = Seq("doc_id"),
+        partitionCol = Some("band"), note = note))
   }
 
   /** Within-index near-dup pairs from the STORED sketches alone — the
@@ -1069,9 +1007,10 @@ object Dedup {
     * re-sketched. Returns (a_id < b_id, est_jaccard >= minJ). */
   def selfPairsInIndex(s: SparkSession, indexDir: String,
       minJ: Double = 0.5): DataFrame = {
-    require(Versioned.currentVersion(s, indexDir) > 0,
+    val pins = IndexPins(s, indexDir)
+    require(pins.built,
       s"$indexDir is not a built dedup index (buildDedupIndex first)")
-    val live = dedupTombs(s, indexDir).live(Versioned.read(s, indexDir))
+    val live = dedupTombs(s, indexDir).live(pins.head)
     val cands = live.as("x").join(live.as("y"),
         col("x.band") === col("y.band") &&
           col("x.band_hash") === col("y.band_hash") &&
@@ -1080,8 +1019,7 @@ object Dedup {
       .distinct()
     val ids = cands.select(col("a_id").as("doc_id"))
       .unionByName(cands.select(col("b_id").as("doc_id"))).distinct()
-    val candSigs = Versioned.read(s, dedupSigsDir(indexDir),
-        dedupSigsPin(s, indexDir))
+    val candSigs = pins.sibling("sigs")
       .join(ids, Seq("doc_id"), "left_semi")
     cands
       .join(candSigs.select(col("doc_id").as("a_id"),
@@ -1109,161 +1047,9 @@ object Dedup {
     * first). Returns (bands files, sigs files). */
   def exportDedupIndex(s: SparkSession,
       indexDir: String): (Seq[String], Seq[String]) = {
-    val pin = dedupSigsPin(s, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"cannot export dedup index at $indexDir: head commit " +
-          "carries no sigs=v pin — not a built dedup index " +
-          "(buildDedupIndex first)"))
-    val sigsHead = Versioned.currentVersion(s, dedupSigsDir(indexDir))
-    if (pin > sigsHead) throw new IllegalStateException(
-      s"cannot export dedup index at $indexDir: bands pin sigs=v$pin " +
-        s"but the sigs table head is v$sigsHead — torn maintenance; " +
-        "rebuild or re-append to restore the pair")
-    if (dedupTombs(s, indexDir).nonEmpty)
-      throw new IllegalStateException(
-        s"cannot export dedup index at $indexDir: live tombstones " +
-          "would resurrect taken-down documents in a raw-file read " +
-          "— compactDedupIndex first")
-    val bands = Versioned.exportSnapshot(s, indexDir,
-      hivePartitions = true)
-    val sigs = Versioned.exportSnapshot(s, dedupSigsDir(indexDir),
-      Some(pin))
+    val (bands, Seq(sigs)) = IndexPins(s, indexDir).export(IndexPins.Layout(
+      "dedup", Seq("sigs"), "doc_id", build = "buildDedupIndex",
+      compact = "compactDedupIndex", rows = "documents"))
     (bands, sigs)
-  }
-
-  /** File lists resolved by the LAST [[dedupIndexExportGate]] run in
-    * this JVM — SparkEntry.oracleSql embeds them literally into the
-    * d12 DuckDB oracle (the q50/q51 discipline: Verify runs every
-    * query before dumping oracle SQL, so a driver pass always sees
-    * them populated; a standalone dump omits the entry → rows-only). */
-  @volatile private[graft] var lastDedupIndexExport
-      : Option[(Seq[String], Seq[String])] = None
-
-  /** Driver-visible gate (d12): CROSS-ENGINE dedup-index reads. The
-    * Spark side lists the index's within-corpus near-dup pairs
-    * ([[selfPairsInIndex]] — stored sketches only); the DuckDB side
-    * re-runs the SAME probe from the exported bytes alone:
-    * `read_parquet` over the band partition files for candidates and
-    * the pinned signature files for the matching-minima estimate. A
-    * hash match proves the dedup-index layout is engine-portable.
-    * The index spans a build plus an O(delta) append (two versions,
-    * not a single-commit special case) and a takedown applied by
-    * compaction — so the export carries maintenance history, and the
-    * deleted document is absent from BOTH engines' answers. Work dir
-    * intentionally outlives the gate — the driver's DuckDB pass
-    * reads the exported files after this JVM exits. */
-  def dedupIndexExportGate(s: SparkSession, d: String): DataFrame = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-dedup-export-gate")
-    val idx = work.resolve("lsh").toString
-    val all = docs(s, d)
-    // the WHOLE lifecycle artifact pools once per JVM (build +
-    // O(delta) append + a takedown applied by compaction — all
-    // deterministic over the fixture); each run exports a private
-    // copy, so the exported bytes still carry the full maintenance
-    // history while the sweep pays the lifecycle exactly once. (The
-    // base is rebuilt inside this builder rather than nested through
-    // the d10/d11 pool key — computeIfAbsent must not re-enter.)
-    val base = graft.sources.FixturePool.readOnly(
-      s"dedup-base300:$d", reclaimAtExit = true)(
-      dir => buildDedupIndexOf(all.filter(col("doc_id") < 300), dir))
-    graft.sources.FixturePool.cloneTo(s"dedup-d12:$d", idx,
-      reclaimAtExit = true) { dir =>
-      // composed from the resolved base pool (a directory copy, not
-      // a rebuild); the export reads the WORK clone, so the pool
-      // itself reclaims at exit
-      graft.sources.FixturePool.copyInto(base, dir)
-      appendToDedupIndex(s,
-        all.filter(col("doc_id") >= 300 && col("doc_id") < 420), dir)
-      deleteFromDedupIndex(s,
-        all.filter(col("doc_id") === 2L).select(col("doc_id")), dir)
-      compactDedupIndex(s, dir)
-    }
-    // refusal legs on a scratch pair (same contract, gate-scale
-    // fixture): a live takedown blocks the export until compaction
-    // applies it, and bands-shaped bytes without a sigs pin refuse
-    import s.implicits._
-    val tiny = work.resolve("tiny").toString
-    buildDedupIndexOf(Seq((1L, "a b c d e f"), (2L, "g h i j k l"))
-      .toDF("doc_id", "text"), tiny)
-    deleteFromDedupIndex(s, Seq(1L).toDF("doc_id"), tiny)
-    val refusedTombs =
-      scala.util.Try(exportDedupIndex(s, tiny)).isFailure
-    val bogus = work.resolve("bogus").toString
-    Versioned.commit(Versioned.read(s, idx).limit(2), bogus)
-    val refusedUnpinned =
-      scala.util.Try(exportDedupIndex(s, bogus)).isFailure
-    lastDedupIndexExport = Some(exportDedupIndex(s, idx))
-    selfPairsInIndex(s, idx)
-      .withColumn("refused_tombs", lit(if (refusedTombs) 1L else 0L))
-      .withColumn("refused_unpinned",
-        lit(if (refusedUnpinned) 1L else 0L))
-      .orderBy(col("a_id"), col("b_id"))
-  }
-
-  /** Driver-visible gate (d11): the dedup index's DELETE lifecycle —
-    * the takedown path a training pipeline hits routinely. Index
-    * docs < 300, probe the [300, 420) batch, tombstone every EVEN
-    * corpus id ([[deleteFromDedupIndex]]): the deleted docs stop
-    * matching IMMEDIATELY (probe anti-join), a tombstoned id refuses
-    * re-ingest while live, [[compactDedupIndex]] applies the set
-    * (post-compact probe unchanged), and the freed id re-ingests
-    * cleanly — its pairs come back. Every count reduces to the exact
-    * cross-boundary Jaccard pairs filtered by parity, which DuckDB
-    * restates independently (the d10 precedent: LSH recall plus the
-    * ≥9σ signature margin make the approximate pipeline reproduce
-    * the exact answer). */
-  def dedupIndexDeletesGate(s: SparkSession, d: String): DataFrame = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-dedup-del-gate")
-    try {
-      val idx = work.resolve("lsh").toString
-      val all = docs(s, d)
-      // the batch SKETCH persists across the gate's FOUR probes —
-      // the batch never changes between them (deletes/compacts touch
-      // the INDEX side), so shingling + minhashing it once and
-      // re-joining against each evolving index state is both the
-      // honest operator cost and four sketch passes cheaper
-      val batch = all.filter(col("doc_id") >= 300 && col("doc_id") < 420)
-      requireOneRowPerDoc(batch, "dedupIndexDeletesGate")
-      val sketch = dedupSketchOf(batch)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // same pooled base as d10 — this gate deletes/compacts its copy
-      graft.sources.FixturePool.cloneTo(s"dedup-base300:$d", idx,
-        reclaimAtExit = true)(
-        dir => buildDedupIndexOf(all.filter(col("doc_id") < 300), dir))
-      def probePairs(): Seq[(Long, Long)] =
-        dedupProbeOf(s, sketch, idx)
-          .select(col("dup_of"), col("new_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      val before = probePairs()
-      deleteFromDedupIndex(s,
-        all.filter(col("doc_id") < 300 && col("doc_id") % 2 === 0)
-          .select(col("doc_id")), idx)
-      val afterDelete = probePairs()
-      val goneTomb = afterDelete.forall(_._1 % 2 == 1)
-      // doc 0 is even, hence tombstoned — its re-ingest must refuse
-      // while the tombstone is live (band/sig rows still on disk)
-      val refused = scala.util.Try(appendToDedupIndex(s,
-        all.filter(col("doc_id") === 0L), idx)).isFailure
-      compactDedupIndex(s, idx)
-      val afterCompact = probePairs()
-      // post-compact the id is free again: re-ingest the smallest
-      // even doc that matched before (vacuously ok when none did —
-      // DuckDB's NULL-filtered restatement agrees by SQL semantics)
-      val reId = before.map(_._1).filter(_ % 2 == 0).sorted.headOption
-      val reOk = reId.forall(id => scala.util.Try(appendToDedupIndex(s,
-        all.filter(col("doc_id") === id), idx)).isSuccess)
-      val afterReingest = probePairs()
-      sketch.unpersist(blocking = false)
-      import s.implicits._
-      Seq((before.size.toLong, if (goneTomb) 1L else 0L,
-          if (refused) 1L else 0L, afterDelete.size.toLong,
-          afterCompact.size.toLong, if (reOk) 1L else 0L,
-          afterReingest.size.toLong))
-        .toDF("pairs_before", "gone_tombstoned", "refused_tombstoned",
-          "pairs_after_delete", "pairs_after_compact", "reingest_ok",
-          "pairs_after_reingest")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
   }
 }

@@ -230,65 +230,6 @@ object Multimodal {
         col("col.len").cast("long").as("chunk_len"))
       .orderBy(col("doc_id"), col("chunk_idx"))
 
-  /** The m06 gate: the CDC contract over the fixture payloads,
-    * reduced to engine-independent constants (chunk hashes are
-    * engine-local math the oracle cannot restate):
-    *  - `lossless_ok`: every payload's chunk lengths sum back to its
-    *    byte length — chunking is a partition, nothing dropped;
-    *  - `bounds_ok`: no chunk exceeds avg*4 and only a payload's LAST
-    *    chunk may undershoot avg/4 — the FastCDC size guards;
-    *  - `resync_ok`: prefixing each payload with 7 salt bytes keeps
-    *    (on average) at least half of its distinct chunk hashes —
-    *    the content-defined property itself (a fixed-size chunker
-    *    would share ~none);
-    *  - `chunks_per_doc_ok`: the average chunk count per payload
-    *    lands in a sane band for the 32-byte target. */
-  def cdcChunkGate(s: SparkSession, d: String): DataFrame = {
-    val avgBits = 5
-    val minS = 1 << (avgBits - 2)
-    val maxS = 1 << (avgBits + 2)
-    def chunksOf(c: Column) = call_function(
-      graft.functions.GraftFunctions.CdcChunksName, c, lit(avgBits))
-    val base = withPayload(s, d).select(col("doc_id"), col("payload"))
-    val ch = base
-      .select(col("doc_id"), length(col("payload")).as("n_bytes"),
-        posexplode(chunksOf(col("payload"))))
-      .select(col("doc_id"), col("n_bytes"), col("pos"),
-        col("col.hash").as("h"), col("col.len").as("l"))
-    val perDoc = ch.groupBy(col("doc_id")).agg(
-      first(col("n_bytes")).as("n_bytes"),
-      sum(col("l")).as("sum_len"),
-      max(col("l")).as("max_len"),
-      max_by(col("l"), col("pos")).as("last_len"),
-      sum(when(col("l") < minS, 1L).otherwise(0L)).as("n_small"),
-      count(lit(1)).as("n_chunks"))
-    val docFacts = perDoc.agg(
-      count(lit(1)).as("n_docs"),
-      min((col("sum_len") === col("n_bytes")).cast("long"))
-        .as("lossless_ok"),
-      min((col("max_len") <= maxS &&
-        col("n_small") - when(col("last_len") < minS, 1L).otherwise(0L)
-          === 0L).cast("long")).as("bounds_ok"),
-      ((avg(col("n_chunks")) >= 2) && (avg(col("n_chunks")) <= 64))
-        .cast("long").as("chunks_per_doc_ok"))
-    // prefix-shift resync: distinct-hash survival fraction per doc
-    val salt = lit("SALT*7_".getBytes("UTF-8"))
-    val origH = ch.select(col("doc_id"), col("h")).distinct()
-    val shiftH = base
-      .select(col("doc_id"),
-        explode(chunksOf(concat(salt, col("payload")))).as("c"))
-      .select(col("doc_id"), col("c.hash").as("h")).distinct()
-    val resync = origH
-      .join(shiftH.withColumn("hit", lit(1L)), Seq("doc_id", "h"), "left")
-      .groupBy(col("doc_id"))
-      .agg((sum(coalesce(col("hit"), lit(0L))).cast("double") /
-        count(lit(1))).as("frac"))
-      .agg((avg(col("frac")) >= 0.5).cast("long").as("resync_ok"))
-    docFacts.join(resync)
-      .select(col("n_docs"), col("lossless_ok"), col("bounds_ok"),
-        col("chunks_per_doc_ok"), col("resync_ok"))
-  }
-
   /** Chunk-overlap near-duplicate pairs: payloads sharing a high
     * fraction of distinct chunk hashes (containment = shared /
     * min(|A|, |B|)) — binary near-dup dedup through the CDC index,

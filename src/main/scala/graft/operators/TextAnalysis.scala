@@ -129,38 +129,6 @@ object TextAnalysis {
           .as("rolling_fp"))
       .orderBy(col("doc_id"))
 
-  /** The t08 gate, oracle-tightened (the d07/s04 move): the winnowed
-    * Karp-Rabin fingerprint is fully deterministic, so instead of a
-    * rows-only check the gate reduces the expression to facts an
-    * engine-independent oracle can state literally without pretending
-    * DuckDB could recompute a 2^64-wrapping byte-window hash:
-    *  - `golden_fp`: the fingerprint of a fixed sentence — the exact
-    *    value RollingHashSpec's brute-force reference pins, stated as
-    *    a literal in the oracle;
-    *  - `nation_fp_agg`: sum over the SF-INDEPENDENT `nation` table
-    *    of each normalized name's fingerprint mod 1e9+7 — pins the
-    *    algorithm over real table data at any scale factor, as one
-    *    literal constant;
-    *  - `n_docs` / `n_distinct_fp_ok`: every document fingerprints
-    *    (count restated by the oracle from the parquet itself) and
-    *    the corpus doesn't collapse to one value. */
-  def rollingFpGate(s: SparkSession, d: String): DataFrame = {
-    def fp(c: Column): Column = call_function("graft_rolling_minhash",
-      regexp_replace(trim(lower(c)), "\\s+", " "))
-    val docs = rollingFingerprints(s, d)
-      .agg(count(lit(1)).as("n_docs"),
-        (countDistinct(col("rolling_fp")) > 1).cast("long")
-          .as("n_distinct_fp_ok"))
-    val nat = Tables.load(s, d, "nation")
-      .agg(sum(pmod(fp(col("n_name")), lit(1000000007L)))
-        .as("nation_fp_agg"))
-    docs.join(nat)
-      .withColumn("golden_fp",
-        fp(lit("the quick brown fox jumps over the lazy dog")))
-      .select(col("n_docs"), col("n_distinct_fp_ok"),
-        col("nation_fp_agg"), col("golden_fp"))
-  }
-
   /** BPE-style subword-ish token counting: the GPT-2 pre-tokenizer shape
     * (letter runs | digits | non-space symbols), counted with a single
     * regexp pass — the cheap proxy for "LLM token count" used to budget
@@ -639,29 +607,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_bench_hits"),
         max(col("common")).as("max_common"))
       .orderBy(col("doc_id"))
-  }
-
-  /** Driver-visible gate (t30): the persisted decontamination index
-    * reproduces [[decontaminate]]'s exact answer — index the fixture's
-    * `% 50 == 0` bench slice once, sweep the rest of the corpus
-    * against the stored rows, same (doc_id, n_bench_hits, max_common)
-    * contract, same DuckDB oracle as t13. */
-  def decontamIndexGate(s: SparkSession, d: String): DataFrame = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-decontam-index-gate")
-    try {
-      val idx = work.resolve("bench").toString
-      val all = docsPlain(s, d)
-      buildDecontamIndexOf(
-        all.filter(col("doc_id") % 50 === 0)
-          .withColumnRenamed("doc_id", "bench_id"), idx)
-      val rows = decontaminateAgainstIndex(s,
-        all.filter(col("doc_id") % 50 =!= 0), idx)
-        .collect() // fixture-scale; materialized before the cleanup
-      import s.implicits._
-      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-        .toDF("doc_id", "n_bench_hits", "max_common")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work.toFile)
   }
 
   // —— PII redaction (curation scrubbing stage) ——
@@ -1504,8 +1449,6 @@ object TextAnalysis {
 
   val TextIndexBuckets = 8
 
-  private def textStatsDir(indexDir: String): String = s"$indexDir.stats"
-
   private def termBucket(c: Column): Column =
     pmod(hash(c), lit(TextIndexBuckets))
 
@@ -1529,13 +1472,14 @@ object TextAnalysis {
       nTokens(col("text")).cast("double").as("dl"))
     val stats = base.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).as("sum_dl"))
-    val sv = Versioned.commit(stats, textStatsDir(indexDir))
     // doc_id stats on every postings file: a later upsertGroups
     // re-index prunes its touched-file probe to the files whose id
     // range intersects the batch — O(candidate files), not O(index)
-    Versioned.commit(postingsOf(docsDf), indexDir,
-      partitionCol = Some("bucket"), note = Some(s"stats=v$sv"),
-      statsCols = Seq("doc_id"))
+    IndexPins(s, indexDir).publish(
+        "stats" -> (Versioned.commit(stats, _)))(note =>
+      Versioned.commit(postingsOf(docsDf), indexDir,
+        partitionCol = Some("bucket"), note = note,
+        statsCols = Seq("doc_id")))
   }
 
   /** O(delta) maintenance: append the new documents' postings (only
@@ -1545,7 +1489,8 @@ object TextAnalysis {
     * postings append re-pins, keeping the pair consistent for probes. */
   def appendToTextIndex(s: SparkSession, newDocs: DataFrame,
       indexDir: String): Unit = {
-    require(Versioned.currentVersion(s, indexDir) > 0,
+    val pins = IndexPins(s, indexDir)
+    require(pins.built,
       s"$indexDir is not a built text index (buildTextIndex first)")
     // a LIVE-tombstoned id must not re-append: the tombstone kills by
     // doc_id, old and new postings alike, so the fresh document would
@@ -1565,22 +1510,14 @@ object TextAnalysis {
     // phantom documents of a previous append that committed stats but
     // crashed before its postings published (probes stay consistent
     // through the pin; the orphan stats version is simply skipped).
-    val merged = pinnedTextStats(s, indexDir)
+    val merged = pins.sibling("stats")
       .unionAll(delta)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    val sv = Versioned.commit(merged, textStatsDir(indexDir))
-    Versioned.append(postingsOf(newDocs), indexDir,
-      partitionCol = Some("bucket"), note = Some(s"stats=v$sv"),
-      statsCols = Seq("doc_id"))
+    pins.publish("stats" -> (Versioned.commit(merged, _)))(note =>
+      Versioned.append(postingsOf(newDocs), indexDir,
+        partitionCol = Some("bucket"), note = note,
+        statsCols = Seq("doc_id")))
   }
-
-  private def textStatsPin(s: SparkSession,
-      indexDir: String): Option[Int] =
-    Versioned.notePin(s, indexDir, "stats")
-
-  private def pinnedTextStats(s: SparkSession,
-      indexDir: String): DataFrame =
-    Versioned.read(s, textStatsDir(indexDir), textStatsPin(s, indexDir))
 
   /** RE-INDEX documents in place — the text twin of
     * [[Similarity.upsertIntoVectorIndex]], closing the same loop: a
@@ -1612,7 +1549,8 @@ object TextAnalysis {
     * file per bucket per batch — batch re-index work accordingly. */
   def upsertIntoTextIndex(s: SparkSession, docs: DataFrame,
       indexDir: String): Unit = {
-    require(Versioned.currentVersion(s, indexDir) > 0,
+    val pins = IndexPins(s, indexDir)
+    require(pins.built,
       s"$indexDir is not a built text index (buildTextIndex first)")
     val pre = docs.agg(count(lit(1)), count(col("doc_id")),
       count_distinct(col("doc_id")), count(col("text"))).head()
@@ -1631,7 +1569,7 @@ object TextAnalysis {
     val ids = docs.select(col("doc_id")).distinct()
     // the ids' CURRENT contribution to the scalars (dl rides every
     // posting row; absent ids contribute nothing)
-    val oldAgg = Versioned.read(s, indexDir)
+    val oldAgg = pins.head
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n"),
@@ -1640,16 +1578,16 @@ object TextAnalysis {
       .select(nTokens(col("text")).cast("double").as("dl"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0.0)).as("sdl")).head()
-    val pinned = pinnedTextStats(s, indexDir).head()
+    val pinned = pins.sibling("stats").head()
     import s.implicits._
     val stats = Seq((
       pinned.getLong(0) - oldAgg.getLong(0) + freshAgg.getLong(0),
       pinned.getDouble(1) - oldAgg.getDouble(1) + freshAgg.getDouble(1)
     )).toDF("n_docs", "sum_dl")
-    val sv = Versioned.commit(stats, textStatsDir(indexDir))
-    Versioned.upsertGroups(s, indexDir, postingsOf(docs), "doc_id",
-      partitionCol = Some("bucket"), note = Some(s"stats=v$sv"),
-      statsCols = Seq("doc_id"))
+    pins.publish("stats" -> (Versioned.commit(stats, _)))(note =>
+      Versioned.upsertGroups(s, indexDir, postingsOf(docs), "doc_id",
+        partitionCol = Some("bucket"), note = note,
+        statsCols = Seq("doc_id")))
     IndexTombs.lift(s, ids, indexDir, "doc_id")
   }
 
@@ -1692,7 +1630,8 @@ object TextAnalysis {
       targetFileBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 0L): Int = {
     IndexTombs.absorb(s, indexDir, "doc_id") { tombs =>
-      val survivors = tombs.live(Versioned.read(s, indexDir))
+      val pins = IndexPins(s, indexDir)
+      val survivors = tombs.live(pins.head)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // exact scalars from the survivors: dl rides every posting
@@ -1701,15 +1640,14 @@ object TextAnalysis {
         val stats = survivors.groupBy(col("doc_id"))
           .agg(first(col("dl")).as("dl"))
           .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-        val sv = Versioned.commit(stats, textStatsDir(indexDir))
-        Versioned.commit(survivors, indexDir,
-          partitionCol = Some("bucket"), note = Some(s"stats=v$sv"),
-          statsCols = Seq("doc_id"))
+        pins.publish("stats" -> (Versioned.commit(stats, _)))(note =>
+          Versioned.commit(survivors, indexDir,
+            partitionCol = Some("bucket"), note = note,
+            statsCols = Seq("doc_id")))
       } finally survivors.unpersist(blocking = false)
     }.getOrElse(Versioned.compactSmall(s, indexDir, targetFileBytes,
       minFileBytes, statsCols = Seq("doc_id"),
-      partitionCol = Some("bucket"),
-      note = textStatsPin(s, indexDir).map(v => s"stats=v$v")))
+      partitionCol = Some("bucket")))
   }
 
   /** BM25 over the persisted index: the probe reads ONLY the query
@@ -1725,71 +1663,18 @@ object TextAnalysis {
     import s.implicits._
     val bks = terms.toDF("term").select(termBucket(col("term")))
       .distinct().collect().map(_.getInt(0))
-    val stats = pinnedTextStats(s, indexDir)
+    val pins = IndexPins(s, indexDir)
+    val stats = pins.sibling("stats")
       .select(col("n_docs").cast("double").as("n_docs"),
         (col("sum_dl") / col("n_docs")).as("avgdl"))
     // live tombstones gate membership immediately (Lucene semantics,
     // [[deleteFromTextIndex]]); df downstream derives from the
     // survivors, the scalar stats stay as-built until compaction
-    val tf = textTombs(s, indexDir).live(Versioned.read(s, indexDir)
+    val tf = textTombs(s, indexDir).live(pins.head
       .filter(col("bucket").isin(bks: _*))
       .filter(col("term").isin(terms: _*))
       .select(col("doc_id"), col("dl"), col("term"), col("tf")))
     bm25Score(tf, stats, k)
-  }
-
-  /** The full-corpus text index, pooled: t24 probes the original
-    * read-only; t29 ([[bm25DeletesGate]]) clones it for its
-    * delete/compact lifecycle — one build per session either way. */
-  private def cachedTextIndex(s: SparkSession, d: String): String =
-    graft.sources.FixturePool.readOnly(s"text-index-full:$d",
-      reclaimAtExit = true)(
-      dir => buildTextIndex(s, d, dir))
-
-  /** The t24 gate: the indexed probe must produce t23's EXACT result —
-    * same oracle SQL, full hash match — so the index layout is proven
-    * lossless, not just plausible. Build amortized per process (the
-    * index's point); the timed bench run measures the probe. */
-  def bm25SearchIndexedGate(s: SparkSession, d: String): DataFrame =
-    bm25SearchIndexed(s, cachedTextIndex(s, d),
-      Seq("spark", "vector", "stream"), 20)
-
-  /** The t29 gate: DELETE semantics of the persisted index, both
-    * phases oracle-stated. Phase a (tombstoned): membership excludes
-    * the deleted docs immediately and term df derives from the
-    * survivors, while the corpus scalars stay AS-BUILT — the Lucene
-    * staleness window, which the oracle restates exactly (full-corpus
-    * n_docs/avgdl over survivor postings). Phase b (compacted): the
-    * rewrite applied the tombstones and recomputed the scalars, so
-    * scores equal a from-scratch build over the reduced corpus. The
-    * flag columns pin the export contract around the window: raw
-    * files with live tombstones refuse (they would resurrect the
-    * deleted docs in a second engine), post-compact export succeeds. */
-  def bm25DeletesGate(s: SparkSession, d: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft-t29-index")
-    val idx = work.resolve("postings").toString
-    // t24's pooled full-corpus index, cloned: this gate tombstones
-    // and compacts its private copy
-    graft.sources.FixturePool.cloneTo(s"text-index-full:$d", idx,
-      reclaimAtExit = true)(
-      dir => buildTextIndex(s, d, dir))
-    val terms = Seq("spark", "vector", "stream")
-    deleteFromTextIndex(s,
-      docsPlain(s, d).filter(col("doc_id") % 10 === 3)
-        .select(col("doc_id")), idx)
-    val refused = scala.util.Try(exportTextIndex(s, idx)).isFailure
-    val pre = bm25SearchIndexed(s, idx, terms, 20)
-      .withColumn("phase", lit("a_tombstoned"))
-    compactTextIndex(s, idx)
-    val exportOk = scala.util.Try(exportTextIndex(s, idx)).isSuccess
-    val post = bm25SearchIndexed(s, idx, terms, 20)
-      .withColumn("phase", lit("b_compacted"))
-    pre.unionByName(post)
-      .withColumn("export_refused_live", lit(if (refused) 1L else 0L))
-      .withColumn("export_ok_after", lit(if (exportOk) 1L else 0L))
-      .select(col("phase"), col("doc_id"), col("score"), col("n_terms"),
-        col("export_refused_live"), col("export_ok_after"))
-      .orderBy(col("phase"), col("doc_id"))
   }
 
   // —— Cross-engine export of the persisted index (q50) ——
@@ -1815,80 +1700,10 @@ object TextAnalysis {
     * silently mis-scores every document rather than failing. */
   def exportTextIndex(s: SparkSession,
       indexDir: String): (Seq[String], Seq[String]) = {
-    val pin = textStatsPin(s, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"cannot export text index at $indexDir: head commit carries " +
-          "no stats=v pin — not a built text index (buildTextIndex " +
-          "first)"))
-    val statsHead = Versioned.currentVersion(s, textStatsDir(indexDir))
-    if (pin > statsHead) throw new IllegalStateException(
-      s"cannot export text index at $indexDir: postings pin stats=v$pin " +
-        s"but the stats table head is v$statsHead — torn maintenance; " +
-        "rebuild or re-append to restore the pair")
-    // live tombstones are the index's merge-on-read state: raw
-    // postings files alone would RESURRECT the deleted documents in
-    // the second engine — the same refusal exportSnapshot applies to
-    // table tombstones, cleared the same way (compact first)
-    if (textTombs(s, indexDir).nonEmpty) throw new IllegalStateException(
-      s"cannot export text index at $indexDir: live tombstones would " +
-        "resurrect deleted documents in a raw-file read — " +
-        "compactTextIndex first")
-    val postings = Versioned.exportSnapshot(s, indexDir,
-      hivePartitions = true)
-    val stats = Versioned.exportSnapshot(s, textStatsDir(indexDir),
-      Some(pin))
+    val (postings, Seq(stats)) = IndexPins(s, indexDir).export(
+      IndexPins.Layout("text", Seq("stats"), "doc_id",
+        build = "buildTextIndex", compact = "compactTextIndex",
+        rows = "documents"))
     (postings, stats)
-  }
-
-  /** File lists resolved by the LAST [[textIndexExportGate]] run in
-    * this JVM — SparkEntry.oracleSql embeds them literally into the
-    * q50 DuckDB oracle (same discipline as VersionedGates.lastExport/q47:
-    * Verify dumps oracle SQL after running every query, so a driver
-    * pass always sees them populated; a standalone dump omits the
-    * entry → rows-only check). */
-  @volatile private[graft] var lastTextIndexExport
-      : Option[(Seq[String], Seq[String])] = None
-
-  /** Driver-visible gate for CROSS-ENGINE INDEX reads — q50. The
-    * Spark side probes the persisted index ([[bm25SearchIndexed]]);
-    * the DuckDB side recomputes BM25 from scratch over the index's
-    * OWN exported bytes — `read_parquet` over the postings buckets
-    * and the pinned stats file — so a hash match proves the INDEX
-    * layout (not just the data-table layout, q47) is engine-portable:
-    * two engines, one set of index bytes. The index is built over a
-    * corpus split (build + one O(delta) append) so the export spans
-    * two postings versions and the MERGED algebraic stats, not a
-    * single-commit special case; an unpinned postings table must
-    * refuse. Work dir intentionally outlives the gate — the driver's
-    * DuckDB pass reads the exported files after this JVM exits. */
-  def textIndexExportGate(s: SparkSession, d: String): DataFrame = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-index-export-gate")
-    val corpus = docsPlain(s, d).select(col("doc_id"), col("text"))
-    // the build + O(delta) append artifact pools once per JVM — the
-    // export must span TWO postings versions and the MERGED algebraic
-    // stats, which the pooled builder preserves exactly; export
-    // resolution and the probe are read-only (pool dirs outlive the
-    // JVM like the work dir, so the driver's DuckDB pass still reads
-    // the exported files)
-    val idx = graft.sources.FixturePool.readOnly(s"text-q50:$d") {
-      dir =>
-        val delta = pmod(hash(col("doc_id")), lit(5)) === 0
-        buildTextIndexOf(corpus.filter(!delta), dir)
-        appendToTextIndex(s, corpus.filter(delta), dir)
-    }
-    // the refusal IS part of the contract: postings-shaped bytes
-    // without a stats pin must not export as an index
-    val bogus = work.resolve("bogus").toString
-    Versioned.commit(
-      corpus.limit(2).select(col("doc_id"), lit(1.0d).as("dl"),
-        lit("x").as("term"), lit(1.0d).as("tf"),
-        lit(0).as("bucket")),
-      bogus, partitionCol = Some("bucket"))
-    val refused =
-      scala.util.Try(exportTextIndex(s, bogus)).isFailure
-    lastTextIndexExport = Some(exportTextIndex(s, idx))
-    bm25SearchIndexed(s, idx, Seq("spark", "vector", "stream"), 20)
-      .withColumn("refused_unpinned", lit(if (refused) 1L else 0L))
   }
 }

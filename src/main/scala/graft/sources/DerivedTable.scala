@@ -800,7 +800,7 @@ object DerivedTable {
       // spec persistence): one atomic publish carries data, pin, and
       // spec — no window where the table exists without its identity
       Versioned.commit(full, dstDir,
-        note = Some(s"src=v$to"), statsCols = Seq(key),
+        note = Some(Versioned.pinNote(Seq("src" -> to))), statsCols = Seq(key),
         transform = layoutOf(partitionCol),
         props = Some(bootstrapProps).filter(_.nonEmpty))
       return (0, to)
@@ -816,7 +816,7 @@ object DerivedTable {
     val diff = Versioned.netChanges(s, srcDir, from, to)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val note = s"src=v$to"
+      val note = Versioned.pinNote(Seq("src" -> to))
       // the pin advances with every refresh: an empty diff
       // (metadata-only commits, churn that cancels) lands a note-only
       // commit, so the next refresh starts past this window
@@ -1026,8 +1026,7 @@ object DerivedTable {
       require(v > 0, s"no committed dim version at ${dm.dir}")
       v
     }
-    val note = (s"src=v$to1" +: pinKeys.zip(tos).map {
-      case (k, v) => s"$k=v$v" }).mkString(";")
+    val note = Versioned.pinNote(("src" -> to1) +: pinKeys.zip(tos))
     if (Versioned.currentVersion(s, dstDir) == 0)
       return (to1, tos, note, None)
     val from1 = pinnedSrcVersion(s, dstDir)
@@ -1609,7 +1608,8 @@ object DerivedTable {
           s"null '${groupCols.mkString(", ")}' group — filter or " +
             "coalesce the group columns before aggregating")
         Versioned.commit(full, dstDir,
-          note = Some(s"src=v$to"), statsCols = Seq(groupCols.head),
+          note = Some(Versioned.pinNote(Seq("src" -> to))),
+          statsCols = Seq(groupCols.head),
           transform = layoutOf(partitionCol),
           props = Some(bootstrapProps).filter(_.nonEmpty))
       } finally full.unpersist(blocking = false)
@@ -1643,7 +1643,7 @@ object DerivedTable {
         // an empty diff (metadata-only source commits, churn that
         // cancels): advance the pin with a note-only commit — a stuck
         // pin makes every later refresh re-cover this dead range
-        Versioned.commitNote(s, dstDir, s"src=v$to")
+        Versioned.commitNote(s, dstDir, Versioned.pinNote(Seq("src" -> to)))
         return (from, to)
       }
       // the affected-group recompute read (extrema/sketches): touched
@@ -1663,7 +1663,8 @@ object DerivedTable {
       aggDeltaApply(s, dstDir, groupCols, values, extrema, avgs,
         distinctCols,
         prepared(diff).withColumnRenamed(Versioned.ChangeWeightCol, "__w"),
-        recomputeAt, s"src=v$to", s"src=v$from", s"src=v$to",
+        recomputeAt, Versioned.pinNote(Seq("src" -> to)), s"src=v$from",
+        s"src=v$to",
         partitionCol, exactDistinctCols, kllCols)
     } finally diff.unpersist(blocking = false)
     (from, to)

@@ -418,13 +418,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
         // actually lives, so it is always the refresh truth and never
         // a stale copy
         if (!props.contains(graft.sources.DerivedTable.MvKindProp)) props
-        else props ++ Versioned.commitNotes(spark, dir)
-          .get(Versioned.currentVersion(spark, dir))
-          .flatMap(_.split(";").collectFirst {
-            case p if p.trim.startsWith("src=v") =>
-              "graft.mv.pinned_source_version" ->
-                p.trim.stripPrefix("src=v")
-          }) ++
+        else props ++ Versioned.notePin(spark, dir, "src").map(v =>
+            "graft.mv.pinned_source_version" -> v.toString) ++
           // the full freshness contract beside the pin, read LIVE
           // (SHOW TBLPROPERTIES is the MV refresh-state surface —
           // Iceberg's MV spec exposes the same trio). Per-LEG keys

@@ -1178,22 +1178,43 @@ object Versioned {
     }.toMap
   }
 
-  /** The `key=vN` pin in the HEAD commit's note, fragment-wise (split
-    * ';') — the ONE parser for every note-pin consumer (`src` for
-    * materialized views, `sigs`/`stats`/`centroids`/`codebooks` for
-    * the index pairs), so a pin that shares its note with other
-    * fragments (a TBLPROPERTIES commit carries pins forward) parses
-    * identically everywhere. */
-  def notePin(spark: SparkSession, tableDir: String,
-      key: String): Option[Int] = {
+  /** The pin fragments (`key=vN`, split ';') of a commit note, in note
+    * order — the ONE parser of the note grammar, beside its one
+    * formatter [[pinNote]]. Keys are identifiers (`src`, `dim2`,
+    * `sigs`, …) matched whole, never by substring, so a pin that
+    * shares its note with other fragments (a TBLPROPERTIES commit
+    * carries pins forward) parses identically everywhere. Consumers:
+    * [[notePin]] (materialized views' `src`/`dim*` cursors), the
+    * maintenance commits' carried pins, and
+    * [[graft.operators.IndexPins]] for the persisted indexes'
+    * `sigs`/`stats`/`centroids`/`codebooks` siblings. */
+  def notePins(note: String): Seq[(String, Int)] =
+    note.split(";").toSeq.map(_.trim).flatMap {
+      case PinFragment(k, n) => Try(k -> n.toInt).toOption
+      case _ => None
+    }
+
+  private val PinFragment = "([A-Za-z_][A-Za-z0-9_]*)=v([0-9]+)".r
+
+  /** The note pinning `pins` — the one formatter of [[notePins]]'s
+    * grammar. */
+  def pinNote(pins: Seq[(String, Int)]): String =
+    pins.map { case (k, v) => s"$k=v$v" }.mkString(";")
+
+  /** The head version of `tableDir` and the pins its commit note
+    * records — one listing plus ONE marker read (0 and no pins for a
+    * missing table). */
+  def headPins(spark: SparkSession,
+      tableDir: String): (Int, Seq[(String, Int)]) = {
     val v = currentVersion(spark, tableDir)
-    if (v == 0) return None
-    commitNotes(spark, tableDir).get(v).toSeq
-      .flatMap(_.split(";")).map(_.trim)
-      .collectFirst { case n if n.startsWith(s"$key=v") =>
-        Try(n.stripPrefix(s"$key=v").toInt).toOption }
-      .flatten
+    if (v == 0) (0, Nil)
+    else (v, notePins(readNote(fs(spark, tableDir), tableDir, v)))
   }
+
+  /** The `key=vN` pin in the HEAD commit's note ([[notePins]]). */
+  def notePin(spark: SparkSession, tableDir: String,
+      key: String): Option[Int] =
+    headPins(spark, tableDir)._2.collectFirst { case (`key`, v) => v }
 
   private def readNote(f: FileSystem, tableDir: String, v: Int): String = {
     val in = f.open(new Path(tableDir, s"$MarkerPrefix$v"))
@@ -4584,13 +4605,9 @@ object Versioned {
     * grammar, never by substring. */
   private def carriedPins(spark: SparkSession, tableDir: String,
       cur: Int, callerNote: String): Seq[String] = {
-    val pins = commitNotes(spark, tableDir).get(cur).toSeq
-      .flatMap(_.split(";")).map(_.trim)
-      .filter(_.matches("[A-Za-z_]+=v[0-9]+"))
-    val callerPinKeys = callerNote.split(";").map(_.trim)
-      .filter(_.matches("[A-Za-z_]+=v[0-9]+"))
-      .map(_.takeWhile(_ != '=')).toSet
-    pins.filterNot(p => callerPinKeys.contains(p.takeWhile(_ != '=')))
+    val callerPinKeys = notePins(callerNote).map(_._1).toSet
+    Seq(pinNote(notePins(readNote(fs(spark, tableDir), tableDir, cur))
+      .filterNot(p => callerPinKeys.contains(p._1)))).filter(_.nonEmpty)
   }
 
   /** `note` with version `cur`'s carried pins prepended — the form

@@ -80,7 +80,7 @@ class CdcChunksSpec extends SparkSpec {
       .agg(max(col("chunk_idx")).as("mx"), count(lit(1)).as("n"))
       .filter(col("mx") =!= col("n") - 1).count()
     assert(bad == 0)
-    val row = Multimodal.cdcChunkGate(spark, sf).head()
+    val row = graft.gates.KernelGates.cdcChunkGate(spark, sf).head()
     assert(row.getLong(0) == docs)
     assert((1 to 4).forall(i => row.getLong(i) == 1L), row.toString)
   }

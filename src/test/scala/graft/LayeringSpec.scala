@@ -11,12 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * the engine never depends on them, every view refresh reads the one
   * net-diff path ([[graft.sources.Versioned.netChanges]]), and the
   * persisted indexes share one tombstone sibling
-  * ([[graft.operators.IndexTombs]]). */
+  * ([[graft.operators.IndexTombs]]) and one pinned-sibling protocol
+  * ([[graft.operators.IndexPins]]). */
 class LayeringSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
   private def text(p: Path): String =
     new String(Files.readAllBytes(p), "UTF-8")
+
+  private def scalaFiles(dir: Path): List[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
 
   test("Versioned and DerivedTable hold no gate and no fixture loader") {
     for (name <- Seq("Versioned.scala", "DerivedTable.scala")) {
@@ -65,5 +72,23 @@ class LayeringSpec extends AnyFunSuite {
     for (name <- Seq("dropTombstones", "equalityDeleteKeys"))
       assert(!versioned.contains(s"def $name"),
         s"Versioned.scala defines $name")
+  }
+
+  test("operators define no gate and no export hand-off") {
+    val offenders = scalaFiles(main.resolve("operators")).filter(p =>
+      """def \w*Gate\b|last\w*Export""".r.findFirstIn(text(p)).nonEmpty)
+    assert(offenders.isEmpty, s"operator files hold gates: $offenders")
+  }
+
+  test("IndexPins alone reads an index's note pins, builds a pin note " +
+      "or names a pinned sibling") {
+    val pinned = """notePin|commitNotes|headPins|\w=v(\$|"\s*\+)|""" +
+      """\$\{?\w+\}?\.(sigs|stats|centroids|codebooks)\b|""" +
+      """(?i)(sigs|stats|centroids|codebooks)Dir\b"""
+    val offenders = (scalaFiles(main.resolve("operators")) ++
+        scalaFiles(main.resolve("gates")))
+      .filter(_.getFileName.toString != "IndexPins.scala")
+      .filter(p => pinned.r.findFirstIn(text(p)).nonEmpty)
+    assert(offenders.isEmpty, s"files bypass IndexPins: $offenders")
   }
 }

@@ -775,13 +775,14 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.sources.Versioned
-    val g = Similarity.int8IndexExportGate(spark, sf).collect()
+    val g = graft.gates.IndexGates.int8IndexExportGate(spark, sf).collect()
     assert(g.length == 20)
     assert(g.forall(_.getLong(2) == 1L),
       "an int8-IVF export must carry NO codebook files")
     assert(g.forall(_.getLong(1) == Similarity.NProbe.toLong))
-    assert(Similarity.lastInt8IndexExport.isDefined)
-    val (cells, cents, qUnit) = Similarity.lastInt8IndexExport.get
+    val export = graft.gates.lastExport("q56_int8_index_export").get
+    val Seq(cells, cents) = Seq("cells", "centroids").map(export.files)
+    val qUnit = export.query
     assert(cells.nonEmpty && cents.nonEmpty && qUnit.length == 64)
     assert(cells.forall(_.contains("cell=")),
       "cell files must export hive-partitioned for engine pruning")
@@ -806,14 +807,16 @@ class SimilaritySpec extends SparkSpec {
     import graft.sources.Versioned
     // the q51 gate end-to-end: build + O(delta) append, export, probe
     // in-engine, and flag the unpinned-table refusal
-    val out = Similarity.vectorIndexExportGate(spark, sf)
+    val out = graft.gates.IndexGates.vectorIndexExportGate(spark, sf)
       .orderBy(col("vec_id")).collect()
     assert(out.length == 20)
     assert(out.forall(_.getLong(1) == Similarity.NProbe.toLong))
     assert(out.forall(_.getLong(2) == 1L),
       "code-shaped bytes without quantization pins must refuse export")
-    val (codeFiles, centFiles, cbFiles, qUnit) =
-      Similarity.lastVectorIndexExport.get
+    val export = graft.gates.lastExport("q51_vector_index_export").get
+    val Seq(codeFiles, centFiles, cbFiles) =
+      Seq("codes", "centroids", "codebooks").map(export.files)
+    val qUnit = export.query
     // export spans BOTH the build and the append code commits, every
     // file under a cell= dir; centroid/codebook files resolve to the
     // pinned generation
@@ -881,6 +884,21 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.ivfPqTopKIndexed(spark, sf, dir).collect().nonEmpty)
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.isEmpty, s"probe left cached RDDs $added")
+  }
+
+  test("index builds leave no cached block behind") {
+    val ivf = "target/tmp/ivf-build-nocache"
+    val pq = "target/tmp/ivfpq-build-nocache"
+    Seq(ivf, s"$ivf.centroids", pq, s"$pq.centroids", s"$pq.codebooks")
+      .foreach(p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    def cached = spark.sparkContext.getPersistentRDDs.keySet
+    val before = cached
+    Similarity.buildIvfIndex(spark, sf, ivf)
+    assert(cached == before, s"IVF build left cached RDDs ${cached -- before}")
+    Similarity.buildIvfPqIndex(spark, sf, pq)
+    assert(cached == before,
+      s"IVF-PQ build left cached RDDs ${cached -- before}")
   }
 
   private def cleanIndex(dir: String): Unit =

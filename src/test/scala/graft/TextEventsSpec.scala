@@ -460,7 +460,7 @@ class TextEventsSpec extends SparkSpec {
     import graft.sources.Versioned
     val idx = "target/tmp/decontam-index"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
-    val gate = TextAnalysis.decontamIndexGate(spark, sf).collect()
+    val gate = graft.gates.IndexGates.decontamIndexGate(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val batch = TextAnalysis.decontaminate(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
